@@ -70,7 +70,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // pinned like Verify/TimeOne/SparkSpec: Tables.events' NTZ cast
+      // pinned like Verify/SparkSpec: Tables.events' NTZ cast
       // is session-zone dependent, and bench numbers must measure the
       // same row sets the correctness gate verifies
       .config("spark.sql.session.timeZone", "UTC")
@@ -83,13 +83,15 @@ object Bench {
     // timed pass below measures the engine, not janino/C2. Set
     // SPARK_GRAFT_WARMUP_DIR=none to skip.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
+    // a warm-up miss must not kill the bench, but it is never silent:
+    // each one is logged and listed as `warmup_failed` in the summary,
+    // since a skipped warm-up puts codegen/JIT cost into that entry's
+    // timed number
+    var warmupFailed = List.empty[String]
     if (warmupDir != "none" && warmupDir != sfDir) {
-      // gate the warm-up dir too, LOUDLY but non-fatally: the per-query
-      // try/catch below swallows exceptions by design (a warm-up miss
-      // must not kill the bench), which would otherwise silently skip
-      // codegen/JIT warm-up on a drifted dir and skew every timed
-      // number with compilation cost — the diagnostic names the drift
-      // so a slow round is attributable.
+      // gate the warm-up dir too, LOUDLY but non-fatally: a drifted dir
+      // fails (nearly) every warm-up entry, and the diagnostic names
+      // the drift so a slow round is attributable.
       val warmDrift = SchemaGate.diffs(spark, warmupDir)
       if (warmDrift.nonEmpty) {
         System.err.println(s"[bench] WARNING: warm-up dir $warmupDir has schema " +
@@ -97,8 +99,12 @@ object Bench {
           "timed numbers include codegen/JIT cost:")
         warmDrift.foreach(l => System.err.println(s"[bench]   $l"))
       }
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmupDir).count() catch { case _: Throwable => () }
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        try fn(spark, warmupDir).count() catch {
+          case e: Throwable =>
+            warmupFailed ::= name
+            System.err.println(s"[bench] warm-up $name FAILED: ${e.getMessage}")
+        }
       }
     }
     var failed = List.empty[String]
@@ -187,7 +193,9 @@ object Bench {
     // stays comparable with pre-attribution rounds (where the builds
     // were hidden inside the first consumer's number)
     val total = artifacts.map(_._2).sum + results.map(_._2).sum
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def strList(xs: Seq[String]): String = xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = strList(failed)
+    val warmupFailedJson = strList(warmupFailed)
 
     def loadJson(l: Seq[Double]): String =
       l.map(fmt(_, 2)).mkString("[", ",", "]")
@@ -208,7 +216,7 @@ object Bench {
       throughputJson("streaming_mm", "phash_ingest", streamingMm)
     // Complete full-precision record → file (survives regardless of log tail).
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","trials":2,$loadField,"artifacts":${qJson(artifacts, 3)},"queries":${qJson(results, 3)},"runs":$runsJson,$streamingField,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","trials":2,$loadField,"artifacts":${qJson(artifacts, 3)},"queries":${qJson(results, 3)},"runs":$runsJson,$streamingField,"failed":$failedJson,"warmup_failed":$warmupFailedJson,"sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get(outPath)
     java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
 
@@ -225,7 +233,7 @@ object Bench {
     // Summary LAST so the driver's tail window always contains it whole;
     // carries the headline value plus the top-12 slowest for a quick read.
     val slowest = results.sortBy(-_._2).take(12)
-    println(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","n":${results.size},"trials":2,"queries":${qJson(slowest, 3)},"failed":$failedJson,"sf":"$sfDir","full":"${fullPath.toAbsolutePath}"}""")
+    println(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","n":${results.size},"trials":2,"queries":${qJson(slowest, 3)},"failed":$failedJson,"warmup_failed":$warmupFailedJson,"sf":"$sfDir","full":"${fullPath.toAbsolutePath}"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -21,9 +21,8 @@ import org.apache.spark.sql.SparkSession
   * never be reclaimed; tried in r7 and reverted as inert). A long-lived
   * service that churns through sessions must therefore either release a
   * session's artifacts EXPLICITLY via [[invalidate]] when it retires
-  * the session (what [[ScalingProbe]] does per timed pass), or use the
-  * uncached DataFrame faces. The one-shot verify/bench driver needs
-  * neither.
+  * the session, or use the uncached DataFrame faces. The one-shot
+  * Verify/Bench run needs neither.
   *
   * The per-key builder runs EXACTLY ONCE even under concurrent first
   * access: the map stores cheap lazy cells, so two racing callers may

@@ -96,6 +96,13 @@ object Analytics {
     * nation are broadcast (tiny by schema); customer/supplier co-filter
     * on nationkey. One fact shuffle, dims broadcast — the plan to want
     * at 100 TB.
+    *
+    * Revenue is exact (the q9 pattern): `round(sum(double), 2)` depends
+    * on summation order when the sum lands on a half-cent (a generated
+    * corpus hit 242948.765 as 242948.76499999998, rounded down), so
+    * each term is computed in integer 1e-4 dollars (cents × percent),
+    * summed as BIGINT and rounded half-up to cents in integer
+    * arithmetic before the one division.
     */
   def q5LocalSupplier(spark: SparkSession, dir: String): DataFrame = {
     val region = broadcast(Tables.region(spark, dir))
@@ -112,20 +119,25 @@ object Analytics {
       .join(nation, col("s_nationkey") === col("n_nationkey"))
       .join(region, col("n_regionkey") === col("r_regionkey"))
       .groupBy("n_name")
-      .agg(round(sum(revenue), 2).as("revenue"))
+      .agg(sum(round(col("l_extendedprice") * 100).cast("long")
+        * (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("rev_e4"))
+      .select(col("n_name"), (expr("(rev_e4 + 50) div 100") / 100.0).as("revenue"))
       .orderBy(col("revenue").desc, col("n_name"))
   }
 
   val q5Sql: String =
-    """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      |FROM customer
+    """SELECT n_name, CAST((sum(rev_e4) + 50) // 100 AS DOUBLE) / 100.0 AS revenue
+      |FROM (
+      | SELECT n_name, CAST(round(l_extendedprice * 100) AS BIGINT)
+      |   * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS rev_e4
+      | FROM customer
       | JOIN orders   ON c_custkey = o_custkey
       | JOIN lineitem ON o_orderkey = l_orderkey
       | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
       | JOIN nation   ON s_nationkey = n_nationkey
       | JOIN region   ON n_regionkey = r_regionkey
-      |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+      | WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |   AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00') t
       |GROUP BY n_name
       |ORDER BY revenue DESC, n_name""".stripMargin
 

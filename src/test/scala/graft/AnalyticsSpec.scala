@@ -665,6 +665,29 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     assert(grid.map(_.getLong(2)).sum === ev.count())
   }
 
+  test("q5 revenue rounds half-up exactly where the double sum sits below a half-cent") {
+    import spark.implicits._
+    // one lineitem per nation: 10.10 × 0.95 = 9.595 and 10.50 × 0.93 =
+    // 9.765 exactly, but the double products are 9.594999999999999 and
+    // 9.764999999999999, so round(sum(double), 2) gives 9.59 / 9.76
+    val dir = java.nio.file.Files.createTempDirectory("q5-boundary").toString
+    def put(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.parquet(s"$dir/$name.parquet")
+    val day = java.sql.Timestamp.valueOf("1996-06-01 00:00:00")
+    put("region", Seq((0, "ASIA")).toDF("r_regionkey", "r_name"))
+    put("nation", Seq((0, "NATION_0", 0), (1, "NATION_1", 0))
+      .toDF("n_nationkey", "n_name", "n_regionkey"))
+    put("customer", Seq((1L, 0), (2L, 1)).toDF("c_custkey", "c_nationkey"))
+    put("supplier", Seq((1L, 0), (2L, 1)).toDF("s_suppkey", "s_nationkey"))
+    put("orders", Seq((1L, 1L, day), (2L, 2L, day))
+      .toDF("o_orderkey", "o_custkey", "o_orderdate"))
+    put("lineitem", Seq((1L, 1L, 10.10, 0.05), (2L, 2L, 10.50, 0.07))
+      .toDF("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"))
+    val got = Analytics.q5LocalSupplier(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got === Map("NATION_0" -> 9.60, "NATION_1" -> 9.77))
+  }
+
   test("q12 priority accounting equals independent per-class counts") {
     val out = Analytics.q12LinePriority(spark, sfDir).collect()
     val joined = Tables.orders(spark, sfDir)

@@ -560,7 +560,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sorted-neighborhood equals windowed brute force and is range-count-independent") {
-    val docs = Tables.documents(spark, sfDir)
+    import spark.implicits._
+    // two blank docs: their only shingle is '', which the hashed
+    // shingles drop and the verify re-attaches
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .union(Seq((900001L, ""), (900002L, "   ")).toDF("doc_id", "text"))
     def norm(s: String) = s.trim.toLowerCase.replaceAll("\\s+", " ")
     def shingleSet(s: String): Set[String] = {
       val t = norm(s).split(" ", -1)
@@ -583,6 +587,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       if jac >= 0.5
     } yield (math.min(sorted(i)._2, sorted(j)._2),
              math.max(sorted(i)._2, sorted(j)._2), j - i, jac)).toSet
+    // the face verifies over hashed shingle arrays; the expectation
+    // above uses the string shingle sets, so this certifies the hashed
+    // verify against the plain metric
     val got = Dedup.sortedNeighborhood(docs).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
         r.getAs[Int]("gap"), r.getAs[Double]("jaccard"))).toSet
@@ -611,13 +618,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         s"extra=${(viaPrefix -- viaPostings).take(3)}")
     // the efficiency claim: prefix postings expand strictly fewer
     // candidate pairs than the full rare postings on this corpus
-    val sh = docs.select(col("doc_id"),
-      explode(Dedup.shingles(col("text"))).as("s"))
-      .filter(col("s") =!= "")
-      .select(col("doc_id"), xxhash64(col("s")).as("sh"))
-    val hot = sh.groupBy("sh").count().filter(col("count") > 100).select("sh")
-    val rare = sh.join(hot, Seq("sh"), "left_anti")
-    val prefixCand = Dedup.ppjoinCandidates(rare, 0.5).count()
+    val prefixCand = Dedup.ppjoinCandidates(Dedup.postingsOf(docs), 0.5).count()
     val fullCand = Dedup.ngramCandidates(docs).count()
     assert(prefixCand <= fullCand,
       s"prefix candidates ($prefixCand) exceed posting candidates ($fullCand)")
@@ -626,10 +627,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("r17 shared-substrate dir faces are row-identical to their generic plans") {
-    // the r17 optimizations reroute the memoized dir faces (shared
-    // pair-scores explosion for jaccard+containment, postings-derived
-    // ppjoin doc arrays, hashed-array SN verify) — each must stay
-    // row-identical to the independent generic-docs plan it replaced
+    // each dir face memoizes the same build its docs face runs, over
+    // memoized substrates (the shared pair scores serve jaccard and
+    // containment unpruned; the docs faces build their own) — so each
+    // must equal its docs face over the dir's documents table
     val docs = Tables.documents(spark, sfDir)
     val jacDir = Dedup.ngramJaccard(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

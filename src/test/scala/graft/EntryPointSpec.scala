@@ -1,0 +1,34 @@
+package graft
+
+import java.lang.reflect.Modifier
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The program's command-line surface is two mains, `Bench` and
+  * `Verify`. Probes and timings go through specs, `graft.Bench` and the
+  * perfbench harness, not through one-off mains.
+  */
+class EntryPointSpec extends AnyFunSuite {
+
+  test("Bench and Verify are the only objects under src/main/scala that define main") {
+    val classes = Paths.get(Verify.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val loader = getClass.getClassLoader
+    // an object's main surfaces as a static forwarder on its mirror
+    // class (the class file without a `$`)
+    val mains = Files.walk(classes).iterator.asScala
+      .map(classes.relativize(_).toString)
+      .filter(f => f.endsWith(".class") && !f.contains("$"))
+      .map(_.stripSuffix(".class").replace(java.io.File.separatorChar, '.'))
+      .filter { name =>
+        Class.forName(name, false, loader).getDeclaredMethods.exists { m =>
+          m.getName == "main" && Modifier.isStatic(m.getModifiers) &&
+            m.getParameterTypes.sameElements(Seq(classOf[Array[String]]))
+        }
+      }
+      .toSet
+    assert(mains === Set("graft.Bench", "graft.Verify"))
+  }
+}
