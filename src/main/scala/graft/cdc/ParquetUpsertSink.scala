@@ -1,8 +1,13 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed upsert sink over bucket-partitioned parquet — the engine's
   * stand-in for the reference's Delta table
@@ -15,7 +20,10 @@ import org.apache.spark.sql.functions._
   *   statePath/
   *     _manifest.v<e>          committed bucket map for epoch e
   *                             (one "bucket<TAB>relative/dir" line per
-  *                             live bucket; highest e wins)
+  *                             live bucket, a "#schema<TAB>json" line and,
+  *                             for a stream writer, a
+  *                             "#txn<TAB>queryId<TAB>batchId" line;
+  *                             highest e wins)
   *     v<e>-<attempt>/bucket=<b>/part-N.parquet  immutable data written
   *                                               at epoch e
   * }}}
@@ -38,11 +46,18 @@ import org.apache.spark.sql.functions._
   * no "resurrection" of deleted rows from a directory that an
   * overwrite-based scheme would have skipped rewriting.
   *
-  * Scale design is unchanged: a micro-batch touches only the buckets
-  * its keys hash into (`b = pmod(hash(key), numBuckets)`); the merge
-  * reads ONLY those buckets' committed directories and writes
-  * ~batch-sized data. A 100 TB state with a 1 GB batch rewrites the
-  * dirty buckets, not the world.
+  * Write cost: a micro-batch touches only the buckets its keys hash
+  * into (`b = pmod(hash(key), numBuckets)`), and the merge reads and
+  * REWRITES each of those buckets whole. The rewrite follows the number
+  * of dirty buckets, not the batch size: with 64 buckets over 20k keys
+  * a 10-key batch rewrites about 2.9k rows (~0.3% of them changed),
+  * and a 100-key batch already dirties about 45 of the 64 buckets.
+  *
+  * Read path: the committed manifest is the only file index. Every read
+  * (and the merge's base read) scans the bucket directories a manifest
+  * references through [[ManifestFileIndex]], which lists each directory
+  * once on the driver — no Spark listing job, however many buckets the
+  * read spans.
   */
 class ParquetUpsertSink(spark: SparkSession, statePath: String,
                         keyCols: Seq[String], numBuckets: Int = 64,
@@ -58,6 +73,12 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
 
   private val ManifestRe = """_manifest\.v(\d+)""".r
 
+  /** Local property Structured Streaming sets on the thread that runs
+    * `foreachBatch`: the query's id, stable across restarts from the
+    * same checkpoint.
+    */
+  private val QueryIdKey = "sql.streaming.queryId"
+
   /** (epoch, manifestFile) pairs present in the state dir, ascending. */
   private def manifests(): Seq[(Long, Path)] =
     if (!fs.exists(root)) Seq.empty
@@ -68,81 +89,84 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       }
     }.sortBy(_._1)
 
-  /** Current committed bucket map: bucket id → relative data dir, plus
-    * the state schema (recorded so an all-deleted state stays readable).
-    */
-  private def readManifest(): Option[(Long, Map[Int, String], Option[org.apache.spark.sql.types.StructType])] =
+  /** Newest committed manifest. */
+  private def readManifest(): Option[StateManifest] =
     manifests().lastOption.map { case (epoch, p) => readManifestAt(epoch, p) }
 
-  private def readManifestAt(epoch: Long, p: Path)
-      : (Long, Map[Int, String], Option[org.apache.spark.sql.types.StructType]) = {
+  /** Parse one manifest; `#` lines other than `#schema` and `#txn` are
+    * skipped, so a newer writer's metadata never breaks an older reader.
+    */
+  private def readManifestAt(epoch: Long, p: Path): StateManifest = {
     val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val (schemaLines, entryLines) = text.linesIterator.filter(_.nonEmpty).toSeq
-      .partition(_.startsWith("#schema\t"))
-    val schema = schemaLines.headOption.map { l =>
-      org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema\t"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-    val entries = entryLines.map { line =>
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
+      finally in.close()
+    val (metaLines, entryLines) = lines.partition(_.startsWith("#"))
+    val meta = metaLines.map { l => val (k, v) = l.span(_ != '\t'); k -> v.drop(1) }.toMap
+    val buckets = entryLines.map { line =>
       val Array(b, dir) = line.split('\t')
       b.toInt -> dir
     }.toMap
-    (epoch, entries, schema)
+    StateManifest(epoch, buckets,
+      meta.get("#schema").map(DataType.fromJson(_).asInstanceOf[StructType]),
+      meta.get("#txn").map { v => val Array(q, b) = v.split('\t'); q -> b.toLong })
   }
 
-  def stateExists: Boolean = manifests().nonEmpty
-
-  /** Read the committed state (data columns only; no bucket column —
-    * each referenced directory is read as its own parquet root). A
-    * committed state with every key deleted reads as an EMPTY frame
-    * with the recorded schema, not an error.
-    */
-  def readState(): DataFrame = {
-    val (_, entries, schema) = readManifest().getOrElse(
-      throw new IllegalStateException(s"no committed state at $statePath"))
-    stateFrom(entries, schema)
-  }
-
-  /** Time travel: the state exactly as committed at `epoch`. Epochs stay
-    * readable while their manifest is retained (`retainEpochs` newest —
-    * immutable data dirs are only vacuumed once no retained manifest
-    * references them, so a retained epoch's read NEVER races a commit).
-    * The epoch values are the stream's batchIds, so "the state before
-    * batch N was applied" is `readStateAt(N - 1)`.
-    */
-  def readStateAt(epoch: Long): DataFrame =
+  /** The manifest of a retained epoch; fails loudly for any other. */
+  private def manifestAt(epoch: Long): StateManifest =
     manifests().find(_._1 == epoch) match {
-      case Some((e, p)) =>
-        val (_, entries, schema) = readManifestAt(e, p)
-        stateFrom(entries, schema)
+      case Some((e, p)) => readManifestAt(e, p)
       case None =>
         throw new IllegalStateException(
           s"epoch $epoch is not retained at $statePath " +
             s"(retained: ${manifests().map(_._1).mkString(", ")})")
     }
 
+  def stateExists: Boolean = manifests().nonEmpty
+
+  /** Read the committed state (data columns only; no bucket column). A
+    * committed state with every key deleted reads as an EMPTY frame
+    * with the recorded schema, not an error.
+    */
+  def readState(): DataFrame = {
+    val m = readManifest().getOrElse(
+      throw new IllegalStateException(s"no committed state at $statePath"))
+    scan(m.buckets.values.toSeq, m.schema)
+  }
+
+  /** Time travel: the state exactly as committed at `epoch`. Epochs stay
+    * readable while their manifest is retained (`retainEpochs` newest —
+    * immutable data dirs are only vacuumed once no retained manifest
+    * references them, so a retained epoch's read NEVER races a commit).
+    * Each applied batch commits exactly one epoch (a replayed stream
+    * batch commits none, see [[merge]]), so for a stream that wrote the
+    * state from its batch 0, epoch N is the state after batch N and
+    * "the state before batch N was applied" is `readStateAt(N - 1)`.
+    */
+  def readStateAt(epoch: Long): DataFrame = {
+    val m = manifestAt(epoch)
+    scan(m.buckets.values.toSeq, m.schema)
+  }
+
   /** Retained epochs, ascending — each is valid for [[readStateAt]]. */
   def retainedEpochs(): Seq[Long] = manifests().map(_._1)
 
-  private def stateFrom(entries: Map[Int, String],
-                        schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val paths = entries.values.toSeq.sorted.map(rel => s"$statePath/$rel")
-    // read with the manifest's recorded schema: after an evolution
-    // commit, clean buckets still hold pre-evolution files — an
-    // explicit schema null-fills their missing columns, while parquet's
-    // own schema sampling could silently drop the new column entirely
-    if (paths.nonEmpty) schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
-    }
-    else schema match {
-      case Some(s) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None =>
-        throw new IllegalStateException(
-          s"state at $statePath is empty and its manifest carries no schema")
-    }
+  /** The one state scan: the given bucket dirs (relative to statePath)
+    * through a [[ManifestFileIndex]], read with the manifest's recorded
+    * schema. After an evolution commit, clean buckets still hold
+    * pre-evolution files — an explicit schema null-fills their missing
+    * columns, while parquet's own schema sampling could silently drop
+    * the new column entirely. A manifest without a schema (written
+    * before the `#schema` line existed) takes it from one file footer.
+    */
+  private def scan(relDirs: Seq[String], schema: Option[StructType]): DataFrame = {
+    val index = new ManifestFileIndex(fs, relDirs.sorted.map(new Path(root, _)))
+    val dataSchema = schema.orElse(index.files.headOption
+      .map(f => spark.read.parquet(f.getPath.toString).schema)).getOrElse(
+      throw new IllegalStateException(
+        s"state at $statePath is empty and its manifest carries no schema"))
+    // file sources read every column as nullable; so does this scan
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      dataSchema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Change data feed between two retained epochs: the keyed diff of
@@ -154,14 +178,18 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * One co-partitioned full-outer join on the key (the same shuffle
     * shape as the merge); presence is decided by MARKER columns, not
     * data nullness, so a legitimately-NULL attribute can't masquerade
-    * as an absent key. Output: keyCols ++ change ∈ {added, removed,
-    * changed} ++ the after-image data columns (NULL for removed keys).
+    * as an absent key. Both sides are read with the `toEpoch` schema,
+    * so a column added in between null-fills on the before side.
+    * Output: keyCols ++ change ∈ {added, removed, changed} ++ the
+    * after-image data columns (NULL for removed keys).
     */
   def changesBetween(fromEpoch: Long, toEpoch: Long): DataFrame = {
     require(fromEpoch < toEpoch, s"need fromEpoch < toEpoch, got $fromEpoch, $toEpoch")
-    val dataCols = readState().columns.filterNot(keyCols.contains).toSeq
-    val b = readStateAt(fromEpoch).withColumn("__b", lit(true)).alias("b")
-    val a = readStateAt(toEpoch).withColumn("__a", lit(true)).alias("a")
+    val from = manifestAt(fromEpoch)
+    val after = readStateAt(toEpoch)
+    val dataCols = after.columns.filterNot(keyCols.contains).toSeq
+    val b = scan(from.buckets.values.toSeq, Some(after.schema)).withColumn("__b", lit(true)).alias("b")
+    val a = after.withColumn("__a", lit(true)).alias("a")
     val joinCond = keyCols.map(k => col(s"b.$k") <=> col(s"a.$k")).reduce(_ && _)
     // exact null-safe struct compare — a hash digest here could collide
     // and silently classify a real change as unchanged
@@ -199,41 +227,44 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     DeltaExport.write(readState(), path)
 
   /** Merge one changelog micro-batch (keyCols ++ dataCols ++ op, ts_ms,
-    * seq) into the state. At-least-once replay from the stream
-    * checkpoint is safe: replaying a committed batch re-applies the
-    * same latest-image per key (idempotent), and a batch that crashed
-    * mid-merge never published, so its partial output is invisible.
+    * seq) into the state, committing one new epoch.
+    *
+    * Exactly-once under at-least-once delivery: called from a streaming
+    * `foreachBatch`, the merge records the stream's (queryId, batchId)
+    * in the manifest (Delta's txn marker), and a later call from the
+    * same query whose batchId is not higher — a replay after a restart —
+    * returns without committing. A direct call (no streaming query on
+    * this thread) always commits. A batch that crashed mid-merge never
+    * published, so its partial output is invisible and its replay
+    * applies it.
     */
   def merge(batch: DataFrame, batchId: Long): Unit = {
+    val queryId = Option(spark.sparkContext.getLocalProperty(QueryIdKey))
+    val txn = queryId.map(_ -> batchId)
     readManifest() match {
+      case Some(m) if m.txn.exists { case (q, b) => queryId.contains(q) && batchId <= b } =>
+        ()  // already applied by this query
       case None =>
         val dataCols = dataColsOf(batch)
         val state0 = CdcOps.latestState(batch, keyCols, dataCols).drop("n_changes")
-        commit(0L, Map.empty, dirtyOf(batch), state0)
-      case Some((epoch, current, stateSchema)) =>
+        commit(0L, Map.empty, dirtyOf(batch), state0, txn)
+      case Some(m) =>
         val dirty = dirtyOf(batch)
-        val dirtyWithData = dirty.filter(current.contains)
+        val dirtyWithData = dirty.filter(m.buckets.contains)
         // schema evolution: read dirty buckets with the MANIFEST schema
-        // (older bucket files missing newer columns null-fill; parquet
-        // schema sampling could otherwise silently drop a new column),
-        // and merge over the UNION of batch and state data columns so
-        // a widening feed backfills NULL and a narrowed feed carries
+        // (older bucket files missing newer columns null-fill), and
+        // merge over the UNION of batch and state data columns so a
+        // widening feed backfills NULL and a narrowed feed carries
         // state values instead of wiping them.
-        val base = stateSchema match {
-          case Some(s) if dirtyWithData.nonEmpty =>
-            spark.read.schema(s).parquet(dirtyWithData.map(b => s"$statePath/${current(b)}"): _*)
-          case _ if dirtyWithData.nonEmpty =>
-            spark.read.parquet(dirtyWithData.map(b => s"$statePath/${current(b)}"): _*)
-          case Some(s) =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          case None => emptyLike(batch, dataColsOf(batch))
-        }
+        val base =
+          if (dirtyWithData.isEmpty && m.schema.isEmpty) emptyLike(batch, dataColsOf(batch))
+          else scan(dirtyWithData.map(m.buckets), m.schema)
         val baseDataCols = base.columns.toSeq
           .filterNot(c => keyCols.contains(c) || c == "last_ts_ms")
         val dataCols = (dataColsOf(batch) ++
           baseDataCols.filterNot(dataColsOf(batch).contains)).distinct
         val merged = CdcOps.mergeChangeSet(base, batch, keyCols, dataCols)
-        commit(epoch + 1, current, dirty, merged)
+        commit(m.epoch + 1, m.buckets, dirty, merged, txn.orElse(m.txn))
     }
   }
 
@@ -257,16 +288,10 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
   def readDirtyState(batch: DataFrame): DataFrame =
     readManifest() match {
       case None => emptyLike(batch, dataColsOf(batch))
-      case Some((_, entries, schema)) =>
-        val withData = dirtyOf(batch).filter(entries.contains)
+      case Some(m) =>
+        val withData = dirtyOf(batch).filter(m.buckets.contains)
         if (withData.isEmpty) emptyLike(batch, dataColsOf(batch))
-        else {
-          val paths = withData.map(b => s"$statePath/${entries(b)}")
-          schema match {
-            case Some(s) => spark.read.schema(s).parquet(paths: _*)
-            case None    => spark.read.parquet(paths: _*)
-          }
-        }
+        else scan(withData.map(m.buckets), m.schema)
     }
 
   /** Zero-row frame with the base-state schema (keys ++ data ++ last_ts_ms)
@@ -282,7 +307,8 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * surviving rows are dropped from the manifest (all keys deleted).
     */
   private[graft] def commit(epoch: Long, previous: Map[Int, String],
-                            dirty: Seq[Int], merged: DataFrame): Unit = {
+                            dirty: Seq[Int], merged: DataFrame,
+                            txn: Option[(String, Long)] = None): Unit = {
     // detect a single-writer violation BEFORE touching any file, and
     // stage data in a per-attempt directory: even a writer racing at
     // the same epoch can then never clobber files that a just-published
@@ -305,8 +331,9 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       written.filter(dirty.contains).map(b => b -> s"$versionDir/bucket=$b")
     val tmp = new Path(root, s"_tmp-manifest-$epoch")
     val out = fs.create(tmp, true)
-    val schemaLine = s"#schema\t${merged.schema.json}\n"
-    try out.write((schemaLine + entries.toSeq.sortBy(_._1)
+    val metaLines = s"#schema\t${merged.schema.json}\n" +
+      txn.fold("") { case (q, b) => s"#txn\t$q\t$b\n" }
+    try out.write((metaLines + entries.toSeq.sortBy(_._1)
       .map { case (b, d) => s"$b\t$d" }.mkString("", "\n", "\n")).getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, new Path(root, s"_manifest.v$epoch")))
@@ -329,7 +356,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
   private def vacuum(epoch: Long): Unit = {
     val retained = manifests().filter(_._1 > epoch - retainEpochs)
     val referenced: Set[String] = retained
-      .flatMap { case (e, p) => readManifestAt(e, p)._2.values }.toSet
+      .flatMap { case (e, p) => readManifestAt(e, p).buckets.values }.toSet
     val VersionRe = """v(\d+)(?:-[0-9a-f]+)?""".r
     fs.listStatus(root).toSeq.foreach { st =>
       val name = st.getPath.getName
@@ -353,4 +380,37 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       }
     }
   }
+}
+
+/** One committed manifest: bucket id → data dir relative to the state
+  * path, the state schema (recorded so an all-deleted state stays
+  * readable) and the last stream batch applied, as (queryId, batchId).
+  */
+private final case class StateManifest(epoch: Long, buckets: Map[Int, String],
+                                  schema: Option[StructType], txn: Option[(String, Long)])
+
+/** File index over the bucket directories one manifest references.
+  * Published directories are immutable, so their leaf files are listed
+  * once, on the driver, with one `listStatus` per directory — no Spark
+  * listing job, which `spark.read.parquet` launches once a read spans
+  * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * paths — and [[refresh]] has nothing to do.
+  */
+private final class ManifestFileIndex(fs: FileSystem, dirs: Seq[Path]) extends FileIndex {
+  /** Data files, skipping hidden and metadata names as Spark's own
+    * listing does (`_SUCCESS`, `.crc` checksums, in-flight copies).
+    */
+  val files: Seq[FileStatus] = dirs.flatMap(d => fs.listStatus(d).toSeq).filter { st =>
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+  }
+
+  override def rootPaths: Seq[Path] = dirs
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 }

@@ -689,6 +689,171 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       "both handles read the winner's state afterwards")
   }
 
+  test("a replayed stream batch is a no-op: one epoch per batch, epoch n is the state after batch n") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"),
+      numBuckets = 4, retainEpochs = 8)
+    val stream = MemoryStream[(Long, String, Long, Long, String, Double)]
+    val sdf = stream.toDF().toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value")
+    // at-least-once delivery made explicit: every batch arrives twice
+    val q = sdf.writeStream
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        sink.merge(b, id); sink.merge(b, id)
+      }
+      .start()
+    val batches = Seq(
+      Seq((1L, "c", 10L, 1L, "signup", 1.0), (2L, "c", 10L, 2L, "signup", 2.0)),
+      Seq((1L, "u", 20L, 3L, "click", 1.5)),
+      Seq((2L, "d", 30L, 4L, "signup", 2.0), (3L, "c", 30L, 5L, "signup", 3.0)),
+      Seq((3L, "u", 40L, 6L, "purchase", 3.5)))
+    batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+    q.stop()
+
+    val cols = Seq("user_id", "last_event_type", "last_value", "last_ts_ms").map(col)
+    assert(sink.retainedEpochs() === batches.indices.map(_.toLong), "one epoch per batch")
+    batches.indices.foreach { n =>
+      val expected = CdcOps.latestState(batchDf(batches.take(n + 1).flatten), Seq("user_id"),
+        CdcOps.userDataCols).select(cols: _*).collect().toSet
+      assert(sink.readStateAt(n).select(cols: _*).collect().toSet === expected,
+        s"epoch $n must be the state after batch $n")
+    }
+    val newest = new java.io.File(s"$tmp/state/_manifest.v${batches.size - 1}")
+    val lines = scala.io.Source.fromFile(newest, "UTF-8").getLines().toList
+    assert(lines.contains(s"#txn\t${q.id}\t${batches.size - 1}"))
+
+    // a manifest line this reader does not know is skipped
+    java.nio.file.Files.write(newest.toPath,
+      (lines :+ "#future\tsome\tfields").mkString("", "\n", "\n").getBytes("UTF-8"))
+    new java.io.File(newest.getParent, s".${newest.getName}.crc").delete()
+    assert(sink.readState().count() === 2)
+
+    // a direct call carries no query id, so it always commits
+    sink.merge(batchDf(Seq((4L, "c", 50L, 7L, "signup", 4.0))), 0)
+    assert(sink.retainedEpochs().last === batches.size.toLong)
+    assert(sink.readState().count() === 3)
+  }
+
+  /** Descriptions of the Spark jobs launched on this thread while `f`
+    * runs. A marker job afterwards flushes the listener queue.
+    */
+  private def jobsDuring[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(p => (p.getProperty("spark.jobGroup.id"), p)) match {
+          case Some((`group`, p)) => jobs.add(String.valueOf(p.getProperty("spark.job.description")))
+          case Some((g, _)) if g == s"$group-end" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val r = f
+      sc.setJobGroup(s"$group-end", "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener queue did not drain")
+      import scala.jdk.CollectionConverters._
+      (r, jobs.asScala.toSeq)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("state reads come from the manifest: no listing job, rows of a plain parquet read") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{DataType, StructType}
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-index").toString
+    val statePath = s"$tmp/state"
+    val buckets = 64
+    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = buckets)
+
+    /** (data dirs by bucket, schema) of epoch e, parsed from its manifest. */
+    def manifest(e: Long): (Map[Int, String], StructType) = {
+      val lines = scala.io.Source.fromFile(s"$statePath/_manifest.v$e", "UTF-8").getLines().toList
+      val schema = DataType.fromJson(lines.find(_.startsWith("#schema\t")).get
+        .stripPrefix("#schema\t")).asInstanceOf[StructType]
+      (lines.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
+        val Array(b, d) = l.split('\t'); b.toInt -> s"$statePath/$d"
+      }.toMap, schema)
+    }
+    def plain(dirs: Iterable[String], schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(dirs.toSeq.sorted: _*)
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    def bucketsOf(batch: DataFrame): Set[Int] =
+      batch.select(pmod(hash(col("user_id")), lit(buckets))).collect().map(_.getInt(0)).toSet
+
+    /** Every read at epoch e (after `batch` committed it) builds its
+      * frame without a Spark job and returns a plain read's rows.
+      */
+    def checkReads(e: Long, batch: DataFrame): Unit = {
+      val (dirs, schema) = manifest(e)
+      val (prevDirs, prevSchema) = manifest(e - 1)
+      val (state, stateJobs) = jobsDuring(sink.readState())
+      assert(stateJobs.isEmpty, s"readState@$e launched $stateJobs")
+      assert(state.schema.fieldNames.toSeq === schema.fieldNames.toSeq)
+      assert(rows(state) === rows(plain(dirs.values, schema)), s"readState@$e")
+      val (prev, prevJobs) = jobsDuring(sink.readStateAt(e - 1))
+      assert(prevJobs.isEmpty, s"readStateAt(${e - 1}) launched $prevJobs")
+      assert(rows(prev) === rows(plain(prevDirs.values, prevSchema)), s"readStateAt(${e - 1})")
+
+      val (cdf, cdfJobs) = jobsDuring(sink.changesBetween(e - 1, e))
+      assert(cdfJobs.isEmpty, s"changesBetween(${e - 1}, $e) launched $cdfJobs")
+      // the keyed diff of two plain reads, both with epoch e's schema
+      def byKey(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      val (before, after) = (byKey(plain(prevDirs.values, schema)), byKey(plain(dirs.values, schema)))
+      val nulls = Seq.fill(schema.size - 1)(null)
+      val expected = (before.keySet ++ after.keySet).flatMap { k =>
+        (before.get(k), after.get(k)) match {
+          case (None, Some(a)) => Some((k +: "added" +: a).mkString("[", ",", "]"))
+          case (Some(_), None) => Some((k +: "removed" +: nulls).mkString("[", ",", "]"))
+          case (Some(b), Some(a)) if a != b => Some((k +: "changed" +: a).mkString("[", ",", "]"))
+          case _ => None
+        }
+      }
+      assert(rows(cdf) === expected, s"changesBetween(${e - 1}, $e)")
+
+      // readDirtyState collects the batch's bucket ids by design; that
+      // query's jobs are the only ones it may launch
+      val (_, collectJobs) = jobsDuring(
+        batch.select(pmod(hash(col("user_id")), lit(buckets))).distinct().collect())
+      val (dirty, dirtyJobs) = jobsDuring(sink.readDirtyState(batch))
+      assert(dirtyJobs.size === collectJobs.size && !dirtyJobs.exists(_.startsWith("Listing leaf files")),
+        s"readDirtyState@$e launched $dirtyJobs")
+      assert(rows(dirty) === rows(plain(bucketsOf(batch).flatMap(dirs.get), schema)),
+        s"readDirtyState@$e")
+    }
+
+    val keys = 1L to 400L
+    sink.merge(batchDf(keys.map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+    assert(manifest(0)._1.size > 32, "more than 32 buckets must hold data")
+    val b1 = batchDf(keys.filter(_ % 2 == 0).map(k => (k, "u", 20L, 1000L + k, "click", k + 0.5)) ++
+      Seq((401L, "c", 20L, 2000L, "signup", 401.0), (3L, "d", 20L, 2001L, "signup", 3.0)))
+    sink.merge(b1, 1)
+    checkReads(1, b1)
+
+    // schema-evolved: the new column null-fills in old files
+    val b2 = keys.filter(_ % 4 == 1).map(k => (k, "u", 30L, 3000L + k, "click", k + 0.25, "emea"))
+      .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value", "region")
+    sink.merge(b2, 2)
+    assert(manifest(2)._2.fieldNames.contains("region"))
+    assert(bucketsOf(b2).size < manifest(2)._1.size, "some buckets must keep pre-evolution files")
+    checkReads(2, b2)
+
+    // all-deleted: empty, with the recorded schema
+    val b3 = batchDf((keys :+ 401L).map(k => (k, "d", 40L, 4000L + k, "signup", 0.0)))
+    sink.merge(b3, 3)
+    assert(manifest(3)._1.isEmpty)
+    checkReads(3, b3)
+    assert(sink.readState().count() === 0)
+  }
+
   test("exportSnapshot round-trips: any plain parquet reader sees readState") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-export").toString
