@@ -177,11 +177,11 @@ object CdcStreamJob {
   * deployment must quarantine them instead.
   *
   * Recovery contract is the single-table job's: one checkpoint governs
-  * the whole fan-out, foreachBatch replays are idempotent per sink
-  * (same latest-image per key), and a crash mid-fan-out is safe because
-  * each sink's commit is atomic — a replayed batch re-merges into
-  * whichever sinks committed and whichever didn't, converging to the
-  * same state either way.
+  * the whole fan-out, and a crash mid-fan-out is safe because each
+  * sink's commit is atomic and records the batch's `#txn` marker. A
+  * replayed batch is SKIPPED by every sink that already committed it
+  * (no new epoch) and merged by every sink that did not, so the
+  * fan-out converges to the same per-table states either way.
   */
 class CdcMultiTableStreamJob(spark: SparkSession, source: CdcSource,
                              checkpointLocation: String, routes: Seq[TableRoute]) {

@@ -234,7 +234,7 @@ object TextFunctions {
 
   /** (s, sdf): corpus sentence document frequency — ADDITIVE across
     * batches when each doc arrives exactly once (the
-    * AdditiveDeltaState contract the streaming face rides).
+    * DeltaStore contract the streaming face rides).
     */
   private[graft] def sentenceDf(docs: DataFrame): DataFrame =
     docSentences(docs).groupBy("s")

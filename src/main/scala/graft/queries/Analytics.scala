@@ -2738,6 +2738,14 @@ object Analytics {
     * Every ntile runs over a TOTAL order (metric, then custkey), so
     * the quartile boundaries are deterministic on both engines.
     *
+    * The averages are exact (the q5/q9 pattern): `round(avg(double),
+    * 2)` differs between the engines when a segment average lands on a
+    * half-cent — Spark rounds HALF_UP on the shortest decimal string,
+    * DuckDB scales the binary value (a generated corpus diverged on
+    * ~3.6% of rows). Monetary is summed as BIGINT cents, and both
+    * averages are rounded half-up to hundredths in integer arithmetic
+    * before the one division.
+    *
     * Plan: one orders scan aggregates the per-customer triple
     * (map-side partials); the three ntiles ride
     * [[graft.functions.Ranks.globalNtile]] over the |customers|-row
@@ -2755,7 +2763,7 @@ object Analytics {
       .groupBy(col("o_custkey").as("custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_day"),
         count(lit(1)).as("freq"),
-        sum(col("o_totalprice")).as("monetary"))
+        sum(round(col("o_totalprice") * 100).cast("long")).as("monetary"))
     val perCust = perCust0
       .crossJoin(broadcast(perCust0.agg(max(col("last_day")).as("ref_day"))))
       .withColumn("r_days", datediff(col("ref_day"), col("last_day")))
@@ -2769,8 +2777,12 @@ object Analytics {
     scored
       .groupBy(concat(col("r"), col("f"), col("m")).as("segment"))
       .agg(count(lit(1)).as("n_customers"),
-        round(avg(col("monetary")), 2).as("avg_spend"),
-        round(avg(col("r_days")), 2).as("avg_recency_days"))
+        sum(col("monetary")).as("m_cents"), sum(col("r_days")).as("r_sum"))
+      .select(col("segment"), col("n_customers"),
+        (expr("(2 * m_cents + n_customers) div (2 * n_customers)") / 100.0)
+          .as("avg_spend"),
+        (expr("(200 * r_sum + n_customers) div (2 * n_customers)") / 100.0)
+          .as("avg_recency_days"))
       .orderBy("segment")
   }
 
@@ -2778,7 +2790,8 @@ object Analytics {
     """WITH pc AS (
       |  SELECT o_custkey AS custkey,
       |    max(CAST(o_orderdate AS DATE)) AS last_day,
-      |    count(*) AS freq, sum(o_totalprice) AS monetary
+      |    count(*) AS freq,
+      |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS monetary
       |  FROM orders GROUP BY 1),
       |rd AS (
       |  SELECT *, date_diff('day', last_day, max(last_day) OVER ()) AS r_days
@@ -2791,8 +2804,9 @@ object Analytics {
       |  FROM rd)
       |SELECT CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) AS segment,
       |  count(*) AS n_customers,
-      |  round(avg(monetary), 2) AS avg_spend,
-      |  round(avg(r_days), 2) AS avg_recency_days
+      |  CAST((2 * sum(monetary) + count(*)) // (2 * count(*)) AS DOUBLE) / 100.0 AS avg_spend,
+      |  CAST((200 * sum(r_days) + count(*)) // (2 * count(*)) AS DOUBLE) / 100.0
+      |    AS avg_recency_days
       |FROM sc GROUP BY 1 ORDER BY segment""".stripMargin
 
   /** Least-squares daily trend per event type over the dense grid —

@@ -502,13 +502,13 @@ object Graph {
   /** Random-walk length (hops) — small fixed constant. */
   val WalkSteps = 3
 
-  /** Checkpoint preserving the physical plan's output partitioning:
-    * `localCheckpoint` records the executed plan's partitioning into
+  /** Checkpoint preserving the physical plan's output partitioning
+    * AND within-partition ordering: `localCheckpoint` records both into
     * the LogicalRDD, but under AQE the un-executed adaptive plan reads
     * back as UnknownPartitioning and every downstream join re-exchanges
     * the frame. AQE is disabled for just the checkpoint job (a static
-    * single-exchange plan AQE cannot improve) and restored after — the
-    * maintain-state family's ckptPartitioned discipline, shared.
+    * single-exchange plan AQE cannot improve) and restored after. The
+    * walk adjacency and [[BucketedWeightState]]'s generations share it.
     */
   private[graft] def ckptKeepLayout(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -554,7 +554,7 @@ object Graph {
     // same edge rows aggregate into both).
     // r18 (guide §2.1 "remove shuffles outright"): checkpoint keeping
     // the groupBy's hashpartitioning(anode) (AQE off for just the
-    // checkpoint job — the maintain-state ckptPartitioned rationale),
+    // checkpoint job — see ckptKeepLayout),
     // so every hop's shuffled-hash join exchanges ONLY the narrow
     // frontier: the ¦V¦-row side dragging the full ¦E¦-long neighbor
     // arrays previously re-shuffled on EVERY hop (3× per walk build).
@@ -1282,7 +1282,6 @@ object Graph {
     * merge probe).
     */
   private[graft] final class BucketedWeightState(init: DataFrame) {
-    private val spark = init.sparkSession
     /** Key co-partitioning width, pinned at construction from the
       * MEASURED init mass (≈100k rows per partition, cap 4096) — an
       * EXPLICIT count so AQE cannot coalesce one side out of
@@ -1305,27 +1304,7 @@ object Graph {
       df.repartition(statePartitions, col("src"), col("dst"))
         .sortWithinPartitions("src", "dst")
 
-    /** Checkpoint a state frame PRESERVING its co-partitioning and
-      * within-partition key order. `localCheckpoint` records the
-      * physical plan's output partitioning AND ordering into the
-      * resulting LogicalRDD — but under AQE the
-      * physical plan is an un-executed AdaptiveSparkPlanExec whose
-      * outputPartitioning is UnknownPartitioning, so every generation
-      * would read back layout-less and the probe joins would
-      * re-exchange the state each epoch (measured: the before plan's
-      * ENSURE_REQUIREMENTS exchange on the state side). AQE is
-      * disabled for just the checkpoint job (a static single-exchange
-      * plan AQE cannot improve anyway) and restored after.
-      */
-    private def ckptPartitioned(df: DataFrame): DataFrame = {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(k)
-      spark.conf.set(k, "false")
-      try df.localCheckpoint(true)
-      finally spark.conf.set(k, prev)
-    }
-
-    private[graft] val w0 = ckptPartitioned(keyed(init
+    private[graft] val w0 = ckptKeepLayout(keyed(init
       .select(col("src"), col("dst"), col("dw").as("w"))
       .withColumn("b", wBucketOf(col("src"), col("dst")))))
     /** Additive generations, newest first (weights SUM across them). */
@@ -1338,7 +1317,7 @@ object Graph {
       * contribution to each touched key; w0 is their sum. Every
       * generation checkpoint carries HashPartitioning(src, dst) AND
       * the within-partition (src, dst) sort order (localCheckpoint
-      * records both from the physical plan — see [[ckptPartitioned]]),
+      * records both from the physical plan — see [[ckptKeepLayout]]),
       * so the SortMergeJoins need NO exchange and NO sort on the state
       * side: the state streams, the Δ is exchanged + sorted exactly
       * once, and each join's output keeps the key order for the next.
@@ -1384,8 +1363,8 @@ object Graph {
       }
       // AQE-off checkpoint: the probe's LeftOuter hash join carries the
       // Δ side's HashPartitioning(src, dst) through to the output, and
-      // the appended generation must read it back (see ckptPartitioned)
-      val merged = t("ckpt")(ckptPartitioned(mergeProbePlan(d0)))
+      // the appended generation must read it back (see ckptKeepLayout)
+      val merged = t("ckpt")(ckptKeepLayout(mergeProbePlan(d0)))
       val dirty = t("dirty")(
         merged.select("b").distinct().collect().map(_.getInt(0)).toSet)
       lastDirty = dirty

@@ -428,8 +428,7 @@ object Ann {
       case None =>
         // empty corpus → empty result with the contract schema (instead
         // of an out-of-bounds read while seeding centroids)
-        embs.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
+        emptyTopK(embs)
       case Some(refined) =>
         probeCells(withNearestCell(embs, refined), refined,
           embs.filter(col("vec_id") < nQueries), k, nProbe)
@@ -553,9 +552,7 @@ object Ann {
   def ivfTopKFromIndex(centroids: DataFrame, assigned: DataFrame, queries: DataFrame,
                        k: Int = 5, nProbe: Int = 4): DataFrame = {
     val table = centroidTable(centroids)
-    if (table.isEmpty)
-      queries.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
+    if (table.isEmpty) emptyTopK(queries)
     else probeCells(assigned, table, queries, k, nProbe)
   }
 
@@ -990,9 +987,7 @@ object Ann {
     val spark = embs.sparkSession
     import spark.implicits._
     val books = pqCodebooks(embs, nSub, nCodes, trainSize)
-    if (books.isEmpty)
-      return embs.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
+    if (books.isEmpty) return emptyTopK(embs)
     val subDim = books.head.head.length
 
     // reconstructed norm² per corpus row: LUT[m][code] summed — map-side
@@ -1115,7 +1110,7 @@ object Ann {
   /** Contract-schema empty top-k result (empty-corpus face of every
     * ANN tier).
     */
-  private def emptyTopK(embs: DataFrame): DataFrame =
+  private[graft] def emptyTopK(embs: DataFrame): DataFrame =
     embs.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
       lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
 
@@ -1365,9 +1360,7 @@ object Ann {
                          queries: DataFrame, k: Int = 5, nProbe: Int = 6): DataFrame = {
     val cells = centroidTable(centroids)
     val books = codebookTable(codebooks)
-    if (cells.isEmpty || books.isEmpty)
-      queries.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
+    if (cells.isEmpty || books.isEmpty) emptyTopK(queries)
     else ivfpqScore(codes, cells, books, queries, k, nProbe)
   }
 

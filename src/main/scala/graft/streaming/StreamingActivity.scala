@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ([[graft.queries.Analytics.userActivityGini]]).
   *
   * Event counts per user are additive when each event arrives exactly
-  * once, so the [[AdditiveDeltaState]] contract applies verbatim;
+  * once, so the [[DeltaStore]] contract applies verbatim;
   * state is user-sized regardless of event volume. The read face folds
   * the maintained counts through the SAME Gini/top-decile projection
   * as the batch entry, so streamed == batch is structural (all-integer
@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 class StreamingActivityJob(spark: SparkSession, statePath: String,
                            compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "user_activity", Seq("user_id"), Seq("x"), compactEvery)
 
   /** One micro-batch of event rows (user_id, ...) — each event arrives

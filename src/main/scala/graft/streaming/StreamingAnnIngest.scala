@@ -38,9 +38,9 @@ import graft.similarity.Ann
   * vec_ids that the top-k window would rank twice. A quantizer
   * marker records the (nCells, nSub, nCodes) configuration — an engine
   * restarted with a different geometry fails loudly instead of mixing
-  * incompatible codes. Compaction folds the per-batch directories with
-  * the same displaced-live/two-rename protocol as the band index, so
-  * no crash point loses codes. Empty micro-batches are no-ops: in
+  * incompatible codes. The code table is a [[DeltaStore]] (identity
+  * fold), so compaction is the same crash-safe two-rename fold as the
+  * band index and no crash point loses codes. Empty micro-batches are no-ops: in
   * particular an empty FIRST batch must not train-and-persist empty
   * quantizers (which would permanently encode every later batch to
   * zero rows) — the first non-empty batch bootstraps instead.
@@ -49,11 +49,12 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
                             nCells: Int = 16, nSub: Int = 16, nCodes: Int = 16,
                             compactEvery: Int = 16) {
 
-  private def codesDir = s"$indexPath/codes"
   private def centroidsDir = s"$indexPath/centroids"
   private def codebooksDir = s"$indexPath/codebooks"
   private def fs = new Path(indexPath)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val codes = new DeltaStore(spark, indexPath, "codes",
+    Seq("vec_id", "cell", "codes", "dnorm2"), compactEvery, identity)
 
   private val geometryMarker = new Path(indexPath, "_pq_geometry")
   private def geometry = s"ivfpq:cells=$nCells,sub=$nSub,codes=$nCodes"
@@ -72,32 +73,12 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
     }
   }
 
-  private def liveDir = new Path(codesDir)
-  private def preCompactDir = new Path(s"$indexPath/_pre_compact")
-  // lives INSIDE the codes dir (underscore-prefixed → invisible to the
-  // parquet reader) so the publish rename commits marker + folded codes
-  // as one atomic unit
-  private val compactedMarkerName = "_compacted_through"
-
   /** Highest batch id whose rows are inside the compacted `batch=0`
-    * directory; -1 before any compaction. Appends at or below this id
-    * are replays of already-folded batches and must be skipped.
+    * directory; -1 before any compaction.
     */
-  private[graft] def compactedThrough(): Long = {
-    recoverIfNeeded()
-    val m = new Path(liveDir, compactedMarkerName)
-    if (fs.exists(m)) {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else -1L
-  }
+  private[graft] def compactedThrough(): Long = codes.compactedThrough()
 
-  private def recoverIfNeeded(): Unit =
-    if (!fs.exists(liveDir) && fs.exists(preCompactDir)) {
-      if (!fs.rename(preCompactDir, liveDir)) throw new IllegalStateException(
-        s"could not restore $preCompactDir to $liveDir after an interrupted compaction")
-    }
+  private[graft] def batchDirCount(): Int = codes.batchDirCount()
 
   /** The persisted quantizers, if the bootstrap batch has committed
     * them yet.
@@ -108,12 +89,7 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
     else None
 
   /** The accumulated code table, if any batch has committed one. */
-  def readCodes(): Option[DataFrame] = {
-    recoverIfNeeded()
-    if (fs.exists(liveDir) && fs.listStatus(liveDir).nonEmpty)
-      Some(spark.read.parquet(codesDir).select("vec_id", "cell", "codes", "dnorm2"))
-    else None
-  }
+  def readCodes(): Option[DataFrame] = codes.readDeltas()
 
   /** One micro-batch: bootstrap quantizers on first contact, encode the
     * batch against the persisted artifacts, append its codes, fold the
@@ -145,59 +121,19 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
       c.write.mode("overwrite").parquet(centroidsDir)
       (spark.read.parquet(centroidsDir), spark.read.parquet(codebooksDir))
     }
-    Ann.ivfpqAssign(centroids, codebooks, embs)
-      .write.mode("overwrite").parquet(s"$codesDir/batch=$batchId")
-    if (batchDirCount() >= compactEvery) compact()
+    codes.append(Ann.ivfpqAssign(centroids, codebooks, embs), batchId)
   }
 
-  private[graft] def batchDirCount(): Int = {
-    recoverIfNeeded()
-    if (fs.exists(liveDir)) fs.listStatus(liveDir)
-      .count(_.getPath.getName.startsWith("batch=")) else 0
-  }
-
-  /** Fold per-batch code directories into one (same displaced-live /
-    * two-rename protocol as the band index — see
-    * [[StreamingNearDedupJob.compact]] for the crash-window analysis).
-    */
-  def compact(): Unit = readCodes().foreach { codes =>
-    // highest batch id being folded, joined with any previous marker
-    // (batch=0 from an earlier compaction no longer carries the original
-    // ids — the marker does, monotonically)
-    val foldedThrough = (compactedThrough() +: fs.listStatus(liveDir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)).max
-    val staged = new Path(s"$indexPath/_compacting")
-    fs.delete(staged, true)
-    codes.write.parquet(new Path(staged, "batch=0").toString)
-    // marker rides inside the staged dir: the publish rename below
-    // commits it atomically with the folded codes
-    val mout = fs.create(new Path(staged, compactedMarkerName), true)
-    try mout.write((foldedThrough.toString + "\n").getBytes("UTF-8")) finally mout.close()
-    fs.delete(preCompactDir, true)
-    if (!fs.rename(liveDir, preCompactDir)) throw new IllegalStateException(
-      s"compaction could not displace $liveDir (concurrent writer?)")
-    if (!fs.rename(staged, liveDir)) {
-      if (!fs.rename(preCompactDir, liveDir)) throw new IllegalStateException(
-        s"compaction could not publish $liveDir AND could not restore " +
-          s"$preCompactDir — restore it manually before the next batch")
-      throw new IllegalStateException(
-        s"compaction could not publish $liveDir (restored previous index)")
-    }
-    fs.delete(preCompactDir, true)
-  }
+  /** Fold per-batch code directories into one (see [[DeltaStore.compact]]). */
+  def compact(): Unit = codes.compact()
 
   /** Top-k probe over everything ingested so far. Empty before the
     * first commit.
     */
   def queryIndex(queries: DataFrame, k: Int = 5, nProbe: Int = 6): DataFrame =
     (readQuantizers(), readCodes()) match {
-      case (Some((c, b)), Some(codes)) => Ann.ivfpqTopKFromIndex(c, b, codes, queries, k, nProbe)
-      case _ => queries.select(
-        org.apache.spark.sql.functions.col("vec_id").as("query_id"),
-        org.apache.spark.sql.functions.col("vec_id").as("neighbor_id"),
-        org.apache.spark.sql.functions.lit(1).as("rank"),
-        org.apache.spark.sql.functions.lit(0.0).as("cosine")).limit(0)
+      case (Some((c, b)), Some(table)) => Ann.ivfpqTopKFromIndex(c, b, table, queries, k, nProbe)
+      case _ => Ann.emptyTopK(queries)
     }
 
   /** Run continuously over a streaming (vec_id, embedding) frame. */

@@ -8,7 +8,7 @@ import graft.queries.Analytics
 /** Streaming maintenance of the market-basket rule substrate — the
   * continuous face of `assoc_rules`: per-batch brand baskets fold
   * into three ADDITIVE count relations (pair co-occurrences, brand
-  * occurrences, order total), each an [[AdditiveDeltaState]] with the
+  * occurrences, order total), each a [[DeltaStore]] with the
   * inherited replay/compaction/crash discipline.
   *
   * Contract: each ORDER arrives wholly within one micro-batch (the
@@ -27,11 +27,11 @@ class StreamingAssocRulesJob(spark: SparkSession, statePath: String,
 
   private val dim = brandDim.select("p_partkey", "p_brand")
 
-  private[graft] val pairs = new AdditiveDeltaState(spark, statePath,
+  private[graft] val pairs = DeltaStore.additive(spark, statePath,
     "pairs", Seq("x", "y"), Seq("n_xy"), compactEvery)
-  private[graft] val brands = new AdditiveDeltaState(spark, statePath,
+  private[graft] val brands = DeltaStore.additive(spark, statePath,
     "brands", Seq("brand"), Seq("n_brand"), compactEvery)
-  private[graft] val totals = new AdditiveDeltaState(spark, statePath,
+  private[graft] val totals = DeltaStore.additive(spark, statePath,
     "totals", Seq("k"), Seq("n_orders"), compactEvery)
 
   /** One micro-batch of lineitem rows (l_orderkey, l_partkey) —

@@ -1,127 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
-
-/** One additive keyed delta state under `root/<name>`: the
-  * batch=<id>-overwrite / fold-to-batch=0 / `_compacted_through`-marker
-  * discipline that [[StreamingVocabJob]], [[StreamingNearDedupJob]] and
-  * [[StreamingAnnIngestJob]] each carry inline, factored as a reusable
-  * unit so a job can maintain SEVERAL additive states (the bigram job
-  * needs token and bigram counts side by side) without re-deriving the
-  * replay/compaction analysis per state:
-  *
-  *   - append: a batch id at or below the marker was already folded
-  *     into batch=0 — re-appending would double-count, so it is
-  *     SKIPPED; otherwise `batch=<id>` is overwritten (plain replay
-  *     idempotence);
-  *   - compact: fold all deltas into batch=0 + marker in a staged dir,
-  *     then the two-rename displaced-live swap (crash between the
-  *     renames is recovered by [[recoverIfNeeded]] on the next access);
-  *   - state: one sum-combine over the live deltas — sum-of-sums
-  *     equals the sum, so compaction never changes the read.
-  *
-  * Each state has its OWN marker: a replay that lands after one
-  * state's compaction but before another's is skipped exactly where it
-  * was folded and re-appended (idempotently) where it was not.
-  */
-private[graft] class AdditiveDeltaState(
-    spark: SparkSession, root: String, name: String,
-    keyCols: Seq[String], sumCols: Seq[String], compactEvery: Int) {
-
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def liveDir = new Path(s"$root/$name")
-  private def preCompactDir = new Path(s"$root/_pre_compact_$name")
-  private def stagedDir = new Path(s"$root/_compacting_$name")
-  private val markerName = "_compacted_through"
-
-  private def recoverIfNeeded(): Unit =
-    if (!fs.exists(liveDir) && fs.exists(preCompactDir)) {
-      if (!fs.rename(preCompactDir, liveDir)) throw new IllegalStateException(
-        s"could not restore $preCompactDir to $liveDir after an interrupted compaction")
-    }
-
-  private[graft] def compactedThrough(): Long = {
-    recoverIfNeeded()
-    val m = new Path(liveDir, markerName)
-    if (fs.exists(m)) {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else -1L
-  }
-
-  private[graft] def batchDirCount(): Int = {
-    recoverIfNeeded()
-    if (fs.exists(liveDir)) fs.listStatus(liveDir)
-      .count(_.getPath.getName.startsWith("batch=")) else 0
-  }
-
-  /** Raw accumulated deltas, if any batch committed. */
-  private[graft] def readDeltas(): Option[DataFrame] = {
-    recoverIfNeeded()
-    if (fs.exists(liveDir) && fs.listStatus(liveDir).nonEmpty)
-      Some(spark.read.parquet(liveDir.toString)
-        .select((keyCols ++ sumCols).map(col): _*))
-    else None
-  }
-
-  /** The folded state: one sum-combine per key over the deltas. */
-  def state(): Option[DataFrame] = readDeltas().map {
-    _.groupBy(keyCols.map(col): _*)
-      .agg(sum(sumCols.head).as(sumCols.head),
-        sumCols.tail.map(c => sum(c).as(c)): _*)
-  }
-
-  def append(delta: DataFrame, batchId: Long): Unit = {
-    if (batchId <= compactedThrough()) return
-    delta.write.mode("overwrite").parquet(s"$root/$name/batch=$batchId")
-    if (batchDirCount() >= compactEvery) compact()
-  }
-
-  /** Append with at-most-once COMPUTATION: if `batchId` is already
-    * folded (marker) or already durably written (`_SUCCESS` present —
-    * a crash mid-write leaves no `_SUCCESS`, so a partial dir is
-    * rewritten), the by-name `delta` is never evaluated. This is what
-    * a NON-additive producer needs: a delta computed against pre-batch
-    * state would be recomputed WRONG on a replay that runs after the
-    * state has already advanced, so the first durable write must win.
-    */
-  def appendOnce(delta: => DataFrame, batchId: Long): Unit = {
-    recoverIfNeeded()
-    if (batchId <= compactedThrough()) return
-    if (fs.exists(new Path(s"$root/$name/batch=$batchId/_SUCCESS"))) return
-    delta.write.mode("overwrite").parquet(s"$root/$name/batch=$batchId")
-    if (batchDirCount() >= compactEvery) compact()
-  }
-
-  def compact(): Unit = readDeltas().foreach { d =>
-    val foldedThrough = (compactedThrough() +: fs.listStatus(liveDir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)).max
-    val folded = d.groupBy(keyCols.map(col): _*)
-      .agg(sum(sumCols.head).as(sumCols.head),
-        sumCols.tail.map(c => sum(c).as(c)): _*)
-    fs.delete(stagedDir, true)
-    folded.write.parquet(new Path(stagedDir, "batch=0").toString)
-    val mout = fs.create(new Path(stagedDir, markerName), true)
-    try mout.write((foldedThrough.toString + "\n").getBytes("UTF-8")) finally mout.close()
-    fs.delete(preCompactDir, true)
-    if (!fs.rename(liveDir, preCompactDir)) throw new IllegalStateException(
-      s"compaction could not displace $liveDir (concurrent writer?)")
-    if (!fs.rename(stagedDir, liveDir)) {
-      if (!fs.rename(preCompactDir, liveDir)) throw new IllegalStateException(
-        s"compaction could not publish $liveDir AND could not restore " +
-          s"$preCompactDir — restore it manually before the next batch")
-      throw new IllegalStateException(
-        s"compaction could not publish $liveDir (restored previous state)")
-    }
-    fs.delete(preCompactDir, true)
-  }
-}
 
 /** Streaming maintenance of the BIGRAM substrates — the continuous face
   * of [[TextFunctions.tokenPmi]] and [[TextFunctions.bigramLogprob]]:
@@ -132,6 +14,11 @@ private[graft] class AdditiveDeltaState(
   * pair key. State grows with the (token + bigram) vocabulary, not the
   * corpus; per-batch cost scales with the batch.
   *
+  * Each count set is its own additive [[DeltaStore]] under one root,
+  * with its own marker: a replay that lands after one state's
+  * compaction but before the other's is skipped exactly where it was
+  * folded and re-appended (idempotently) where it was not.
+  *
   * The two consumers read the folded states and reproduce the batch
   * faces' arithmetic EXACTLY (integer counts → the same doubles), so
   * streamed == batch is equality, not approximation — spec-held
@@ -140,9 +27,9 @@ private[graft] class AdditiveDeltaState(
 class StreamingBigramJob(spark: SparkSession, statePath: String,
                          compactEvery: Int = 16) {
 
-  private[graft] val tokens = new AdditiveDeltaState(spark, statePath,
+  private[graft] val tokens = DeltaStore.additive(spark, statePath,
     "tokens", Seq("token"), Seq("n", "n_docs"), compactEvery)
-  private[graft] val bigrams = new AdditiveDeltaState(spark, statePath,
+  private[graft] val bigrams = DeltaStore.additive(spark, statePath,
     "bigrams", Seq("a", "b"), Seq("n"), compactEvery)
 
   /** One micro-batch: one token delta + one bigram delta, each a pure

@@ -11,7 +11,7 @@ import graft.functions.TextFunctions
   *
   * Sentence df is additive when each document arrives exactly once
   * (each batch contributes its own distinct-doc counts per sentence),
-  * so the [[AdditiveDeltaState]] contract applies verbatim: plain
+  * so the [[DeltaStore]] contract applies verbatim: plain
   * per-batch appends, idempotent under replay, two-rename crash-safe
   * compaction. State is distinct-sentence-sized — the one corpus-sized
   * state in the streaming family, exactly as a streaming dedup index
@@ -26,7 +26,7 @@ import graft.functions.TextFunctions
 class StreamingBoilerplateJob(spark: SparkSession, statePath: String,
                               compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "sentence_df", Seq("s"), Seq("sdf"), compactEvery)
 
   /** One micro-batch of document rows (doc_id, text) — each doc

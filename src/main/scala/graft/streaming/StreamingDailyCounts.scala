@@ -13,7 +13,7 @@ import graft.queries.Analytics
   *
   *   1. each micro-batch aggregates its own rows to (type, day, n)
   *      deltas — counts are sums over rows, genuinely additive, so the
-  *      [[AdditiveDeltaState]] replay/compaction/crash contract
+  *      [[DeltaStore]] replay/compaction/crash contract
   *      applies verbatim (plain append idempotence; no pre-batch read);
   *   2. the state is ¦types¦·¦days¦-bounded regardless of event
   *      volume — per-batch cost scales with the batch, the fold with
@@ -27,7 +27,7 @@ import graft.queries.Analytics
 class StreamingDailyCountsJob(spark: SparkSession, statePath: String,
                               compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "daily_counts", Seq("event_type", "day"), Seq("n_events"), compactEvery)
 
   /** One micro-batch of event rows (needs `event_type`, `ts`). */

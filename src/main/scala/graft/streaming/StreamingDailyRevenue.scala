@@ -13,7 +13,7 @@ import graft.queries.Analytics
   * the revenue stack.
   *
   * Every column is additive (counts and integer cents), so the
-  * [[AdditiveDeltaState]] contract applies verbatim; the faces are
+  * [[DeltaStore]] contract applies verbatim; the faces are
   * [[Analytics.rollingRevenueFace]] / [[Analytics.monthlyGrowthFace]]
   * — the batch entries' own projections — so streamed == batch is
   * structural and exact (no FP residue: the cents quantize at the
@@ -22,7 +22,7 @@ import graft.queries.Analytics
 class StreamingDailyRevenueJob(spark: SparkSession, statePath: String,
                                compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "daily_revenue", Seq("priority", "day"), Seq("n_orders", "cents"), compactEvery)
 
   /** One micro-batch of order rows (o_orderpriority, o_orderdate,

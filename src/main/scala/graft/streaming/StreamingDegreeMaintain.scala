@@ -24,7 +24,7 @@ import graft.cdc.ParquetUpsertSink
   *     into a dirty bucket, so the check equals one against the full
   *     set at ¦dirty buckets¦ cost);
   *   - only genuinely-new edges' endpoints fold into the degree state,
-  *     an [[AdditiveDeltaState]] of (node, d_deg) deltas — degree
+  *     a [[DeltaStore]] of (node, d_deg) deltas — degree
   *     increments are abelian once the set-novelty check has fired.
   *
   * Crash discipline (the [[StreamingTopKMaintainJob]] rules — the
@@ -51,7 +51,7 @@ class StreamingDegreeMaintainJob(
 
   private[graft] val edgeSink =
     new ParquetUpsertSink(spark, s"$statePath/edges", Seq("src", "dst"), numBuckets)
-  private[graft] val degrees = new AdditiveDeltaState(spark, statePath,
+  private[graft] val degrees = DeltaStore.additive(spark, statePath,
     "degree", Seq("node"), Seq("d_deg"), compactEvery)
 
   /** Canonical (src < dst) distinct pairs of one batch of complete

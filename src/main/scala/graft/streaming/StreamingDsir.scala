@@ -33,7 +33,7 @@ import graft.functions.TextFunctions
   *      per-batch overwrite;
   *   3. the monitor a selection pipeline watches — per-class doc count
   *      and mean log importance weight — folds in an
-  *      [[AdditiveDeltaState]] keyed by is_target, with the weight
+  *      [[DeltaStore]] keyed by is_target, with the weight
   *      mass carried as an EXACT integer (the 4dp-rounded weight ×
   *      10⁴), so the additive replay/compaction/crash contract applies
   *      verbatim and a raw-pool mean drifting toward the target mean
@@ -53,7 +53,7 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
   private def fs = new Path(modelPath)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[graft] val summary = new AdditiveDeltaState(spark, modelPath,
+  private[graft] val summary = DeltaStore.additive(spark, modelPath,
     "dsir_summary", Seq("is_target"), Seq("n_docs", "sum_logw_q"), compactEvery)
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)

@@ -16,7 +16,7 @@ import graft.cdc.{AggMaintain, CdcOps, JoinMaintain, ParquetUpsertSink}
   *     a batch rewrites dirty buckets, never the world);
   *   - the per-fk aggregate of B (the auxiliary index the A-side delta
   *     joins) and the view itself are FOLDS of per-batch delta rows in
-  *     [[AdditiveDeltaState]]s — once a delta is computed, applying it
+  *     [[DeltaStore]]s — once a delta is computed, applying it
   *     is pure addition, so the fold machinery (batch-dir replay
   *     skip, marker-guarded compaction, two-rename swap) carries all
   *     the operability.
@@ -26,7 +26,7 @@ import graft.cdc.{AggMaintain, CdcOps, JoinMaintain, ParquetUpsertSink}
   * that recomputed one after the state advanced would retract images
   * that were never added. Two rules make every crash point converge:
   *
-  *   1. deltas are persisted with [[AdditiveDeltaState.appendOnce]]
+  *   1. deltas are persisted with [[DeltaStore.appendOnce]]
   *      (first durable write wins; the delta expression is not even
   *      evaluated on a replay that finds it), and
   *   2. the batch's steps are ordered so each step's INPUTS are only
@@ -54,11 +54,11 @@ class StreamingJoinMaintainJob(
     new ParquetUpsertSink(spark, s"$statePath/a_state", Seq(aKey), numBuckets)
   private[graft] val bSink =
     new ParquetUpsertSink(spark, s"$statePath/b_state", Seq(bKey), numBuckets)
-  private[graft] val idx = new AdditiveDeltaState(spark, statePath, "idx",
+  private[graft] val idx = DeltaStore.additive(spark, statePath, "idx",
     Seq("grp"), Seq("d_n", "d_cents"), compactEvery)
-  private[graft] val viewA = new AdditiveDeltaState(spark, statePath, "view_a",
+  private[graft] val viewA = DeltaStore.additive(spark, statePath, "view_a",
     Seq("grp"), Seq("d_n", "d_cents"), compactEvery)
-  private[graft] val viewB = new AdditiveDeltaState(spark, statePath, "view_b",
+  private[graft] val viewB = DeltaStore.additive(spark, statePath, "view_b",
     Seq("grp"), Seq("d_n", "d_cents"), compactEvery)
 
   private def emptyState(batch: DataFrame, keyCols: Seq[String],

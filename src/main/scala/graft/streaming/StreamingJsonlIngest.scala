@@ -21,7 +21,7 @@ import graft.sources.CorpusIO
   *     rows in place instead of appending duplicates (the
   *     batch-id-scoped-output discipline every exactly-once file sink
   *     uses);
-  *   - counters: [[AdditiveDeltaState]]'s batchId-keyed appends.
+  *   - counters: [[DeltaStore]]'s batchId-keyed appends.
   *
   * At 100 TB nothing here is driver-sized: the parse is a map-side
   * projection, the quarantine split a filter, the writes partitioned;
@@ -31,7 +31,7 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
                               quarantinePath: String, statsPath: String,
                               compactEvery: Int = 16) {
 
-  private[graft] val stats = new AdditiveDeltaState(spark, statsPath,
+  private[graft] val stats = DeltaStore.additive(spark, statsPath,
     "ingest_stats", Seq("k"), Seq("n"), compactEvery)
 
   /** One micro-batch of PERMISSIVE-parsed rows (data cols +

@@ -24,7 +24,7 @@ import graft.similarity.KMeans
   *      (vec_id, cluster_id, dist) rows under `assign/batch=<id>`,
   *      idempotent under at-least-once replay by per-batch overwrite;
   *   3. per-cluster population and inertia (Σ dist) fold in an
-  *      [[AdditiveDeltaState]] — both are sums over rows of a pure
+  *      [[DeltaStore]] — both are sums over rows of a pure
   *      per-batch function (the centroids never change), so the
   *      additive replay/compaction/crash contract applies verbatim.
   *      The read face is the drift monitor a serving pipeline
@@ -43,7 +43,7 @@ class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
   private def fs = new Path(modelPath)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[graft] val stats = new AdditiveDeltaState(spark, modelPath,
+  private[graft] val stats = DeltaStore.additive(spark, modelPath,
     "cluster_stats", Seq("cluster_id"), Seq("n", "sdist"), compactEvery)
 
   /** The persisted model, once the bootstrap batch has committed it. */

@@ -9,7 +9,7 @@ import graft.functions.TextFunctions
   * temperature-mixture planner continuously as the corpus ingests.
   *
   * Both measures are additive when each document arrives exactly once,
-  * so the [[AdditiveDeltaState]] contract applies verbatim; state is
+  * so the [[DeltaStore]] contract applies verbatim; state is
   * sources-sized (tens of rows) regardless of corpus volume, and the
   * per-batch cost is the batch's own tokenization. The read face is
   * [[TextFunctions.mixPlanFace]] — the batch entry's own arithmetic —
@@ -22,7 +22,7 @@ import graft.functions.TextFunctions
 class StreamingMixPlanJob(spark: SparkSession, statePath: String,
                           compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "mix_strata", Seq("source"), Seq("n_docs", "tokens"), compactEvery)
 
   /** One micro-batch of document rows (source, text) — each doc

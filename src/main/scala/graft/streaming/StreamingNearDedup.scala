@@ -30,22 +30,21 @@ import graft.dedup.Dedup
   * collapse into the within-batch set). Replay stays idempotent ACROSS
   * compaction too — the storage substrate (format marker, per-batch
   * appends, `_compacted_through` marker, crash-safe two-rename fold)
-  * is [[BatchedParquetIndex]], shared with the perceptual-hash face
+  * is [[DeltaStore]], shared with the perceptual-hash face
   * ([[StreamingPhashDedupJob]]).
   */
 class StreamingNearDedupJob(spark: SparkSession, indexPath: String,
                             onCandidates: (DataFrame, Long) => Unit,
                             compactEvery: Int = 16) {
 
-  private val index = new BatchedParquetIndex(spark, indexPath,
-    subdir = "bands", markerName = "_band_format", format = Dedup.BandFormat,
-    columns = Seq("doc_id", "band_id", "band_hash"), compactEvery = compactEvery)
+  private val index = new DeltaStore(spark, indexPath, "bands",
+    Seq("doc_id", "band_id", "band_hash"), compactEvery, identity)
 
   private[graft] def compactedThrough(): Long = index.compactedThrough()
   private[graft] def batchDirCount(): Int = index.batchDirCount()
 
   /** The persisted band index, if any batch has committed one yet. */
-  def readIndex(): Option[DataFrame] = index.readIndex()
+  def readIndex(): Option[DataFrame] = index.readDeltas()
 
   def compact(): Unit = index.compact()
 
@@ -56,7 +55,7 @@ class StreamingNearDedupJob(spark: SparkSession, indexPath: String,
     * scheduler).
     */
   def processBatch(docs: DataFrame, batchId: Long): Unit = {
-    index.checkOrWriteFormat()
+    index.checkOrWriteFormat("_band_format", Dedup.BandFormat)
     val newBands = Dedup.lshBandIndex(docs).localCheckpoint(true)
     val candidates = readIndex() match {
       case Some(idx) => Dedup.incrementalCandidatesFromBands(idx, newBands)

@@ -12,7 +12,7 @@ import graft.similarity.Pca
   *      batch face runs, emitting its (i, j, s) moment delta — second-
   *      order moments are sums over rows, so the delta is a pure
   *      function of the batch (vectors never span batches);
-  *   2. deltas fold in an [[AdditiveDeltaState]] keyed (i, j) — the
+  *   2. deltas fold in a [[DeltaStore]] keyed (i, j) — the
   *      vocabulary/bigram replay, compaction and crash contract carries
   *      over verbatim because the state is genuinely additive (plain
   *      `append` idempotence suffices; no pre-batch read anywhere);
@@ -31,7 +31,7 @@ import graft.similarity.Pca
 class StreamingPcaMomentsJob(spark: SparkSession, statePath: String,
                              compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "moments", Seq("i", "j"), Seq("s"), compactEvery)
 
   def processBatch(batch: DataFrame, batchId: Long): Unit =

@@ -25,7 +25,7 @@ import graft.multimodal.BinaryPipeline
   * [[BinaryPipeline.phashDedup]] on the full corpus — streamed ==
   * batch, structurally.
   *
-  * Storage is the shared [[BatchedParquetIndex]] substrate, so replay
+  * Storage is the shared [[DeltaStore]] substrate, so replay
   * idempotence, the `_compacted_through` skip, crash-safe compaction
   * and the hash-family format marker are inherited verbatim from the
   * MinHash face's certified machinery. Per-batch cost scales with the
@@ -35,17 +35,14 @@ class StreamingPhashDedupJob(spark: SparkSession, indexPath: String,
                              onPairs: (DataFrame, Long) => Unit,
                              compactEvery: Int = 16) {
 
-  private val index = new BatchedParquetIndex(spark, indexPath,
-    subdir = "hashes", markerName = "_phash_format",
-    format = BinaryPipeline.PhashFormat,
-    columns = Seq("item_id", "phash_hi", "phash_lo"),
-    compactEvery = compactEvery)
+  private val index = new DeltaStore(spark, indexPath, "hashes",
+    Seq("item_id", "phash_hi", "phash_lo"), compactEvery, identity)
 
   private[graft] def compactedThrough(): Long = index.compactedThrough()
   private[graft] def batchDirCount(): Int = index.batchDirCount()
 
   /** The persisted hash index, if any batch has committed one yet. */
-  def readIndex(): Option[DataFrame] = index.readIndex()
+  def readIndex(): Option[DataFrame] = index.readDeltas()
 
   def compact(): Unit = index.compact()
 
@@ -53,7 +50,7 @@ class StreamingPhashDedupJob(spark: SparkSession, indexPath: String,
     * perceptual pairs (within + vs-corpus), append its hashes.
     */
   def processBatch(images: DataFrame, batchId: Long): Unit = {
-    index.checkOrWriteFormat()
+    index.checkOrWriteFormat("_phash_format", BinaryPipeline.PhashFormat)
     val hashes = BinaryPipeline.phashTable(images).localCheckpoint(true)
     val pairs = readIndex() match {
       case Some(idx) =>

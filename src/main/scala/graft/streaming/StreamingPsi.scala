@@ -19,7 +19,7 @@ import graft.queries.Analytics
   *   2. every batch (including the bootstrap) buckets itself map-side
   *      against the broadcast boundary table and appends its
   *      (event_type, bucket, n) counts — additive when each event
-  *      arrives once, so the [[AdditiveDeltaState]] contract applies
+  *      arrives once, so the [[DeltaStore]] contract applies
   *      verbatim; state is ≤ 10·¦types¦ rows;
   *   3. [[readPsi]] folds reference-vs-maintained counts through the
   *      SAME smoothed-PSI projection as the batch entry. Directly
@@ -35,7 +35,7 @@ class StreamingPsiJob(spark: SparkSession, modelPath: String,
   private def fs = new Path(modelPath)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[graft] val state = new AdditiveDeltaState(spark, modelPath,
+  private[graft] val state = DeltaStore.additive(spark, modelPath,
     "psi_counts", Seq("event_type", "bucket"), Seq("n"), compactEvery)
 
   /** The persisted boundary table, once bootstrapped. */

@@ -12,7 +12,7 @@ import graft.functions.TextFunctions
   *
   * The batch entry's micro-averaged design is exactly what makes it
   * maintainable: every slice metric is a ratio of ADDITIVE integer
-  * sums, so the [[AdditiveDeltaState]] contract applies verbatim
+  * sums, so the [[DeltaStore]] contract applies verbatim
   * (per-batch deltas are batch-sized, the fold is |lang|·|source|-
   * bounded, replay/compaction/crash discipline inherited), and the
   * read face is [[TextFunctions.readabilityFace]] — the SAME ratio
@@ -23,7 +23,7 @@ import graft.functions.TextFunctions
 class StreamingReadabilityJob(spark: SparkSession, statePath: String,
                               compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "readability", Seq("lang", "source"), Seq("n_docs", "t", "s", "c"), compactEvery)
 
   /** One micro-batch of document rows (needs lang, source, text). */

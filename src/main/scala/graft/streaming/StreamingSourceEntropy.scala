@@ -10,7 +10,7 @@ import graft.functions.TextFunctions
   * ([[TextFunctions.sourceLangEntropy]]).
   *
   * Per-(source, lang) doc counts are additive when each document
-  * arrives exactly once, so the [[AdditiveDeltaState]] contract
+  * arrives exactly once, so the [[DeltaStore]] contract
   * applies verbatim; state is (sources × langs)-sized — dims-scale,
   * the smallest state in the streaming family. The read face folds the
   * maintained counts through the SAME entropy projection as the batch
@@ -24,7 +24,7 @@ import graft.functions.TextFunctions
 class StreamingSourceEntropyJob(spark: SparkSession, statePath: String,
                                 compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "source_lang", Seq("source", "lang"), Seq("c"), compactEvery)
 
   /** One micro-batch of document rows (source, lang, ...) — each doc

@@ -10,7 +10,7 @@ import graft.functions.TextFunctions
   *
   * Both measures are additive when each document arrives exactly once
   * (n sums term frequencies, n_docs counts contributing docs), so the
-  * [[AdditiveDeltaState]] contract applies verbatim; state is
+  * [[DeltaStore]] contract applies verbatim; state is
   * vocabulary-sized regardless of corpus volume, per-batch cost is
   * the batch's own tokenization. The read faces are
   * [[TextFunctions.vocabFace]] / [[TextFunctions.zipfFace]] — the
@@ -20,7 +20,7 @@ import graft.functions.TextFunctions
 class StreamingTokenStatsJob(spark: SparkSession, statePath: String,
                              compactEvery: Int = 16) {
 
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "token_stats", Seq("token"), Seq("n", "n_docs"), compactEvery)
 
   /** One micro-batch of document rows (doc_id, text) — each doc

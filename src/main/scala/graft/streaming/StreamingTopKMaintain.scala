@@ -15,7 +15,7 @@ import graft.cdc.{AggMaintain, CdcOps, ParquetUpsertSink}
   *   - the base state lives in a [[ParquetUpsertSink]] (bucketed; a
   *     batch rewrites dirty buckets, never the world);
   *   - the support relation is a FOLD of per-batch (g, v, d_n) deltas
-  *     in an [[AdditiveDeltaState]] — support counts form an abelian
+  *     in a [[DeltaStore]] — support counts form an abelian
   *     group, so once a delta is computed, applying it is pure
   *     addition and the fold machinery (batch-dir replay skip,
   *     marker-guarded compaction, two-rename swap) carries the
@@ -24,7 +24,7 @@ import graft.cdc.{AggMaintain, CdcOps, ParquetUpsertSink}
   * Crash discipline (the [[StreamingJoinMaintainJob]] rules, collapsed
   * to the single-table case): the support delta is computed AGAINST
   * PRE-BATCH STATE, so it is persisted with
-  * [[AdditiveDeltaState.appendOnce]] (first durable write wins) and
+  * [[DeltaStore.appendOnce]] (first durable write wins) and
   * the batch's two steps are ordered so each step's inputs are only
   * mutated by later steps:
   *
@@ -53,7 +53,7 @@ class StreamingTopKMaintainJob(
 
   private[graft] val sink =
     new ParquetUpsertSink(spark, s"$statePath/state", Seq(key), numBuckets)
-  private[graft] val support = new AdditiveDeltaState(spark, statePath,
+  private[graft] val support = DeltaStore.additive(spark, statePath,
     "support", Seq("g", "v"), Seq("d_n"), compactEvery)
 
   /** Before-image substrate for the delta: the committed state

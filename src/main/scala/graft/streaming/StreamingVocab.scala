@@ -24,29 +24,14 @@ import graft.functions.TextFunctions
   * cost scales with the batch, state grows with the VOCABULARY (not
   * the corpus), and nightly full recounts disappear. The replay /
   * compaction / crash-recovery contract (batch=<id> overwrite,
-  * `_compacted_through` marker, two-rename displaced-live swap) lives
-  * in [[AdditiveDeltaState]], shared with [[StreamingBigramJob]] since
-  * the bigram job generalized it to multiple states per job.
+  * `_compacted_through` marker, two-rename displaced-live swap, and
+  * adoption of a pre-upgrade crash left at the shared `_pre_compact`
+  * slot) lives in [[DeltaStore]].
   */
 class StreamingVocabJob(spark: SparkSession, statePath: String,
                         compactEvery: Int = 16) {
 
-  // pre-r7 layouts used the unsuffixed crash-recovery slot
-  // `_pre_compact`: a state dir left in the mid-compaction crash window
-  // by the old code must be restored, not silently abandoned (which
-  // would reset the vocabulary to empty with no error)
-  locally {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacy = new org.apache.hadoop.fs.Path(s"$statePath/_pre_compact")
-    val live = new org.apache.hadoop.fs.Path(s"$statePath/vocab")
-    if (fs.exists(legacy) && !fs.exists(live)) {
-      if (!fs.rename(legacy, live)) throw new IllegalStateException(
-        s"could not restore legacy $legacy to $live")
-    }
-  }
-
-  private[graft] val state = new AdditiveDeltaState(spark, statePath,
+  private[graft] val state = DeltaStore.additive(spark, statePath,
     "vocab", Seq("token"), Seq("n", "n_docs"), compactEvery)
 
   /** Highest batch id folded into `batch=0`; -1 before any compaction. */
@@ -78,7 +63,7 @@ class StreamingVocabJob(spark: SparkSession, statePath: String,
 
   /** One micro-batch: append the batch's delta (replay-idempotent,
     * skipped at or below the compaction marker — see
-    * [[AdditiveDeltaState.append]]).
+    * [[DeltaStore.append]]).
     */
   def processBatch(docs: DataFrame, batchId: Long): Unit =
     state.append(

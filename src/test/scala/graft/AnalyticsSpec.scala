@@ -811,6 +811,28 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     assert(segs.exists(_._1.startsWith("1")))
   }
 
+  test("rfm segment averages round half-up exactly where the double average sits below a half-cent") {
+    import spark.implicits._
+    // eight one-order customers: spend falls and recency grows with
+    // custkey, so every ntile pairs customers (1,2), (3,4), (5,6),
+    // (7,8) into segments 111..444. Each pair's exact average spend
+    // ends in a half-cent (40.01 and 38.16 average 39.085), but the
+    // double average is 39.084999999999994, which round(avg, 2) takes
+    // down to 39.08
+    val dir = java.nio.file.Files.createTempDirectory("rfm-boundary").toString
+    val spend = Seq(40.01, 38.16, 30.02, 28.11, 20.02, 18.11, 10.01, 8.04)
+    val ref = java.time.LocalDate.parse("1998-08-02")
+    spend.zipWithIndex.map { case (p, i) =>
+      (i.toLong + 1, i.toLong + 1, p,
+        java.sql.Timestamp.valueOf(ref.minusDays(i).atStartOfDay()))
+    }.toDF("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+      .write.parquet(s"$dir/orders.parquet")
+    val got = Analytics.ordersRfm(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    assert(got === Seq(("111", 2L, 39.09, 0.5), ("222", 2L, 29.07, 2.5),
+      ("333", 2L, 19.07, 4.5), ("444", 2L, 9.03, 6.5)))
+  }
+
   test("trend slope equals a driver-side least-squares fit over the dense grid") {
     val grid = Analytics.gapFillDaily(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))

@@ -109,13 +109,12 @@ class StreamingPhashDedupSpec extends AnyFunSuite with SparkSpec {
 
   test("two index families at one root: a crashed compaction never crosses subdirs") {
     import spark.implicits._
-    import graft.streaming.BatchedParquetIndex
+    import graft.streaming.DeltaStore
     val root = java.nio.file.Files.createTempDirectory("bpi-collide").toString
-    val bands = new BatchedParquetIndex(spark, root, subdir = "bands",
-      markerName = "_band_format", format = "fmt-a", columns = Seq("doc_id", "k"))
-    val hashes = new BatchedParquetIndex(spark, root, subdir = "hashes",
-      markerName = "_hash_format", format = "fmt-b", columns = Seq("doc_id", "k"))
-    bands.checkOrWriteFormat(); hashes.checkOrWriteFormat()
+    val bands = new DeltaStore(spark, root, "bands", Seq("doc_id", "k"), 16, identity)
+    val hashes = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
+    bands.checkOrWriteFormat("_band_format", "fmt-a")
+    hashes.checkOrWriteFormat("_hash_format", "fmt-b")
     bands.append(Seq((1L, 10L)).toDF("doc_id", "k"), 0L)
     hashes.append(Seq((2L, 20L)).toDF("doc_id", "k"), 0L)
     // simulate the bands family crashing inside compact() between the
@@ -124,23 +123,22 @@ class StreamingPhashDedupSpec extends AnyFunSuite with SparkSpec {
     assert(bandsLive.renameTo(new java.io.File(s"$root/_pre_compact_bands")),
       "fixture: displace the bands live dir")
     // the OTHER family must neither adopt nor disturb the displaced dir
-    val hs = hashes.readIndex().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val hs = hashes.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(hs === Some(Set((2L, 20L))), "hashes family reads only its own rows")
     assert(new java.io.File(s"$root/_pre_compact_bands").exists(),
       "hashes recovery must not consume the bands family's staging dir")
     // the bands family recovers its own displaced index
-    val bs = bands.readIndex().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val bs = bands.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(bs === Some(Set((1L, 10L))), "bands family restores its displaced rows")
     assert(!new java.io.File(s"$root/_pre_compact_bands").exists())
   }
 
   test("index recovers a pre-upgrade crash left at the legacy _pre_compact slot") {
     import spark.implicits._
-    import graft.streaming.BatchedParquetIndex
+    import graft.streaming.DeltaStore
     val root = java.nio.file.Files.createTempDirectory("bpi-legacy").toString
-    val idx = new BatchedParquetIndex(spark, root, subdir = "hashes",
-      markerName = "_hash_format", format = "fmt-a", columns = Seq("doc_id", "k"))
-    idx.checkOrWriteFormat()
+    val idx = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
+    idx.checkOrWriteFormat("_hash_format", "fmt-a")
     idx.append(Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "k"), 0L)
     idx.compact()
     // simulate a crash that happened BEFORE the staging dirs were
@@ -151,9 +149,8 @@ class StreamingPhashDedupSpec extends AnyFunSuite with SparkSpec {
       "fixture: displace the live dir to the legacy slot")
     // a fresh (post-upgrade) instance must restore it — silently
     // reading the index as empty would lose every pre-crash row
-    val upgraded = new BatchedParquetIndex(spark, root, subdir = "hashes",
-      markerName = "_hash_format", format = "fmt-a", columns = Seq("doc_id", "k"))
-    val rows = upgraded.readIndex().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val upgraded = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
+    val rows = upgraded.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(rows === Some(Set((1L, 10L), (2L, 20L))),
       "legacy crash-window index must be restored, not reset")
     assert(live.exists() && !new java.io.File(s"$root/_pre_compact").exists(),

@@ -430,6 +430,37 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(job.readCodes().get.count() === total + 1)
   }
 
+  test("ANN ingest restores a codes dir displaced to the unnamespaced _pre_compact slot") {
+    import spark.implicits._
+    import graft.streaming.StreamingAnnIngestJob
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ann-legacy").toString
+    val job = new StreamingAnnIngestJob(spark, s"$tmp/index", compactEvery = 64)
+    val embs = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect()
+    val (b1, b2) = embs.splitAt(math.max(embs.length / 2, 1))
+    job.processBatch(b1.toSeq.toDF("vec_id", "embedding"), 0L)
+    job.processBatch(b2.toSeq.toDF("vec_id", "embedding"), 1L)
+    job.compact()
+    val before = job.readCodes().get.collect().map(_.toString).toSet
+    assert(before.size === embs.length)
+
+    // the crash window of a compaction under the layout that staged the
+    // code table at the shared `_pre_compact` name: the live dir sits
+    // displaced there and no `codes` dir exists
+    val live = new java.io.File(s"$tmp/index/codes")
+    val legacy = new java.io.File(s"$tmp/index/_pre_compact")
+    assert(live.renameTo(legacy), "test setup: displace the live dir to the legacy slot")
+
+    val restarted = new StreamingAnnIngestJob(spark, s"$tmp/index", compactEvery = 64)
+    assert(restarted.readCodes().get.collect().map(_.toString).toSet === before,
+      "the displaced code table must be restored, not read as empty")
+    assert(live.exists() && !legacy.exists(), "restore must be by rename")
+    assert(restarted.compactedThrough() === 1L,
+      "the folded-through marker travels with the restored dir")
+  }
+
   test("streaming vocabulary equals the batch token_vocab and survives replay across compaction") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
