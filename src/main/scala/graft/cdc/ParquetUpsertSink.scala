@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.sources.LocalFs
 
 /** Keyed upsert sink over bucket-partitioned parquet — the engine's
   * stand-in for the reference's Delta table
@@ -26,6 +27,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                             highest e wins)
   *     v<e>-<attempt>/bucket=<b>/part-N.parquet  immutable data written
   *                                               at epoch e
+  *     _tmp-manifest-<e>-<attempt>  an attempt's manifest before its
+  *                                  publishing rename
   * }}}
   *
   * Commit protocol: each merge writes its output to a FRESH per-attempt
@@ -52,6 +55,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * of dirty buckets, not the batch size: with 64 buckets over 20k keys
   * a 10-key batch rewrites about 2.9k rows (~0.3% of them changed),
   * and a 100-key batch already dirties about 45 of the 64 buckets.
+  * Each dirty bucket is also one file written — a parquet file, its
+  * `.crc` and its bucket dir — and that cost is paid per dirty bucket
+  * whatever its row count. Written through [[graft.sources.LocalFs]]
+  * it is about 5 ms a file (4 vCPUs: 0.32 s for 9.5 files, 0.56 s for
+  * 64); through Hadoop's stock local file system without `libhadoop`
+  * each one forks three `chmod` processes (file, `.crc`, dir), about
+  * 30 ms a file (0.55 s, 2.25 s).
   *
   * Read path: the committed manifest is the only file index. Every read
   * (and the merge's base read) scans the bucket directories a manifest
@@ -69,7 +79,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
   private def bucketCol = pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("bucket")
 
   private def root = new Path(statePath)
-  private def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private lazy val fs: FileSystem = LocalFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
 
   private val ManifestRe = """_manifest\.v(\d+)""".r
 
@@ -316,10 +326,11 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     if (fs.exists(new Path(root, s"_manifest.v$epoch")))
       throw new IllegalStateException(
         s"epoch $epoch already committed at $statePath (concurrent writer?)")
-    val versionDir = s"v$epoch-${java.util.UUID.randomUUID().toString.take(8)}"
+    val attempt = java.util.UUID.randomUUID().toString.take(8)
+    val versionDir = s"v$epoch-$attempt"
     merged.withColumn("bucket", bucketCol)
       .repartition(col("bucket"))
-      .write.mode("overwrite")
+      .write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("bucket")
       .parquet(s"$statePath/$versionDir")
     // which dirty buckets actually produced rows?
@@ -329,7 +340,9 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       }.toSet
     val entries = (previous -- dirty) ++
       written.filter(dirty.contains).map(b => b -> s"$versionDir/bucket=$b")
-    val tmp = new Path(root, s"_tmp-manifest-$epoch")
+    // staged under the attempt's own name: a writer racing this epoch
+    // can neither overwrite it nor get it published as its own
+    val tmp = new Path(root, s"_tmp-manifest-$epoch-$attempt")
     val out = fs.create(tmp, true)
     val metaLines = s"#schema\t${merged.schema.json}\n" +
       txn.fold("") { case (q, b) => s"#txn\t$q\t$b\n" }
@@ -358,6 +371,10 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     val referenced: Set[String] = retained
       .flatMap { case (e, p) => readManifestAt(e, p).buckets.values }.toSet
     val VersionRe = """v(\d+)(?:-[0-9a-f]+)?""".r
+    // a staging manifest of this epoch or an older one can only be a
+    // crashed or losing attempt's (this epoch is taken); unsuffixed, a
+    // build's that staged every attempt at one shared name
+    val StagedManifestRe = """_tmp-manifest-(\d+)(?:-[0-9a-f]+)?""".r
     fs.listStatus(root).toSeq.foreach { st =>
       val name = st.getPath.getName
       val dirEpoch = name match {
@@ -375,6 +392,8 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       }
       name match {
         case ManifestRe(e) if e.toLong <= epoch - retainEpochs =>
+          fs.delete(st.getPath, false)
+        case StagedManifestRe(e) if e.toLong <= epoch =>
           fs.delete(st.getPath, false)
         case _ => ()
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
+import graft.sources.LocalFs
 
 /** A persisted, append-per-batch parquet delta store with idempotent
   * replay and crash-safe compaction — the one storage substrate of the
@@ -31,6 +32,9 @@ import org.apache.spark.sql.functions.{col, sum}
   * a replay that lands after one store's compaction but before
   * another's is skipped exactly where it was folded.
   *
+  * Every file (appends, the compacted fold, markers) is written through
+  * [[graft.sources.LocalFs]], which sets modes without forking `chmod`.
+  *
   * Single-writer discipline: call [[append]]/[[appendOnce]]/[[compact]]
   * only from the stream's own foreachBatch callback.
   */
@@ -38,7 +42,7 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
                  columns: Seq[String], compactEvery: Int,
                  fold: DataFrame => DataFrame) {
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private lazy val fs = LocalFs.fileSystem(new Path(root), spark.sparkContext.hadoopConfiguration)
   private def liveDir = new Path(s"$root/$name")
   private def batchDir(batchId: Long) = new Path(liveDir, s"batch=$batchId")
   // staging slots are namespaced BY NAME: stores sharing one root must
@@ -142,7 +146,7 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
   private def write(delta: => DataFrame, batchId: Long, once: Boolean): Unit = {
     if (batchId > compactedThrough() &&
         !(once && fs.exists(new Path(batchDir(batchId), "_SUCCESS"))))
-      delta.write.mode("overwrite").parquet(batchDir(batchId).toString)
+      delta.write.options(LocalFs.writeOptions).mode("overwrite").parquet(batchDir(batchId).toString)
     if (batchDirCount() >= compactEvery) compact()
   }
 
@@ -157,7 +161,7 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
     // longer carries the original ids
     val foldedThrough = (compactedThrough() +: batchIds()).max
     fs.delete(stagedDir, true)
-    fold(d).write.parquet(new Path(stagedDir, "batch=0").toString)
+    fold(d).write.options(LocalFs.writeOptions).parquet(new Path(stagedDir, "batch=0").toString)
     writeText(new Path(stagedDir, compactedMarkerName), foldedThrough.toString)
     fs.delete(preCompactDir, true)
     if (!fs.rename(liveDir, preCompactDir)) throw new IllegalStateException(

@@ -640,6 +640,31 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     assert(recovered.filter(col("user_id") === 3).count() === 1)
   }
 
+  test("a crashed attempt's staging manifest is never read and is gone after the next commit") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-staged").toString
+    val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 4)
+    sink.merge(batchDf(Seq((1L, "c", 10L, 1L, "signup", 1.0))), 0)   // epoch 0
+    // a crashed epoch-1 attempt left its phantom data and its staged
+    // manifest; so did an older build, which staged at a shared name
+    Seq((9999L, "phantom", 0.0, 99L))
+      .toDF("user_id", "last_event_type", "last_value", "last_ts_ms")
+      .write.parquet(s"$tmp/state/v1-deadbeef/bucket=0")
+    val staged = Seq("_tmp-manifest-1-deadbeef", "_tmp-manifest-0").map(n => new java.io.File(s"$tmp/state/$n"))
+    staged.foreach(f => java.nio.file.Files.write(f.toPath,
+      "0\tv1-deadbeef/bucket=0\n".getBytes("UTF-8")))
+    assert(sink.retainedEpochs() === Seq(0L))
+    assert(sink.readState().filter(col("user_id") === 9999).count() === 0)
+
+    sink.merge(batchDf(Seq((2L, "c", 20L, 2L, "signup", 2.0))), 1)   // epoch 1
+    assert(sink.retainedEpochs() === Seq(0L, 1L))
+    assert(sink.readState().filter(col("user_id") === 9999).count() === 0)
+    assert(sink.readState().count() === 2)
+    assert(staged.forall(!_.exists), "stale staging manifests of older epochs are vacuumed")
+    assert(!new java.io.File(s"$tmp/state").list().exists(_.contains("_tmp-manifest-")),
+      "the commit's own staging manifest was renamed away")
+  }
+
   test("a racing writer at an already-published epoch fails before touching state") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-race").toString
