@@ -1,19 +1,20 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 import graft.sources.LocalFs
 
 /** A persisted, append-per-batch parquet delta store with idempotent
   * replay and crash-safe compaction — the one storage substrate of the
-  * streaming jobs (additive keyed states such as [[StreamingVocabJob]]'s
-  * vocabulary, the dedup jobs' band and hash indexes,
-  * [[StreamingAnnIngestJob]]'s code table). One instance == one live
-  * directory `root/name`:
+  * streaming jobs: additive keyed states (such as [[StreamingVocabJob]]'s
+  * vocabulary), indexes and code tables (the dedup jobs' band and hash
+  * indexes, [[StreamingAnnIngestJob]]'s codes), per-batch logs
+  * ([[DeltaStore.log]]) and, through [[DeltaStore.frozenModel]], the
+  * fit-once models. One instance == one live directory `root/name`:
   *
-  *   - rows append under `name/batch=<id>` (per-batch overwrite →
-  *     idempotent under at-least-once replay);
+  *   - rows append under `name/batch=<id>`, overwriting that dir, so a
+  *     replayed batch rewrites its own rows;
   *   - [[compact]] writes `fold(deltas)` as one `batch=0` plus a
   *     `_compacted_through` marker into a staged dir and publishes both
   *     by one rename, so marker and folded rows commit atomically;
@@ -24,16 +25,22 @@ import graft.sources.LocalFs
   *     restored by the next access ([[recoverIfNeeded]]), so no crash
   *     point loses rows.
   *
+  * A part (a `batch=<id>` dir, a model part) counts as written only
+  * once its `_SUCCESS` marker exists ([[DeltaStore.committed]]): a Spark
+  * write that crashed leaves its dir holding only `_temporary`, so a
+  * dir's existence is not a commit.
+  *
   * `fold` is what compaction applies and what [[state]] reads: a
   * per-key sum-combine for additive states ([[DeltaStore.additive]] —
   * sum-of-sums equals the sum, so compaction never changes the read),
-  * the identity for row sets (indexes, code tables). Each store has its
-  * OWN marker and staging slots, so several stores can share one root:
-  * a replay that lands after one store's compaction but before
+  * the identity for row sets (indexes, code tables, logs). Each store
+  * has its OWN marker and staging slots, so several stores can share one
+  * root: a replay that lands after one store's compaction but before
   * another's is skipped exactly where it was folded.
   *
-  * Every file (appends, the compacted fold, markers) is written through
-  * [[graft.sources.LocalFs]], which sets modes without forking `chmod`.
+  * Every file (appends, the compacted fold, markers, models) is written
+  * through [[graft.sources.LocalFs]], which sets modes without forking
+  * `chmod`.
   *
   * Single-writer discipline: call [[append]]/[[appendOnce]]/[[compact]]
   * only from the stream's own foreachBatch callback.
@@ -66,20 +73,21 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
     try out.write((text + "\n").getBytes("UTF-8")) finally out.close()
   }
 
-  /** Pin the family the rows were built with (`root/markerName`), so an
-    * engine upgrade that changes the hashing fails loudly and asks for
-    * a rebuild instead of silently joining old and new hashes into zero
-    * matches. Rows with no marker are refused too: stamping a store of
-    * unknown provenance would turn that loud failure into zero matches.
+  /** Pin what the rows were built with (`root/markerName`): the hash
+    * family of a dedup index, the geometry of a quantized one. A
+    * mismatch fails loudly and asks for a rebuild instead of silently
+    * joining old and new rows into zero matches. A store with rows but
+    * no marker is refused too (stamping a store of unknown provenance
+    * would turn that loud failure into zero matches), unless
+    * `stampUnmarked`, which stamps it.
     */
-  def checkOrWriteFormat(markerName: String, format: String): Unit = {
+  def checkOrWriteFormat(markerName: String, format: String, stampUnmarked: Boolean = false): Unit = {
     val marker = new Path(root, markerName)
     if (fs.exists(marker)) {
       val found = readText(marker)
       if (found != format) throw new IllegalStateException(
-        s"index at $root was built with '$found' but this engine " +
-          s"produces '$format' — rebuild the index")
-    } else if (readDeltas().isDefined) {
+        s"index at $root was built with '$found' but this job writes '$format' — rebuild the index")
+    } else if (!stampUnmarked && readDeltas().isDefined) {
       throw new IllegalStateException(
         s"index at $root has no format marker — rebuild it (or, " +
           s"if it is KNOWN to be '$format', write that to $markerName)")
@@ -105,22 +113,18 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
     if (fs.exists(m)) readText(m).toLong else -1L
   }
 
+  /** Ids of the committed `batch=<id>` dirs. */
   private def batchIds(): Seq[Long] = {
     recoverIfNeeded()
-    if (fs.exists(liveDir)) fs.listStatus(liveDir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-    else Nil
+    DeltaStore.committedBatches(fs, liveDir).map(_.getName.stripPrefix("batch=").toLong)
   }
 
   private[graft] def batchDirCount(): Int = batchIds().size
 
   /** The raw accumulated deltas, if any batch committed. */
-  def readDeltas(): Option[DataFrame] = {
-    recoverIfNeeded()
-    if (fs.exists(liveDir) && fs.listStatus(liveDir).nonEmpty)
-      Some(spark.read.parquet(liveDir.toString).select(columns.map(col): _*))
-    else None
-  }
+  def readDeltas(): Option[DataFrame] =
+    if (batchIds().isEmpty) None
+    else Some(spark.read.parquet(liveDir.toString).select(columns.map(col): _*))
 
   /** The folded state, if any batch committed. */
   def state(): Option[DataFrame] = readDeltas().map(fold)
@@ -134,10 +138,9 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
   def append(delta: DataFrame, batchId: Long): Unit = write(delta, batchId, once = false)
 
   /** Append with at-most-once COMPUTATION: if `batchId` is already
-    * folded (marker) or already durably written (`_SUCCESS` present —
-    * a crash mid-write leaves no `_SUCCESS`, so a partial dir is
-    * rewritten), the by-name `delta` is never evaluated. This is what
-    * a NON-additive producer needs: a delta computed against pre-batch
+    * folded (marker) or already committed (a crash mid-write leaves no
+    * `_SUCCESS`, so a partial dir is rewritten), the by-name `delta` is
+    * never evaluated. This is what a NON-additive producer needs: a delta computed against pre-batch
     * state would be recomputed WRONG on a replay that runs after the
     * state has already advanced, so the first durable write must win.
     */
@@ -145,8 +148,8 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
 
   private def write(delta: => DataFrame, batchId: Long, once: Boolean): Unit = {
     if (batchId > compactedThrough() &&
-        !(once && fs.exists(new Path(batchDir(batchId), "_SUCCESS"))))
-      delta.write.options(LocalFs.writeOptions).mode("overwrite").parquet(batchDir(batchId).toString)
+        !(once && DeltaStore.committed(fs, batchDir(batchId))))
+      delta.write.options(DeltaStore.writeOptions).mode("overwrite").parquet(batchDir(batchId).toString)
     if (batchDirCount() >= compactEvery) compact()
   }
 
@@ -161,7 +164,7 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
     // longer carries the original ids
     val foldedThrough = (compactedThrough() +: batchIds()).max
     fs.delete(stagedDir, true)
-    fold(d).write.options(LocalFs.writeOptions).parquet(new Path(stagedDir, "batch=0").toString)
+    fold(d).write.options(DeltaStore.writeOptions).parquet(new Path(stagedDir, "batch=0").toString)
     writeText(new Path(stagedDir, compactedMarkerName), foldedThrough.toString)
     fs.delete(preCompactDir, true)
     if (!fs.rename(liveDir, preCompactDir)) throw new IllegalStateException(
@@ -178,10 +181,53 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
 }
 
 object DeltaStore {
+  private val Success = "_SUCCESS"
+
+  /** [[LocalFs.writeOptions]], plus the `_SUCCESS` marker that
+    * [[committed]] reads, whatever the session's committer conf says.
+    */
+  private val writeOptions =
+    LocalFs.writeOptions + ("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "true")
+
+  /** Whether a Spark write of `dir` committed: its `_SUCCESS` marker is
+    * the job commit's last step.
+    */
+  private def committed(fs: FileSystem, dir: Path): Boolean = fs.exists(new Path(dir, Success))
+
+  /** The committed `batch=<id>` dirs under `dir`. */
+  private[graft] def committedBatches(fs: FileSystem, dir: Path): Seq[Path] =
+    Option(fs.globStatus(new Path(dir, s"batch=*/$Success"))).toSeq.flatten.map(_.getPath.getParent)
+
   /** An additive keyed state: `fold` is one sum-combine per key. */
   def additive(spark: SparkSession, root: String, name: String,
                keyCols: Seq[String], sumCols: Seq[String], compactEvery: Int): DeltaStore =
     new DeltaStore(spark, root, name, keyCols ++ sumCols, compactEvery,
       _.groupBy(keyCols.map(col): _*)
         .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*))
+
+  /** A per-batch log: one `batch=<id>` dir per batch, never compacted,
+    * so writing a batch costs that batch alone.
+    */
+  def log(spark: SparkSession, root: String, name: String, columns: Seq[String]): DeltaStore =
+    new DeltaStore(spark, root, name, columns, Int.MaxValue, identity)
+
+  /** A fit-once model whose parts live at `root/<part>`. It is present
+    * once every part has committed, and then frozen: each call reads
+    * it. Otherwise `fit` runs (`None`: nothing to fit from yet) and all
+    * its parts, in `parts` order, are written over whatever a crashed
+    * fit left. A dir written by a plain `df.write.parquet` carries
+    * `_SUCCESS`, so such a model is adopted as it is.
+    */
+  def frozenModel(spark: SparkSession, root: String, parts: String*)(
+      fit: => Option[Seq[DataFrame]]): Option[Seq[DataFrame]] = {
+    val dirs = parts.map(new Path(root, _))
+    val fs = LocalFs.fileSystem(new Path(root), spark.sparkContext.hadoopConfiguration)
+    def read = dirs.map(d => spark.read.parquet(d.toString))
+    if (dirs.forall(committed(fs, _))) Some(read)
+    else fit.map { frames =>
+      frames.zip(dirs).foreach { case (f, d) =>
+        f.write.options(writeOptions).mode("overwrite").parquet(d.toString) }
+      read
+    }
+  }
 }

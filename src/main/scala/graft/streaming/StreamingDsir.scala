@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.sources.LocalFs
 import graft.functions.TextFunctions
 
 /** Streaming DSIR scoring — the model-serving face of
@@ -15,8 +16,9 @@ import graft.functions.TextFunctions
   *      documents fits the λ table with the SAME
   *      [[TextFunctions.dsirTrain]] machinery as the batch face (a
   *      single-class model would be a division by the smoothing floor
-  *      dressed up as a fit) and persists it, immutable afterwards,
-  *      which is what makes every score replay-reproducible. A
+  *      dressed up as a fit) and persists it
+  *      ([[DeltaStore.frozenModel]]), immutable afterwards, which is
+  *      what makes every score replay-reproducible. A
   *      single-class (or zero-bigram) batch before bootstrap is SKIPPED
   *      — logged, counted in [[StreamingDsirJob.skippedBootstraps]],
   *      nothing scored or persisted — and bootstrap retries on the next
@@ -28,9 +30,8 @@ import graft.functions.TextFunctions
   *      model ([[TextFunctions.dsirScore]]: ≤1025-row broadcast join +
   *      one doc-keyed agg — never a historical rescan); bigram buckets
   *      the frozen model never saw fall back to the persisted
-  *      bucket = −1 default λ; per-doc weights append under
-  *      `weights/batch=<id>`, idempotent under at-least-once replay by
-  *      per-batch overwrite;
+  *      bucket = −1 default λ; per-doc weights append to the
+  *      `weights` log ([[DeltaStore.log]]);
   *   3. the monitor a selection pipeline watches — per-class doc count
   *      and mean log importance weight — folds in an
   *      [[DeltaStore]] keyed by is_target, with the weight
@@ -47,11 +48,11 @@ import graft.functions.TextFunctions
 class StreamingDsirJob(spark: SparkSession, modelPath: String,
                        compactEvery: Int = 16) {
 
-  private def modelDir = s"$modelPath/lambda"
-  private def weightsDir = s"$modelPath/weights"
-  private def pendingDir = s"$modelPath/pending"
-  private def fs = new Path(modelPath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val pendingDir = new Path(modelPath, "pending")
+  private def model(fit: => Option[DataFrame]): Option[DataFrame] =
+    DeltaStore.frozenModel(spark, modelPath, "lambda")(fit.map(Seq(_))).map(_.head)
+  private val weights = DeltaStore.log(spark, modelPath, "weights",
+    Seq("doc_id", "is_target", "n_bigrams", "dsir_logw"))
 
   private[graft] val summary = DeltaStore.additive(spark, modelPath,
     "dsir_summary", Seq("is_target"), Seq("n_docs", "sum_logw_q"), compactEvery)
@@ -72,14 +73,13 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
     * frozen model, under the batch's ORIGINAL id. Runs at the start of
     * any batch that has both a model and a pending buffer, so every
     * crash window heals: weights rewrite byte-stable (the model is
-    * immutable), the summary delta re-appends idempotently (per-batch
-    * overwrite; a delta already folded by compaction is skipped by the
-    * marker), and the pending dir is deleted only after both commits.
+    * immutable), the summary delta re-appends idempotently, and the
+    * pending dir is deleted only after both commits.
     */
   private def drainPending(model: DataFrame): Unit = {
-    val pd = new Path(pendingDir)
-    if (!fs.exists(pd)) return
-    val dirs = fs.listStatus(pd).toSeq
+    val fs = LocalFs.fileSystem(pendingDir, spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(pendingDir)) return
+    val dirs = fs.listStatus(pendingDir).toSeq
       .filter(_.getPath.getName.startsWith("batch="))
       .sortBy(_.getPath.getName.stripPrefix("batch=").toLong)
     dirs.foreach { d =>
@@ -89,7 +89,7 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
       log.info(s"backfilled pre-bootstrap batch $bid from $pendingDir")
       fs.delete(d.getPath, true)
     }
-    fs.delete(pd, true)
+    fs.delete(pendingDir, true)
   }
 
   /** Shared weights+summary commit (weights first — see processBatch). */
@@ -98,7 +98,7 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
       .select(col("doc_id"), col("is_target"), col("n_bigrams"),
         round(col("logw_raw"), 4).as("dsir_logw"))
       .localCheckpoint(true)
-    scored.write.mode("overwrite").parquet(s"$weightsDir/batch=$batchId")
+    weights.append(scored, batchId)
     summary.append(
       scored.groupBy("is_target").agg(
         count(lit(1)).as("n_docs"),
@@ -107,9 +107,7 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
   }
 
   /** The persisted λ table, once the bootstrap batch has committed it. */
-  def readModel(): Option[DataFrame] =
-    if (fs.exists(new Path(modelDir))) Some(spark.read.parquet(modelDir))
-    else None
+  def readModel(): Option[DataFrame] = model(None)
 
   /** One micro-batch of documents(doc_id, text, lang, …): bootstrap
     * the model on first contact, score the batch against the persisted
@@ -118,9 +116,10 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
   def processBatch(docs: DataFrame, batchId: Long): Unit = {
     if (docs.isEmpty) return
     val rows = TextFunctions.dsirBucketRows(docs).localCheckpoint(true)
-    val model = readModel().getOrElse {
+    model {
       val classes = rows.select("is_target").distinct().count()
-      if (classes != 2) {
+      if (classes == 2) Some(TextFunctions.dsirTrain(rows))
+      else {
         // Skip, don't throw: the checkpointed batch replays
         // deterministically, so a refusal here would wedge the query
         // permanently on a first micro-batch that happens to be
@@ -128,35 +127,31 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
         // batch is BUFFERED (per-batch overwrite — replay-idempotent),
         // not dropped: the first post-bootstrap batch backfill-scores
         // it, so the checkpoint advancing past it loses nothing.
-        rows.write.mode("overwrite").parquet(s"$pendingDir/batch=$batchId")
+        rows.write.options(LocalFs.writeOptions).mode("overwrite")
+          .parquet(s"$pendingDir/batch=$batchId")
         skippedBootstraps += 1
         log.warn(
           s"batch $batchId: skipping DSIR bootstrap for $modelPath — " +
             (if (classes == 0) "no document produced a bigram"
              else "batch lacks both target and raw docs") +
             s" ($classes class(es)); buffered for backfill, retrying on the next batch")
-        return
+        None
       }
-      TextFunctions.dsirTrain(rows).write.mode("overwrite").parquet(modelDir)
-      spark.read.parquet(modelDir)
+    }.foreach { m =>
+      // drain BEFORE this batch's own commit: backfilled summary deltas
+      // keep their original (smaller) batch ids, which stays idempotent
+      // because no compaction can fold past an id before its delta's
+      // first append lands through this single-writer path
+      drainPending(m)
+      // weights first, summary second: a crash between the writes is
+      // healed by the replay overwriting both (the immutable model
+      // makes the recompute byte-stable)
+      commitScores(TextFunctions.dsirScore(rows, m), batchId)
     }
-    // drain BEFORE this batch's own commit: backfilled summary deltas
-    // keep their original (smaller) batch ids, which stays idempotent
-    // because no compaction can fold past an id before its delta's
-    // first append lands through this single-writer path
-    drainPending(model)
-    // weights first, summary second: a crash between the writes is
-    // healed by the replay overwriting both (the immutable model makes
-    // the recompute byte-stable)
-    commitScores(TextFunctions.dsirScore(rows, model), batchId)
   }
 
   /** Every score committed so far. Empty before the first commit. */
-  def readWeights(): DataFrame =
-    if (fs.exists(new Path(weightsDir)))
-      spark.read.parquet(weightsDir)
-        .select("doc_id", "is_target", "n_bigrams", "dsir_logw")
-    else emptyWeights
+  def readWeights(): DataFrame = weights.readDeltas().getOrElse(emptyWeights)
 
   /** The maintained selection-signal monitor:
     * (is_target, n_docs, mean_logw).

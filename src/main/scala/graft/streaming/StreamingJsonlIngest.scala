@@ -1,10 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField}
-import graft.sources.CorpusIO
+import graft.sources.{CorpusIO, LocalFs}
 
 /** Continuous JSONL landing-zone ingestion — the streaming face of
   * [[CorpusIO]]: a corpus-building pipeline's producers drop jsonl
@@ -40,8 +41,8 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
   def processBatch(parsed: DataFrame, batchId: Long): Unit = {
     val p = parsed.localCheckpoint(true)
     val (clean, bad) = CorpusIO.quarantine(p)
-    clean.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    bad.write.mode("overwrite").text(s"$quarantinePath/batch=$batchId")
+    clean.write.options(LocalFs.writeOptions).mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
+    bad.write.options(LocalFs.writeOptions).mode("overwrite").text(s"$quarantinePath/batch=$batchId")
     stats.append(
       clean.select(lit("clean").as("k"))
         .unionAll(bad.select(lit("corrupt").as("k")))
@@ -49,15 +50,13 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
       batchId)
   }
 
-  /** True when `path` exists with at least one batch subdirectory —
-    * before the first micro-batch commits, neither output root exists
-    * and a bare read would throw AnalysisException; the readers return
-    * an empty frame of the contract schema instead.
+  /** True when at least one batch subdirectory of `path` has
+    * committed — before that a bare read would throw AnalysisException;
+    * the readers return an empty frame of the contract schema instead.
     */
   private def hasBatches(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("batch="))
+    val p = new Path(path)
+    DeltaStore.committedBatches(LocalFs.fileSystem(p, spark.sparkContext.hadoopConfiguration), p).nonEmpty
   }
 
   private def emptyOf(schema: org.apache.spark.sql.types.StructType): DataFrame =

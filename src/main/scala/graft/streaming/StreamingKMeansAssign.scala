@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,15 +13,16 @@ import graft.similarity.KMeans
   *
   *   1. the FIRST non-empty batch trains the k-means model with the
   *      SAME Lloyd machinery as the batch face and persists the
-  *      centroid table — immutable afterwards, which is what makes
+  *      centroid table ([[DeltaStore.frozenModel]]) — immutable
+  *      afterwards, which is what makes
   *      every assignment replay-reproducible (a centroid table that
   *      drifted between attempts would assign a replayed batch
   *      differently);
   *   2. every batch assigns ITSELF map-side against the persisted
   *      broadcast centroids (fused codegen l2sq + partially-aggregated
   *      argmin — the batch face's plan) and appends its
-  *      (vec_id, cluster_id, dist) rows under `assign/batch=<id>`,
-  *      idempotent under at-least-once replay by per-batch overwrite;
+  *      (vec_id, cluster_id, dist) rows to the `assign` log
+  *      ([[DeltaStore.log]]);
   *   3. per-cluster population and inertia (Σ dist) fold in an
   *      [[DeltaStore]] — both are sums over rows of a pure
   *      per-batch function (the centroids never change), so the
@@ -38,19 +38,16 @@ import graft.similarity.KMeans
 class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
                                compactEvery: Int = 16) {
 
-  private def centroidsDir = s"$modelPath/centroids"
-  private def assignDir = s"$modelPath/assign"
-  private def fs = new Path(modelPath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def centroids(fit: => Option[DataFrame]): Option[DataFrame] =
+    DeltaStore.frozenModel(spark, modelPath, "centroids")(fit.map(Seq(_))).map(_.head)
+
+  private val assign = DeltaStore.log(spark, modelPath, "assign", Seq("vec_id", "cluster_id", "dist"))
 
   private[graft] val stats = DeltaStore.additive(spark, modelPath,
     "cluster_stats", Seq("cluster_id"), Seq("n", "sdist"), compactEvery)
 
   /** The persisted model, once the bootstrap batch has committed it. */
-  def readCentroids(): Option[DataFrame] =
-    if (fs.exists(new Path(centroidsDir)))
-      Some(spark.read.parquet(centroidsDir))
-    else None
+  def readCentroids(): Option[DataFrame] = centroids(None)
 
   /** One micro-batch of (vec_id, embedding) rows: bootstrap the model
     * on first contact, assign the batch against the persisted
@@ -62,20 +59,19 @@ class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
     // and permanently assign every later batch to nothing
     if (embs.isEmpty) return
     val widened = KMeans.widen(embs).localCheckpoint(true)
-    val cents = readCentroids().getOrElse {
+    val cents = centroids {
       val c = KMeans.train(widened)
       require(!c.isEmpty,
         s"refusing to persist an empty k-means model for $modelPath")
-      c.write.mode("overwrite").parquet(centroidsDir)
-      spark.read.parquet(centroidsDir)
-    }
+      Some(c)
+    }.get
     val assigned = KMeans.assign(widened, cents)
       .select(col("vec_id"), col("cluster_id"), col("dist"))
       .localCheckpoint(true)
     // assignments first, stats second: a crash between the two writes
     // is healed by the replay overwriting both (the immutable model
     // makes the recompute byte-stable)
-    assigned.write.mode("overwrite").parquet(s"$assignDir/batch=$batchId")
+    assign.append(assigned, batchId)
     stats.append(
       assigned.groupBy("cluster_id")
         .agg(count(lit(1)).as("n"), sum(col("dist")).as("sdist")),
@@ -83,10 +79,7 @@ class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
   }
 
   /** Everything assigned so far. Empty before the first commit. */
-  def readAssignments(): DataFrame =
-    if (fs.exists(new Path(assignDir)))
-      spark.read.parquet(assignDir).select("vec_id", "cluster_id", "dist")
-    else emptyAssignments
+  def readAssignments(): DataFrame = assign.readDeltas().getOrElse(emptyAssignments)
 
   /** The maintained drift monitor: (cluster_id, n_vecs, mean_dist). */
   def readStats(): DataFrame = stats.state() match {

@@ -5,17 +5,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.similarity.Ann
+import graft.sources.LocalFs
 
 /** Streaming k-NN-graph maintenance — the continuous face of
   * [[graft.similarity.Ann.knnGraphIncremental]], built on the
   * persisted-artifact pattern [[StreamingAnnIngestJob]] establishes:
   *
   *   1. the first non-empty batch trains the coarse quantizer and
-  *      persists it — immutable afterwards, so cell membership is
-  *      stable and every later batch assigns map-side with no
-  *      retraining;
-  *   2. every batch appends its cell assignment under a per-batch
-  *      directory (idempotent overwrite under at-least-once replay);
+  *      persists it ([[DeltaStore.frozenModel]]) — immutable
+  *      afterwards, so cell membership is stable and every later batch
+  *      assigns map-side with no retraining;
+  *   2. every batch appends its cell assignment to the `assigned` log
+  *      ([[DeltaStore.log]]);
   *   3. ONLY the batch's DIRTY cells re-rank their edge lists — a
   *      clean cell's top-k provably cannot change because candidates
   *      never cross cells (the [[Ann.knnGraphIncremental]] IVM bound,
@@ -25,8 +26,8 @@ import graft.similarity.Ann
   *      partitions. Per-batch cost is Σ|dirty cell|² + the batch
   *      assignment scan, never the accumulated corpus.
   *
-  * Replay consistency: the per-batch assignment overwrite is
-  * byte-identical (immutable quantizer ⇒ same cells), and the edge
+  * Replay consistency: a replayed batch rewrites a byte-identical
+  * assignment (immutable quantizer ⇒ same cells), and the edge
   * recompute is a pure function of (accumulated assignment, dirty
   * cells) — a replayed batch re-publishes the same edge partitions it
   * published the first time, so the graph converges to exactly the
@@ -35,46 +36,22 @@ import graft.similarity.Ann
 class StreamingKnnMaintainJob(spark: SparkSession, indexPath: String,
                               nCells: Int = 16, k: Int = 5) {
 
-  private def assignedDir = s"$indexPath/assigned"
-  private def centroidsDir = s"$indexPath/centroids"
-  private def edgesDir = s"$indexPath/edges"
-  private def fs = new Path(indexPath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val edgesDir = new Path(indexPath, "edges")
+  private val assigned = DeltaStore.log(spark, indexPath, "assigned", Seq("vec_id", "embedding", "cell"))
+  private def centroids(fit: => Option[DataFrame]): Option[DataFrame] =
+    DeltaStore.frozenModel(spark, indexPath, "centroids")(fit.map(Seq(_))).map(_.head)
 
-  private val geometryMarker = new Path(indexPath, "_knn_geometry")
-  private def geometry = s"knn:cells=$nCells,k=$k"
-
-  private def checkOrWriteGeometry(): Unit = {
-    if (fs.exists(geometryMarker)) {
-      val in = fs.open(geometryMarker)
-      val found = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (found != geometry) throw new IllegalStateException(
-        s"knn graph at $indexPath was built with '$found' but this job is " +
-          s"configured for '$geometry' — rebuild the graph")
-    } else {
-      val out = fs.create(geometryMarker, true)
-      try out.write((geometry + "\n").getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  def readCentroids(): Option[DataFrame] =
-    if (fs.exists(new Path(centroidsDir))) Some(spark.read.parquet(centroidsDir))
-    else None
+  def readCentroids(): Option[DataFrame] = centroids(None)
 
   /** The accumulated (vec_id, embedding, cell) assignment. */
-  def readAssigned(): Option[DataFrame] =
-    if (fs.exists(new Path(assignedDir)) &&
-        fs.listStatus(new Path(assignedDir)).nonEmpty)
-      Some(spark.read.parquet(assignedDir).select("vec_id", "embedding", "cell"))
-    else None
+  def readAssigned(): Option[DataFrame] = assigned.readDeltas()
 
   /** The current edge list (vec_id, neighbor_id, rank, cosine). Empty
     * frame before the first commit.
     */
   def readGraph(): DataFrame =
-    if (fs.exists(new Path(edgesDir)))
-      spark.read.parquet(edgesDir).select("vec_id", "neighbor_id", "rank", "cosine")
+    if (LocalFs.fileSystem(edgesDir, spark.sparkContext.hadoopConfiguration).exists(edgesDir))
+      spark.read.parquet(edgesDir.toString).select("vec_id", "neighbor_id", "rank", "cosine")
     else spark.range(0).select(col("id").as("vec_id"), col("id").as("neighbor_id"),
       lit(1).as("rank"), lit(0.0).as("cosine")).limit(0)
 
@@ -83,20 +60,19 @@ class StreamingKnnMaintainJob(spark: SparkSession, indexPath: String,
     * cells' edge lists against the accumulated assignment.
     */
   def processBatch(embs: DataFrame, batchId: Long): Unit = {
-    checkOrWriteGeometry()
+    assigned.checkOrWriteFormat("_knn_geometry", s"knn:cells=$nCells,k=$k", stampUnmarked = true)
     // an empty batch must not reach the bootstrap (an empty quantizer
     // would permanently assign every later batch to zero cells)
     if (embs.isEmpty) return
-    val centroids = readCentroids().getOrElse {
+    val cents = centroids {
       val (c, _) = Ann.ivfIndex(embs, nCells)
       require(!c.isEmpty,
         s"refusing to persist an empty IVF quantizer for $indexPath")
-      c.write.mode("overwrite").parquet(centroidsDir)
-      spark.read.parquet(centroidsDir)
-    }
-    val newAssigned = Ann.assignCells(centroids, embs)
+      Some(c)
+    }.get
+    val newAssigned = Ann.assignCells(cents, embs)
       .localCheckpoint(true)
-    newAssigned.write.mode("overwrite").parquet(s"$assignedDir/batch=$batchId")
+    assigned.append(newAssigned, batchId)
     val dirty = newAssigned.select("cell").distinct()
     val all = readAssigned().get
     // the IVM step: candidates never cross cells, so re-ranking the
@@ -108,11 +84,11 @@ class StreamingKnnMaintainJob(spark: SparkSession, indexPath: String,
     // dynamic partition overwrite: ONLY the dirty cell partitions are
     // replaced; clean cells' files are untouched (asserted in the spec
     // via file modification times)
-    dirtyEdges.write
+    dirtyEdges.write.options(LocalFs.writeOptions)
       .partitionBy("cell")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
-      .parquet(edgesDir)
+      .parquet(edgesDir.toString)
   }
 
   /** Run continuously over a streaming (vec_id, embedding) frame. */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -15,7 +14,9 @@ import graft.queries.Analytics
   *
   *   1. the FIRST non-empty batch fits per-type decile boundaries
   *      (the batch face's exact-percentile fit) and persists them plus
-  *      its own bucket counts as the immutable REFERENCE;
+  *      its own bucket counts as the immutable REFERENCE, one
+  *      [[DeltaStore.frozenModel]] of two parts: a crash between the two
+  *      writes refits both on the replay;
   *   2. every batch (including the bootstrap) buckets itself map-side
   *      against the broadcast boundary table and appends its
   *      (event_type, bucket, n) counts — additive when each event
@@ -30,18 +31,15 @@ import graft.queries.Analytics
 class StreamingPsiJob(spark: SparkSession, modelPath: String,
                       compactEvery: Int = 16) {
 
-  private def boundsDir = s"$modelPath/bounds"
-  private def refDir = s"$modelPath/reference"
-  private def fs = new Path(modelPath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The frozen (bounds, reference) pair. */
+  private def model(fit: => Option[Seq[DataFrame]]): Option[Seq[DataFrame]] =
+    DeltaStore.frozenModel(spark, modelPath, "bounds", "reference")(fit)
 
   private[graft] val state = DeltaStore.additive(spark, modelPath,
     "psi_counts", Seq("event_type", "bucket"), Seq("n"), compactEvery)
 
   /** The persisted boundary table, once bootstrapped. */
-  def readBounds(): Option[DataFrame] =
-    if (fs.exists(new Path(boundsDir))) Some(spark.read.parquet(boundsDir))
-    else None
+  def readBounds(): Option[DataFrame] = model(None).map(_.head)
 
   private def bucketCounts(events: DataFrame, bounds: DataFrame): DataFrame =
     events.select(col("event_type"), col("value"))
@@ -56,13 +54,11 @@ class StreamingPsiJob(spark: SparkSession, modelPath: String,
     // an empty batch must never reach the bootstrap: a boundary table
     // fitted on zero rows would become the permanent reference
     if (events.isEmpty) return
-    val bounds = readBounds().getOrElse {
+    val bounds = model {
       val b = Analytics.psiBounds(events.select(col("event_type"), col("value")))
-      b.write.mode("overwrite").parquet(boundsDir)
-      val persisted = spark.read.parquet(boundsDir)
-      bucketCounts(events, persisted).write.mode("overwrite").parquet(refDir)
-      persisted
-    }
+        .localCheckpoint(true)
+      Some(Seq(b, bucketCounts(events, b)))
+    }.get.head
     state.append(bucketCounts(events, bounds), batchId)
   }
 
@@ -76,8 +72,7 @@ class StreamingPsiJob(spark: SparkSession, modelPath: String,
     * as the "first" side. n_first/n_second report the two masses.
     */
   def readPsi(): DataFrame = {
-    val ref =
-      if (fs.exists(new Path(refDir))) spark.read.parquet(refDir) else empty
+    val ref = model(None).fold(empty)(_(1))
     val cur = state.state().getOrElse(empty)
     Analytics.psiFold(
       ref.select(col("event_type"), col("bucket"), col("n").as("a"))

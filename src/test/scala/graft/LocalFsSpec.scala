@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.ParquetUpsertSink
 import graft.sources.LocalFs
-import graft.streaming.DeltaStore
+import graft.streaming.{DeltaStore, StreamingKnnMaintainJob}
 
 class LocalFsSpec extends AnyFunSuite with SparkSpec {
 
@@ -41,13 +41,17 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
     sink.merge(frame, 0)
     sink.merge(frame.limit(1), 1)
     new DeltaStore(spark, tmp, "store", frame.columns.toSeq, 16, identity).append(frame, 0)
+    // a bootstrap model, a per-batch log, a geometry marker and the
+    // dynamic-overwrite edge partitions
+    new StreamingKnnMaintainJob(spark, s"$tmp/knn")
+      .processBatch(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), 0)
 
     val (plainDirs, plainFiles) = plain.partition { case (p, _) => new java.io.File(s"$tmp/plain/$p").isDirectory }
     assert(plainDirs.isEmpty && plainFiles.values.toSet.size == 1,
       s"a plain write is one flat dir of files sharing one mode: $plain")
     val fileMode = plainFiles.values.head
     val dirMode = modeOf(new java.io.File(s"$tmp/plain").toPath)
-    for (root <- Seq(s"$tmp/state", s"$tmp/store")) {
+    for (root <- Seq(s"$tmp/state", s"$tmp/store", s"$tmp/knn")) {
       val written = modes(root)
       written.foreach { case (p, m) =>
         val f = new java.io.File(s"$root/$p")
@@ -59,6 +63,7 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
       assert(written.keys.exists(_.endsWith(".parquet")), s"$root holds data files")
     }
     assert(modes(s"$tmp/state").keys.exists(_.startsWith("_manifest.v1")))
+    assert(Seq("centroids", "assigned/batch=0", "edges", "_knn_geometry").forall(modes(s"$tmp/knn").contains))
   }
 
   test("setPermission round-trips plain modes and still sets a sticky or set-id mode") {

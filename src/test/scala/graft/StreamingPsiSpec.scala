@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Analytics
 import graft.streaming.StreamingPsiJob
 
 /** The continuous PSI monitor: bootstrap fixes the reference, the fold
@@ -77,5 +78,19 @@ class StreamingPsiSpec extends AnyFunSuite with SparkSpec {
     job.processBatch(events.limit(0), 0L)
     assert(job.readBounds().isEmpty, "an empty batch must not fit the reference")
     assert(job.readPsi().count() === 0)
+  }
+
+  test("a crash between the bounds and the reference write refits both on the replay") {
+    def psi(job: StreamingPsiJob) = job.readPsi().collect().map(_.toSeq.toList).sortBy(_.toString).toList
+    val cuts = tranches(3)
+    val healthy = new StreamingPsiJob(spark, java.nio.file.Files.createTempDirectory("spsi-ok").toString)
+    cuts.zipWithIndex.foreach { case (cut, i) => healthy.processBatch(cut, i.toLong) }
+    // batch 0 committed its bounds, then died before writing the reference
+    val dir = java.nio.file.Files.createTempDirectory("spsi-crash").toString
+    Analytics.psiBounds(cuts.head.select(col("event_type"), col("value"))).write.parquet(s"$dir/bounds")
+    val job = new StreamingPsiJob(spark, dir)
+    cuts.zipWithIndex.foreach { case (cut, i) => job.processBatch(cut, i.toLong) }
+    assert(job.readPsi().collect().forall(_.getAs[Long]("n_first") > 0), "the reference was written")
+    assert(psi(job) === psi(healthy))
   }
 }

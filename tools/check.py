@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify's
 parquet dumps against the DuckDB oracle SQL on the same tables."""
-import sys, os, json, glob
+import sys, os, json, glob, shutil, tempfile
 import duckdb
 import numpy as np
 import pandas as pd
@@ -9,7 +9,16 @@ import pandas as pd
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout"
 
-con = duckdb.connect()
+# DuckDB's own cap is 80% of RAM. The sf0.1 peak is one oracle,
+# ann_recall_report: it runs its PQ and IVF-PQ subqueries (~3 GB each)
+# twice and grew this process by ~10 GB (to 13.8 GB) under that cap. At
+# 8 GB DuckDB spills the rest to `spill` and returns the same rows; at
+# 5 GB that query fails out of memory. The per-entry pandas frames are
+# at most ~20 MB.
+ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+spill = tempfile.mkdtemp(prefix="check-duckdb-")
+con = duckdb.connect(config={"memory_limit": f"{min(8 << 30, int(ram * 0.8)) >> 20}MB",
+                             "temp_directory": spill})
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
@@ -89,4 +98,6 @@ print(f"ROWS-ONLY ({len(rows_only)}): {', '.join(f'{n}[{r}]' for n, r in rows_on
 print(f"FAIL ({len(fails)}):")
 for n, m in fails:
     print(f"  {n}: {m[:500]}")
+con.close()
+shutil.rmtree(spill, ignore_errors=True)
 sys.exit(1 if fails else 0)
