@@ -95,9 +95,9 @@ object AggMaintain {
         attrCols.map(f => col(s"s.$f").as(s"__a_$f"))): _*)
     val before = state.select(keyCols.map(col) ++
       attrCols.map(f => col(f).as(s"__b_$f")) :+ lit(true).as("__b_present"): _*)
-    // null-safe key match, like mergeChangeSet's join: latestState
-    // groups null keys into a real state row, so a plain equi-join
-    // would miss its before-image and never retract it
+    // null-safe key match, as mergeChangeSet's per-key fold groups a
+    // null key: latestState groups null keys into a real state row, so
+    // a plain equi-join would miss its before-image and never retract it
     val l = latest.alias("l")
     val b = before.alias("b")
     val joined = l.join(b,

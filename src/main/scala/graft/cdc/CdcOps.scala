@@ -141,16 +141,35 @@ object CdcOps {
     *   matched                  → update to latest after-image
     *   not matched ∧ op≠'d'     → insert
     *
-    * Implementation: collapse the change-set per key first (map-side
-    * partial agg), then ONE full-outer shuffle join against base on the
-    * key. At scale the base is bucket-partitioned (see ParquetUpsertSink)
-    * so only dirty buckets are rewritten.
+    * Implementation: a union-fold, not a join. Base rows are tagged rank
+    * 0 and change rows rank 1, the two are unioned, and the union is
+    * grouped by key with `max_by(image, struct(rank, ts_ms, seq))`: the
+    * batch's latest image beats the base whatever `last_ts_ms` says, and
+    * a key the batch does not touch keeps its base row. That is one
+    * shuffle on the key, with the map-side partial aggregate collapsing
+    * both sides before it. The grouping is null-safe: a null key is one
+    * group, matched like any other key. [[ParquetUpsertSink]] runs the
+    * same fold repartitioned by bucket, so its write needs no second
+    * shuffle.
     *
-    * base schema: keyCols ++ dataCols ++ last_ts_ms (extra cols carried
-    * through via coalesce-by-name when present on both sides).
+    * base schema: keyCols ++ dataCols ++ last_ts_ms; output: the same
+    * columns (other base columns are dropped).
     */
   def mergeChangeSet(base: DataFrame, changelog: DataFrame,
-                     keyCols: Seq[String], dataCols: Seq[String]): DataFrame = {
+                     keyCols: Seq[String], dataCols: Seq[String]): DataFrame =
+    foldChangeSet(base, changelog, keyCols, dataCols, None)
+
+  private val Rank = "__rank"
+  private val Winner = "__w"
+
+  /** [[mergeChangeSet]]'s fold. With `bucket = Some((b, n))` the union
+    * is repartitioned into `n` partitions by the bucket id `b`, grouped
+    * by (bucket, key), and the output leads with a `bucket` column, so a
+    * `partitionBy("bucket")` write of it plans no further exchange.
+    */
+  private[cdc] def foldChangeSet(base: DataFrame, changelog: DataFrame,
+                                 keyCols: Seq[String], dataCols: Seq[String],
+                                 bucket: Option[(Column, Int)]): DataFrame = {
     // schema evolution: dataCols is the UNION of base and batch data
     // columns. A column the batch doesn't carry (dropped from the feed,
     // or a clean-epoch column the batch predates) is CARRIED from base —
@@ -160,29 +179,38 @@ object CdcOps {
     val batchCols = changelog.columns.toSet
     val baseCols = base.columns.toSet
     val imgCols = dataCols.filter(batchCols.contains)
-    val latestIncl = changelog
-      .groupBy(keyCols.map(col): _*)
+    // carried columns (and the base's last_ts_ms, for a batch image
+    // without a ts_ms) hold a value on the base row only: `first`
+    // ignoring nulls picks it, for any column type
+    val carried = dataCols.filterNot(batchCols.contains) :+ "last_ts_ms"
+    def nullOf(df: DataFrame, c: String) = lit(null).cast(df.schema(c).dataType).as(c)
+    val baseRows = base.select(keyCols.map(col) ++
+      Seq(lit(0).as(Rank), lit(null).cast("string").as("op"), nullOf(changelog, "ts_ms"),
+        nullOf(changelog, "seq")) ++
+      imgCols.map(f => if (baseCols.contains(f)) col(f) else nullOf(changelog, f)) ++
+      carried.map(col): _*)
+    val changeRows = changelog.select(keyCols.map(col) ++
+      Seq(lit(1).as(Rank), col("op"), col("ts_ms"), col("seq")) ++
+      imgCols.map(col) ++ carried.map(nullOf(base, _)): _*)
+    val tagged = baseRows.union(changeRows)
+    val (input, groupCols) = bucket match {
+      case Some((b, n)) =>
+        (tagged.withColumn("bucket", b).repartition(n, col("bucket")), "bucket" +: keyCols)
+      case None => (tagged, keyCols)
+    }
+    input.groupBy(groupCols.map(col): _*)
       .agg(
-        max_by(imageStruct(imgCols), struct(col("ts_ms"), col("seq"))).as("s"),
-        max(col("ts_ms")).as("c_last_ts_ms"))
-    val b = base.alias("b")
-    val c = latestIncl.alias("c")
-    val joinCond = keyCols.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _)
-    b.join(c, joinCond, "full_outer")
-      .filter(col("c.s").isNull || col("c.s.op") =!= "d")
-      .select(
-        keyCols.map(k => coalesce(col(s"c.$k"), col(s"b.$k")).as(k)) ++
-          // gate on IMAGE presence, not field nullness: an update that
-          // legitimately sets a column to NULL must win — a per-field
-          // coalesce would silently resurrect the base's stale value
-          dataCols.map { f =>
-            if (imgCols.contains(f) && baseCols.contains(f))
-              when(col("c.s").isNotNull, col(s"c.s.$f")).otherwise(col(s"b.$f")).as(f)
-            else if (imgCols.contains(f)) // new in this batch: base rows backfill NULL
-              when(col("c.s").isNotNull, col(s"c.s.$f")).as(f)
-            else // absent from this batch: carry base (NULL for new keys)
-              col(s"b.$f").as(f)
-          } ++ Seq(
-          coalesce(col("c.c_last_ts_ms"), col("b.last_ts_ms")).as("last_ts_ms")): _*)
+        max_by(struct((Seq(Rank, "op", "ts_ms") ++ imgCols).map(col): _*),
+          struct(col(Rank), col("ts_ms"), col("seq"))).as(Winner),
+        carried.map(f => first(col(f), ignoreNulls = true).as(f)): _*)
+      // a base row survives; a batch image survives unless its op is
+      // 'd' (or null: an envelope that did not parse)
+      .filter(col(s"$Winner.$Rank") === 0 || col(s"$Winner.op") =!= "d")
+      .select(groupCols.map(col) ++
+        // gate on which row WON, not on field nullness: an update that
+        // legitimately sets a column to NULL must win — a per-field
+        // coalesce would silently resurrect the base's stale value
+        dataCols.map(f => (if (imgCols.contains(f)) col(s"$Winner.$f") else col(f)).as(f)) :+
+        coalesce(col(s"$Winner.ts_ms"), col("last_ts_ms")).as("last_ts_ms"): _*)
   }
 }

@@ -1,9 +1,10 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.sources.LocalFsCheckpointFileManager
 
 /** Reader/sink configuration — the reference's config surface
   * (/root/reference/src/main/scala/com/sg/job/streaming/StreamingUtils.scala:1-7),
@@ -59,20 +60,31 @@ final case class CdcJobConfig(
   *     [[ParquetUpsertSink]] with dirty-bucket-only rewrites;
   *   - `foreachBatch` + checkpointing gives exactly-once state evolution,
   *     as in the reference.
+  *
+  * The query runs in [[CdcStreamJob.streamSession]]: a clone of the
+  * caller's session whose offset and commit logs (the write-ahead log
+  * of Structured Streaming) go through
+  * [[graft.sources.LocalFsCheckpointFileManager]], one small file write
+  * each instead of ten forked processes on a local file system without
+  * `libhadoop`. The checkpoint's on-disk format is Spark's own.
   */
 class CdcStreamJob(spark: SparkSession, config: CdcJobConfig) {
 
   def readRaw(): DataFrame = CdcStreamJob.readRaw(spark, config.source)
 
-  def parsed(): DataFrame =
-    DebeziumEnvelope.parse(readRaw(), config.pkSchema, config.rowSchema)
+  def parsed(): DataFrame = parsedIn(spark)
+
+  private[cdc] def parsedIn(session: SparkSession): DataFrame =
+    DebeziumEnvelope.parse(CdcStreamJob.readRaw(session, config.source),
+      config.pkSchema, config.rowSchema)
 
   /** Start the continuous upsert. Each micro-batch is merged into the
     * parquet state with Delta-merge semantics.
     */
   def execute(trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val sink = new ParquetUpsertSink(spark, config.statePath, config.keyCols, config.numBuckets)
-    parsed().writeStream
+    val session = CdcStreamJob.streamSession(spark)
+    val sink = new ParquetUpsertSink(session, config.statePath, config.keyCols, config.numBuckets)
+    parsedIn(session).writeStream
       .outputMode("update")
       .option("checkpointLocation", config.checkpointLocation)
       .trigger(trigger)
@@ -108,8 +120,25 @@ class CdcStreamJob(spark: SparkSession, config: CdcJobConfig) {
 object CdcStreamJob {
   val KafkaFormat = "kafka"
 
+  /** The session a CDC query starts in: a clone of `spark` (same conf,
+    * same SparkContext) whose one added setting writes the query's
+    * checkpoint through [[LocalFsCheckpointFileManager]]. `spark`'s conf
+    * is never written. The query reports to the listeners `spark.streams`
+    * holds when it starts; Spark keeps each clone's (idle) listener bus
+    * registered for the life of the SparkContext.
+    */
+  private[cdc] def streamSession(spark: SparkSession): SparkSession = {
+    val session = GraftExpressionBridge.cloneSession(spark)
+    session.conf.set(LocalFsCheckpointFileManager.ConfKey,
+      classOf[LocalFsCheckpointFileManager].getName)
+    spark.streams.listListeners().foreach(session.streams.addListener)
+    session
+  }
+
   /** Source → raw Kafka-shaped frame (string key/value [+ topic,
-    * offset]) — shared by the single-table and multi-table jobs.
+    * offset]) in `spark` — shared by the single-table and multi-table
+    * jobs. A [[MemorySource]] frame of another session is rebound into
+    * `spark`, since a stream starts in the session of its frame.
     */
   def readRaw(spark: SparkSession, source: CdcSource): DataFrame = source match {
     case KafkaSource(k) =>
@@ -123,7 +152,7 @@ object CdcStreamJob {
       spark.readStream
         .schema("key STRING, value STRING, topic STRING")
         .json(path)
-    case MemorySource(raw) => raw
+    case MemorySource(raw) => GraftExpressionBridge.rebind(raw, spark)
   }
 
   /** Static face of [[CdcStreamJob.flattenAfterImage]] (same contract —
@@ -192,9 +221,10 @@ class CdcMultiTableStreamJob(spark: SparkSession, source: CdcSource,
     "routes must not share a statePath (sinks are single-writer)")
 
   def execute(trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
+    val session = CdcStreamJob.streamSession(spark)
     val sinks = routes.map(r =>
-      r.table -> new ParquetUpsertSink(spark, r.statePath, r.keyCols, r.numBuckets)).toMap
-    CdcStreamJob.readRaw(spark, source).writeStream
+      r.table -> new ParquetUpsertSink(session, r.statePath, r.keyCols, r.numBuckets)).toMap
+    CdcStreamJob.readRaw(session, source).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointLocation)
       .trigger(trigger)
@@ -226,13 +256,14 @@ class CdcInitialLoadJob(spark: SparkSession, config: CdcJobConfig) {
   private val job = new CdcStreamJob(spark, config)
 
   def execute(trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val snapshot = job.parsed().filter(col("op") === "r")
+    val session = CdcStreamJob.streamSession(spark)
+    val snapshot = job.parsedIn(session).filter(col("op") === "r")
     snapshot.writeStream
       .outputMode("append")
       .option("checkpointLocation", config.checkpointLocation)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sink = new ParquetUpsertSink(spark, config.statePath, config.keyCols, config.numBuckets)
+        val sink = new ParquetUpsertSink(session, config.statePath, config.keyCols, config.numBuckets)
         sink.merge(job.flattenAfterImage(batch), batchId)
       }
       .start()

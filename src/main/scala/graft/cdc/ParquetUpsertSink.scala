@@ -1,7 +1,7 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -62,6 +62,17 @@ import graft.sources.LocalFs
   * 64); through Hadoop's stock local file system without `libhadoop`
   * each one forks three `chmod` processes (file, `.crc`, dir), about
   * 30 ms a file (0.55 s, 2.25 s).
+  *
+  * Merge shape: a commit is three Spark jobs — the dirty-bucket collect
+  * (a per-partition distinct, no exchange) and the write's two stages.
+  * The base rows of the dirty buckets and the batch's change rows are
+  * unioned and repartitioned ONCE, by bucket, into
+  * `min(dirty buckets, defaultParallelism)` partitions, then folded per
+  * (bucket, key) ([[CdcOps.mergeChangeSet]]'s union-fold). That fold's
+  * sort also orders the rows by bucket, so the `partitionBy("bucket")`
+  * write plans no second exchange and no second sort, and several tasks
+  * write the dirty buckets in parallel (an unsized repartition would be
+  * coalesced by AQE into one writer task). PlanSpec pins the shape.
   *
   * Read path: the committed manifest is the only file index. Every read
   * (and the merge's base read) scans the bucket directories a manifest
@@ -185,11 +196,11 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * stream do to my table" answer an incremental downstream consumer
     * needs without replaying the changelog itself.
     *
-    * One co-partitioned full-outer join on the key (the same shuffle
-    * shape as the merge); presence is decided by MARKER columns, not
-    * data nullness, so a legitimately-NULL attribute can't masquerade
-    * as an absent key. Both sides are read with the `toEpoch` schema,
-    * so a column added in between null-fills on the before side.
+    * One co-partitioned full-outer join on the key; presence is decided
+    * by MARKER columns, not data nullness, so a legitimately-NULL
+    * attribute can't masquerade as an absent key. Both sides are read
+    * with the `toEpoch` schema, so a column added in between null-fills
+    * on the before side.
     * Output: keyCols ++ change ∈ {added, removed, changed} ++ the
     * after-image data columns (NULL for removed keys).
     */
@@ -247,43 +258,50 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * this thread) always commits. A batch that crashed mid-merge never
     * published, so its partial output is invisible and its replay
     * applies it.
+    *
+    * The first commit folds the batch over an empty base, so every
+    * epoch is written by the same plan.
     */
   def merge(batch: DataFrame, batchId: Long): Unit = {
     val queryId = Option(spark.sparkContext.getLocalProperty(QueryIdKey))
     val txn = queryId.map(_ -> batchId)
-    readManifest() match {
-      case Some(m) if m.txn.exists { case (q, b) => queryId.contains(q) && batchId <= b } =>
-        ()  // already applied by this query
-      case None =>
-        val dataCols = dataColsOf(batch)
-        val state0 = CdcOps.latestState(batch, keyCols, dataCols).drop("n_changes")
-        commit(0L, Map.empty, dirtyOf(batch), state0, txn)
-      case Some(m) =>
-        val dirty = dirtyOf(batch)
-        val dirtyWithData = dirty.filter(m.buckets.contains)
-        // schema evolution: read dirty buckets with the MANIFEST schema
-        // (older bucket files missing newer columns null-fill), and
-        // merge over the UNION of batch and state data columns so a
-        // widening feed backfills NULL and a narrowed feed carries
-        // state values instead of wiping them.
-        val base =
-          if (dirtyWithData.isEmpty && m.schema.isEmpty) emptyLike(batch, dataColsOf(batch))
-          else scan(dirtyWithData.map(m.buckets), m.schema)
-        val baseDataCols = base.columns.toSeq
-          .filterNot(c => keyCols.contains(c) || c == "last_ts_ms")
-        val dataCols = (dataColsOf(batch) ++
-          baseDataCols.filterNot(dataColsOf(batch).contains)).distinct
-        val merged = CdcOps.mergeChangeSet(base, batch, keyCols, dataCols)
-        commit(m.epoch + 1, m.buckets, dirty, merged, txn.orElse(m.txn))
+    val last = readManifest()
+    val applied = last.exists(_.txn.exists { case (q, b) => queryId.contains(q) && batchId <= b })
+    if (!applied) {
+      val previous = last.fold(Map.empty[Int, String])(_.buckets)
+      val dirty = dirtyOf(batch)
+      val dirtyWithData = dirty.filter(previous.contains)
+      // schema evolution: read dirty buckets with the MANIFEST schema
+      // (older bucket files missing newer columns null-fill), and
+      // merge over the UNION of batch and state data columns so a
+      // widening feed backfills NULL and a narrowed feed carries
+      // state values instead of wiping them. The first commit folds
+      // the batch over an empty base.
+      val schema = last.flatMap(_.schema)
+      val base =
+        if (dirtyWithData.isEmpty && schema.isEmpty) emptyLike(batch, dataColsOf(batch))
+        else scan(dirtyWithData.map(previous), schema)
+      val baseDataCols = base.columns.toSeq
+        .filterNot(c => keyCols.contains(c) || c == "last_ts_ms")
+      val dataCols = (dataColsOf(batch) ++
+        baseDataCols.filterNot(dataColsOf(batch).contains)).distinct
+      val writers = math.max(1, math.min(dirty.size, spark.sparkContext.defaultParallelism))
+      val merged = CdcOps.foldChangeSet(base, batch, keyCols, dataCols, Some(bucketCol -> writers))
+      commit(last.fold(0L)(_.epoch + 1), previous, dirty, merged, txn.orElse(last.flatMap(_.txn)))
     }
   }
 
   private def dataColsOf(batch: DataFrame): Seq[String] =
     batch.columns.filterNot((keyCols ++ Seq("op", "ts_ms", "seq")).contains).toSeq
 
-  /** Distinct bucket ids of this batch — tiny (≤ numBuckets values). */
+  /** Distinct bucket ids of this batch — tiny (≤ numBuckets values).
+    * Each partition reduces its own ids to a set and the driver unions
+    * them: one job, no exchange.
+    */
   private def dirtyOf(batch: DataFrame): Seq[Int] =
-    batch.select(bucketCol).distinct().collect().map(_.getInt(0)).toSeq
+    batch.select(bucketCol).as(Encoders.scalaInt)
+      .mapPartitions(ids => ids.toSet.iterator)(Encoders.scalaInt)
+      .collect().distinct.sorted.toSeq
 
   /** The committed state restricted to the buckets this batch touches —
     * the before-image substrate an incremental-view-maintenance
@@ -315,6 +333,9 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * publish a manifest carrying: every clean bucket's previous entry +
     * every dirty bucket that still has rows. Dirty buckets with no
     * surviving rows are dropped from the manifest (all keys deleted).
+    * `merged` is the state rows of the dirty buckets plus their `bucket`
+    * column, partitioned and ordered the way it is to be written (see
+    * [[merge]]); the write adds no shuffle of its own.
     */
   private[graft] def commit(epoch: Long, previous: Map[Int, String],
                             dirty: Seq[Int], merged: DataFrame,
@@ -328,9 +349,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
         s"epoch $epoch already committed at $statePath (concurrent writer?)")
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val versionDir = s"v$epoch-$attempt"
-    merged.withColumn("bucket", bucketCol)
-      .repartition(col("bucket"))
-      .write.options(LocalFs.writeOptions).mode("overwrite")
+    merged.write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("bucket")
       .parquet(s"$statePath/$versionDir")
     // which dirty buckets actually produced rows?
@@ -344,7 +363,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     // can neither overwrite it nor get it published as its own
     val tmp = new Path(root, s"_tmp-manifest-$epoch-$attempt")
     val out = fs.create(tmp, true)
-    val metaLines = s"#schema\t${merged.schema.json}\n" +
+    val metaLines = s"#schema\t${merged.drop("bucket").schema.json}\n" +
       txn.fold("") { case (q, b) => s"#txn\t$q\t$b\n" }
     try out.write((metaLines + entries.toSeq.sortBy(_._1)
       .map { case (b, d) => s"$b\t$d" }.mkString("", "\n", "\n")).getBytes("UTF-8"))

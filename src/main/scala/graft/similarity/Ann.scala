@@ -1657,7 +1657,7 @@ object Ann {
        |t_sq AS ($sqTopKSql),
        |t_pq AS ($pqTopKSql),
        |t_ivfpq AS ($ivfpqTopKSql),
-       |tagged AS (
+       |tagged AS MATERIALIZED (
        |  SELECT 'lsh' AS method, query_id, neighbor_id FROM t_lsh
        |  UNION ALL SELECT 'ivf', query_id, neighbor_id FROM t_ivf
        |  UNION ALL SELECT 'sq', query_id, neighbor_id FROM t_sq

@@ -31,6 +31,11 @@ class LocalFs extends LocalFileSystem(new LocalFs.Raw) {
     * manifest publish would then overwrite another writer's manifest.
     */
   override def rename(src: Path, dst: Path): Boolean = !pathToFile(dst).isFile && super.rename(src, dst)
+
+  /** Rename `src` onto `dst`, replacing a file there: one POSIX rename
+    * of the file, then one of its `.crc`.
+    */
+  def replace(src: Path, dst: Path): Boolean = super.rename(src, dst)
 }
 
 object LocalFs {

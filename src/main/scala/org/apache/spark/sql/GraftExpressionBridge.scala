@@ -17,4 +17,17 @@ object GraftExpressionBridge {
     */
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A session with a copy of `spark`'s conf, functions and temp views
+    * (SparkSession.cloneSession is private[sql]); settings made on it
+    * leave `spark` untouched.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s (possibly streaming) plan as a frame of `spark`: a stream
+    * starts in the session of the frame it is started from.
+    */
+  def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    if (df.sparkSession eq spark) df else ofRows(spark, df.queryExecution.logical)
 }

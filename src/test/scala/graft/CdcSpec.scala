@@ -528,6 +528,162 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     usersCh.unpersist()
   }
 
+  /** Debezium envelopes of user changelog rows, lsn = seq. */
+  private def userEnvelopes(ch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val image = struct(col("user_id"), col("last_event_type"), col("last_value"))
+    DebeziumEnvelope.encode(ch, Seq("user_id"), col("op"), col("ts_ms"),
+      when(col("op") =!= "d", image), when(col("op") === "d", image), "users", lsnCol = col("seq"))
+  }
+
+  /** The checkpoint file manager behind a running query's offset log. */
+  private def offsetLogManager(q: org.apache.spark.sql.streaming.StreamingQuery): AnyRef = {
+    import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val log = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.offsetLog
+    classOf[HDFSMetadataLog[_]].getMethod("fileManager").invoke(log)
+  }
+
+  test("every CDC job starts in a stream session: caller conf untouched, offset log through LocalFs") {
+    import graft.sources.{LocalFs, LocalFsCheckpointFileManager}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-session").toString
+    val ch = CdcOps.userChangelog(spark, sfDir).cache()
+    val envelopes = userEnvelopes(ch).cache()
+    val expected = CdcOps.latestState(ch, Seq("user_id"), CdcOps.userDataCols)
+      .select("user_id", "last_event_type", "last_value", "last_ts_ms")
+    envelopes.write.json(s"$tmp/in")
+    def config(source: CdcSource, name: String) = CdcJobConfig(source, s"$tmp/ckpt-$name",
+      s"$tmp/state-$name", Seq("user_id"), CdcQueries.userPkSchema, CdcQueries.userRowSchema, 8)
+
+    /** Run `start` until its input is consumed; check the caller's conf
+      * and the offset log's manager while it runs.
+      */
+    def run(label: String)(start: => StreamingQuery): Unit = {
+      val before = spark.conf.getAll
+      val q = start
+      try {
+        q.processAllAvailable()
+        assert(spark.conf.getAll === before, s"$label wrote the caller's conf")
+        offsetLogManager(q) match {
+          case m: LocalFsCheckpointFileManager => m.underlying match {
+            case l: LocalFsCheckpointFileManager.Local =>
+              assert(l.fileSystem.getClass === classOf[LocalFs], label)
+            case other => fail(s"$label: a file: checkpoint under ${other.getClass}")
+          }
+          case other => fail(s"$label: offset log under ${other.getClass}")
+        }
+      } finally q.stop()
+      assert(spark.conf.getAll === before, s"$label wrote the caller's conf")
+    }
+
+    // a memory source of the caller's session is rebound into the
+    // stream session; a listener on the caller's session still sees
+    // the query's progress
+    val metrics = new graft.streaming.StreamMetrics().attach(spark)
+    val memory = MemoryStream[(String, String)]
+    memory.addData(envelopes.select("key", "value").as[(String, String)].collect().toSeq)
+    try {
+      run("CdcStreamJob")(new CdcStreamJob(spark,
+        config(MemorySource(memory.toDF().toDF("key", "value")), "single"))
+        .execute(Trigger.ProcessingTime(0L)))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!metrics.snapshot().exists(_.numInputRows > 0) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(metrics.snapshot().exists(_.numInputRows > 0), "no progress reached the caller's listener")
+    } finally metrics.detach(spark)
+    val state = new ParquetUpsertSink(spark, s"$tmp/state-single", Seq("user_id"), 8).readState()
+      .select("user_id", "last_event_type", "last_value", "last_ts_ms")
+    assert(state.exceptAll(expected).count() === 0 && expected.exceptAll(state).count() === 0)
+
+    run("CdcMultiTableStreamJob")(new CdcMultiTableStreamJob(spark, FileSource(s"$tmp/in"),
+      s"$tmp/ckpt-multi", Seq(TableRoute("users", s"$tmp/state-multi", Seq("user_id"),
+        CdcQueries.userPkSchema, CdcQueries.userRowSchema, 8)))
+      .execute(Trigger.ProcessingTime(0L)))
+    run("CdcInitialLoadJob")(new CdcInitialLoadJob(spark, config(FileSource(s"$tmp/in"), "initial"))
+      .execute(Trigger.ProcessingTime(0L)))
+    assert(spark.conf.getOption(LocalFsCheckpointFileManager.ConfKey).isEmpty)
+    ch.unpersist(); envelopes.unpersist()
+  }
+
+  test("a checkpoint moves between Spark's default manager and the stream session, both ways") {
+    import graft.sources.LocalFsCheckpointFileManager
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt-compat").toString
+    val srcDir = s"$tmp/in"
+    val ch = CdcOps.userChangelog(spark, sfDir).cache()
+    val Array(lo, hi) = ch.agg(min("seq"), max("seq")).head().toSeq.map(_.asInstanceOf[Long]).toArray
+    val bounds = Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi)
+    val config = CdcJobConfig(FileSource(srcDir), s"$tmp/ckpt", s"$tmp/state", Seq("user_id"),
+      CdcQueries.userPkSchema, CdcQueries.userRowSchema, 8)
+    val sink = new ParquetUpsertSink(spark, config.statePath, Seq("user_id"), 8)
+
+    /** The job's own query, started in the caller's session: Spark's
+      * default checkpoint manager.
+      */
+    def defaultManagerRun(): Unit = {
+      assert(spark.conf.getOption(LocalFsCheckpointFileManager.ConfKey).isEmpty)
+      val job = new CdcStreamJob(spark, config)
+      job.parsed().writeStream
+        .outputMode("update")
+        .option("checkpointLocation", config.checkpointLocation)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          sink.merge(job.flattenAfterImage(b), id)
+        }
+        .start().awaitTermination()
+    }
+    def streamSessionRun(): Unit =
+      new CdcStreamJob(spark, config).execute(Trigger.AvailableNow()).awaitTermination()
+    def logged(log: String): Seq[String] =
+      new java.io.File(s"${config.checkpointLocation}/$log").list().filterNot(_.startsWith(".")).sorted.toSeq
+
+    var from = Long.MinValue
+    Seq[() => Unit](() => defaultManagerRun(), () => streamSessionRun(), () => defaultManagerRun())
+      .zip(bounds).zipWithIndex.foreach { case ((run, bound), n) =>
+        userEnvelopes(ch.filter(col("seq") > from && col("seq") <= bound))
+          .write.mode("append").json(srcDir)
+        from = bound
+        run()
+        // nothing replayed: one batch, and one epoch, per tranche
+        val ids = (0 to n).map(_.toString)
+        assert(logged("offsets") === ids && logged("commits") === ids, s"tranche $n")
+        assert(sink.retainedEpochs().last === n.toLong, s"tranche $n")
+        val expected = CdcOps.latestState(ch.filter(col("seq") <= bound), Seq("user_id"),
+          CdcOps.userDataCols).select("user_id", "last_event_type", "last_value", "last_ts_ms")
+        val state = sink.readState().select("user_id", "last_event_type", "last_value", "last_ts_ms")
+        assert(state.exceptAll(expected).count() === 0 && expected.exceptAll(state).count() === 0,
+          s"state after tranche $n")
+      }
+    ch.unpersist()
+  }
+
+  test("the LocalFs checkpoint manager: an overwrite replaces a file, a plain create refuses it") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.LocalFsCheckpointFileManager
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt-atomic").toString
+    val mgr = new LocalFsCheckpointFileManager(new Path(tmp), spark.sparkContext.hadoopConfiguration)
+    val f = new Path(tmp, "log/0")
+    def write(s: String, overwrite: Boolean): Unit = {
+      val out = mgr.createAtomic(f, overwriteIfPossible = overwrite)
+      out.write(s.getBytes("UTF-8"))
+      out.close()
+    }
+    // read through the manager: a stale .crc would fail the read
+    def read(): String = {
+      val in = mgr.open(f)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write("one", overwrite = false)
+    assert(read() === "one")
+    write("two", overwrite = true)
+    assert(read() === "two", "an overwrite must replace the file, not keep the old one")
+    intercept[java.io.IOException](write("three", overwrite = false))
+    assert(read() === "two", "a plain create must not replace the file")
+    assert(mgr.list(new Path(tmp, "log")).map(_.getPath.getName).filterNot(_.startsWith("."))
+      .toSeq === Seq("0"), "one log file, under its own name")
+  }
+
   test("ingest -> exportSnapshot -> analytics equals the same analytics over latestState") {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.expressions.Window
@@ -678,7 +834,7 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     val phantom = Seq((999L, "phantom", 9.9, 99L))
       .toDF("user_id", "last_event_type", "last_value", "last_ts_ms")
     val ex = intercept[IllegalStateException] {
-      sink.commit(0L, Map.empty, Seq(0), phantom)
+      sink.commit(0L, Map.empty, Seq(0), phantom.withColumn("bucket", lit(0)))
     }
     assert(ex.getMessage.contains("already committed"))
     assert(sink.readState().collect().toSet === before, "state must be untouched")
@@ -705,7 +861,7 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     val phantom = Seq((999L, "phantom", 9.9, 99L))
       .toDF("user_id", "last_event_type", "last_value", "last_ts_ms")
     val ex = intercept[IllegalStateException] {
-      a.commit(1L, Map.empty, Seq(0), phantom)                        // loser
+      a.commit(1L, Map.empty, Seq(0), phantom.withColumn("bucket", lit(0)))                        // loser
     }
     assert(ex.getMessage.contains("already committed"))
     assert(listing() === winnerFiles,
@@ -844,12 +1000,11 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       }
       assert(rows(cdf) === expected, s"changesBetween(${e - 1}, $e)")
 
-      // readDirtyState collects the batch's bucket ids by design; that
-      // query's jobs are the only ones it may launch
-      val (_, collectJobs) = jobsDuring(
-        batch.select(pmod(hash(col("user_id")), lit(buckets))).distinct().collect())
+      // readDirtyState collects the batch's bucket ids by design, in
+      // one job (a per-partition distinct); that is the only job it may
+      // launch
       val (dirty, dirtyJobs) = jobsDuring(sink.readDirtyState(batch))
-      assert(dirtyJobs.size === collectJobs.size && !dirtyJobs.exists(_.startsWith("Listing leaf files")),
+      assert(dirtyJobs.size === 1 && !dirtyJobs.exists(_.startsWith("Listing leaf files")),
         s"readDirtyState@$e launched $dirtyJobs")
       assert(rows(dirty) === rows(plain(bucketsOf(batch).flatMap(dirs.get), schema)),
         s"readDirtyState@$e")

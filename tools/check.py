@@ -10,11 +10,11 @@ sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout"
 
 # DuckDB's own cap is 80% of RAM. The sf0.1 peak is one oracle,
-# ann_recall_report: it runs its PQ and IVF-PQ subqueries (~3 GB each)
-# twice and grew this process by ~10 GB (to 13.8 GB) under that cap. At
-# 8 GB DuckDB spills the rest to `spill` and returns the same rows; at
-# 5 GB that query fails out of memory. The per-entry pandas frames are
-# at most ~20 MB.
+# ann_recall_report, whose PQ and IVF-PQ subqueries take ~3 GB each.
+# Its `tagged` CTE is MATERIALIZED, so they run once: the sf0.1 check
+# peaks at 6.2 GB (9.4 GB when DuckDB inlined `tagged` and ran them
+# twice). Over the 8 GB cap DuckDB spills to `spill` and returns the
+# same rows. The per-entry pandas frames are at most ~20 MB.
 ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 spill = tempfile.mkdtemp(prefix="check-duckdb-")
 con = duckdb.connect(config={"memory_limit": f"{min(8 << 30, int(ram * 0.8)) >> 20}MB",
