@@ -1,10 +1,10 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.sources.LocalFsCheckpointFileManager
+import graft.sources.MicroBatch
 
 /** Reader/sink configuration — the reference's config surface
   * (/root/reference/src/main/scala/com/sg/job/streaming/StreamingUtils.scala:1-7),
@@ -61,12 +61,11 @@ final case class CdcJobConfig(
   *   - `foreachBatch` + checkpointing gives exactly-once state evolution,
   *     as in the reference.
   *
-  * The query runs in [[CdcStreamJob.streamSession]]: a clone of the
-  * caller's session whose offset and commit logs (the write-ahead log
-  * of Structured Streaming) go through
-  * [[graft.sources.LocalFsCheckpointFileManager]], one small file write
-  * each instead of ten forked processes on a local file system without
-  * `libhadoop`. The checkpoint's on-disk format is Spark's own.
+  * The query is started by [[graft.sources.MicroBatch]], in the
+  * caller's stream session: its offset, commit and file-source logs
+  * (the write-ahead log of Structured Streaming) are written without
+  * forking, in Spark's own on-disk format. The source and the sink are
+  * built in that session too.
   */
 class CdcStreamJob(spark: SparkSession, config: CdcJobConfig) {
 
@@ -81,17 +80,12 @@ class CdcStreamJob(spark: SparkSession, config: CdcJobConfig) {
   /** Start the continuous upsert. Each micro-batch is merged into the
     * parquet state with Delta-merge semantics.
     */
-  def execute(trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val session = CdcStreamJob.streamSession(spark)
+  def execute(trigger: Trigger = MicroBatch.DefaultTrigger): StreamingQuery = {
+    val session = MicroBatch.session(spark)
     val sink = new ParquetUpsertSink(session, config.statePath, config.keyCols, config.numBuckets)
-    parsedIn(session).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", config.checkpointLocation)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.merge(flattenAfterImage(batch), batchId)
-      }
-      .start()
+    MicroBatch.start(parsedIn(session), config.checkpointLocation, trigger) { (batch, batchId) =>
+      sink.merge(flattenAfterImage(batch), batchId)
+    }
   }
 
   /** Flatten parsed envelope rows (after-image struct) into the sink's
@@ -120,25 +114,10 @@ class CdcStreamJob(spark: SparkSession, config: CdcJobConfig) {
 object CdcStreamJob {
   val KafkaFormat = "kafka"
 
-  /** The session a CDC query starts in: a clone of `spark` (same conf,
-    * same SparkContext) whose one added setting writes the query's
-    * checkpoint through [[LocalFsCheckpointFileManager]]. `spark`'s conf
-    * is never written. The query reports to the listeners `spark.streams`
-    * holds when it starts; Spark keeps each clone's (idle) listener bus
-    * registered for the life of the SparkContext.
-    */
-  private[cdc] def streamSession(spark: SparkSession): SparkSession = {
-    val session = GraftExpressionBridge.cloneSession(spark)
-    session.conf.set(LocalFsCheckpointFileManager.ConfKey,
-      classOf[LocalFsCheckpointFileManager].getName)
-    spark.streams.listListeners().foreach(session.streams.addListener)
-    session
-  }
-
   /** Source → raw Kafka-shaped frame (string key/value [+ topic,
-    * offset]) in `spark` — shared by the single-table and multi-table
-    * jobs. A [[MemorySource]] frame of another session is rebound into
-    * `spark`, since a stream starts in the session of its frame.
+    * offset]) read in `spark` — shared by the single-table and
+    * multi-table jobs. A [[MemorySource]] frame keeps its own session;
+    * [[MicroBatch.start]] rebinds it.
     */
   def readRaw(spark: SparkSession, source: CdcSource): DataFrame = source match {
     case KafkaSource(k) =>
@@ -152,7 +131,7 @@ object CdcStreamJob {
       spark.readStream
         .schema("key STRING, value STRING, topic STRING")
         .json(path)
-    case MemorySource(raw) => GraftExpressionBridge.rebind(raw, spark)
+    case MemorySource(raw) => raw
   }
 
   /** Static face of [[CdcStreamJob.flattenAfterImage]] (same contract —
@@ -220,15 +199,12 @@ class CdcMultiTableStreamJob(spark: SparkSession, source: CdcSource,
   require(routes.map(_.statePath).distinct.size == routes.size,
     "routes must not share a statePath (sinks are single-writer)")
 
-  def execute(trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val session = CdcStreamJob.streamSession(spark)
+  def execute(trigger: Trigger = MicroBatch.DefaultTrigger): StreamingQuery = {
+    val session = MicroBatch.session(spark)
     val sinks = routes.map(r =>
       r.table -> new ParquetUpsertSink(session, r.statePath, r.keyCols, r.numBuckets)).toMap
-    CdcStreamJob.readRaw(session, source).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointLocation)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.start(CdcStreamJob.readRaw(session, source), checkpointLocation, trigger) {
+      (batch, batchId) =>
         val raw = batch.persist()
         try routes.foreach { r =>
           val routed = raw.filter(
@@ -242,8 +218,7 @@ class CdcMultiTableStreamJob(spark: SparkSession, source: CdcSource,
           try { if (!flat.isEmpty) sinks(r.table).merge(flat, batchId) }
           finally { flat.unpersist(); () }
         } finally { raw.unpersist(); () }
-      }
-      .start()
+    }
   }
 }
 
@@ -256,16 +231,9 @@ class CdcInitialLoadJob(spark: SparkSession, config: CdcJobConfig) {
   private val job = new CdcStreamJob(spark, config)
 
   def execute(trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val session = CdcStreamJob.streamSession(spark)
-    val snapshot = job.parsedIn(session).filter(col("op") === "r")
-    snapshot.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", config.checkpointLocation)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sink = new ParquetUpsertSink(session, config.statePath, config.keyCols, config.numBuckets)
-        sink.merge(job.flattenAfterImage(batch), batchId)
-      }
-      .start()
+    val session = MicroBatch.session(spark)
+    val sink = new ParquetUpsertSink(session, config.statePath, config.keyCols, config.numBuckets)
+    MicroBatch.start(job.parsedIn(session).filter(col("op") === "r"), config.checkpointLocation,
+      trigger) { (batch, batchId) => sink.merge(job.flattenAfterImage(batch), batchId) }
   }
 }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * either manager restarts under the other. Any other scheme keeps
   * Spark's default manager.
   *
-  * Enabled per session by [[LocalFsCheckpointFileManager.ConfKey]]; see
-  * `graft.cdc.CdcStreamJob.streamSession`.
+  * Enabled per session by [[LocalFsCheckpointFileManager.ConfKey]], which
+  * only [[MicroBatch]]'s stream sessions set.
   */
 class LocalFsCheckpointFileManager(path: Path, hadoopConf: Configuration) extends CheckpointFileManager {
   private[graft] val underlying: CheckpointFileManager =
@@ -59,12 +59,19 @@ object LocalFsCheckpointFileManager {
 
     /** [[LocalFs.rename]] refuses an existing destination, on which
       * Spark's manager would silently keep the old file; an overwrite
-      * replaces it instead.
+      * replaces it instead. A refused rename deletes the temp file,
+      * which Spark's output stream would leave behind.
       */
     override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit =
-      if (!overwriteIfPossible) super.renameTempFile(src, dst, overwriteIfPossible)
-      else if (!fs.asInstanceOf[LocalFs].replace(src, dst))
-        throw new IOException(s"failed to rename $src onto $dst")
+      try {
+        if (!overwriteIfPossible) super.renameTempFile(src, dst, overwriteIfPossible)
+        else if (!fs.asInstanceOf[LocalFs].replace(src, dst))
+          throw new IOException(s"failed to rename $src onto $dst")
+      } catch {
+        case e: IOException =>
+          fs.delete(src, false)
+          throw e
+      }
   }
 
   private def withLocalFs(hadoopConf: Configuration): Configuration = {

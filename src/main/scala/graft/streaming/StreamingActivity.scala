@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the per-user activity-count relation — the
   * continuous face of `user_activity_gini`
@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * capping policy needs to react — without a nightly batch recompute.
   */
 class StreamingActivityJob(spark: SparkSession, statePath: String,
-                           compactEvery: Int = 16) {
+                           compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "user_activity", Seq("user_id"), Seq("x"), compactEvery)
@@ -42,13 +42,4 @@ class StreamingActivityJob(spark: SparkSession, statePath: String,
     */
   def readGini(): DataFrame =
     graft.queries.Analytics.giniFace(state.state().getOrElse(empty))
-
-  /** Run continuously over a streaming events frame. */
-  def start(events: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

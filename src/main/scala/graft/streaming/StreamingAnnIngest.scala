@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.similarity.Ann
+import graft.sources.MicroBatchJob
 
 /** Streaming ANN-index ingest — the streaming face of
   * [[graft.similarity.Ann.ivfpqIndex]] for continuous embedding
@@ -41,7 +41,7 @@ import graft.similarity.Ann
   */
 class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
                             nCells: Int = 16, nSub: Int = 16, nCodes: Int = 16,
-                            compactEvery: Int = 16) {
+                            compactEvery: Int = 16) extends MicroBatchJob {
 
   private val codes = new DeltaStore(spark, indexPath, "codes",
     Seq("vec_id", "cell", "codes", "dnorm2"), compactEvery, identity)
@@ -104,13 +104,4 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
       case (Some((c, b)), Some(table)) => Ann.ivfpqTopKFromIndex(c, b, table, queries, k, nProbe)
       case _ => Ann.emptyTopK(queries)
     }
-
-  /** Run continuously over a streaming (vec_id, embedding) frame. */
-  def start(embs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

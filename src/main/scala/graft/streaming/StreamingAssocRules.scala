@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.queries.Analytics
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the market-basket rule substrate — the
   * continuous face of `assoc_rules`: per-batch brand baskets fold
@@ -23,7 +23,7 @@ import graft.queries.Analytics
   * state is ≤|brands|² + |brands| + 1 rows regardless of order volume.
   */
 class StreamingAssocRulesJob(spark: SparkSession, statePath: String,
-                             brandDim: DataFrame, compactEvery: Int = 16) {
+                             brandDim: DataFrame, compactEvery: Int = 16) extends MicroBatchJob {
 
   private val dim = brandDim.select("p_partkey", "p_brand")
 
@@ -55,13 +55,4 @@ class StreamingAssocRulesJob(spark: SparkSession, statePath: String,
       Seq.empty[(String, String, Long, Double, Double, Double)]
         .toDF("antecedent", "consequent", "n_xy", "support", "confidence", "lift")
   }
-
-  /** Run continuously over a streaming lineitem frame. */
-  def start(lineitems: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    lineitems.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the BIGRAM substrates — the continuous face
   * of [[TextFunctions.tokenPmi]] and [[TextFunctions.bigramLogprob]]:
@@ -25,7 +25,7 @@ import graft.functions.TextFunctions
   * across plain replay, compaction, and replay-across-compaction.
   */
 class StreamingBigramJob(spark: SparkSession, statePath: String,
-                         compactEvery: Int = 16) {
+                         compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val tokens = DeltaStore.additive(spark, statePath,
     "tokens", Seq("token"), Seq("n", "n_docs"), compactEvery)
@@ -102,13 +102,4 @@ class StreamingBigramJob(spark: SparkSession, statePath: String,
         .select(lit(0L).as("doc_id"), lit(0L).as("n_bigrams"),
           lit(0.0).as("avg_neg_logprob")).limit(0)
     }
-
-  /** Run continuously over a streaming (doc_id, text) frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

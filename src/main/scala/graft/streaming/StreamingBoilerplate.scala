@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the corpus sentence-document-frequency
   * relation — the continuous face of `boilerplate_stats`
@@ -24,7 +24,7 @@ import graft.functions.TextFunctions
   * the corpus-level boilerplate mass a curation dashboard watches.
   */
 class StreamingBoilerplateJob(spark: SparkSession, statePath: String,
-                              compactEvery: Int = 16) {
+                              compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "sentence_df", Seq("s"), Seq("sdf"), compactEvery)
@@ -56,13 +56,4 @@ class StreamingBoilerplateJob(spark: SparkSession, statePath: String,
       coalesce(round(sum(when(col("sdf") >= 2, col("sdf")).otherwise(0L))
           .cast("double") / sum(col("sdf")), 4), lit(0.0))
         .as("dup_occurrence_share"))
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

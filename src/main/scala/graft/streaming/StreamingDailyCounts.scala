@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.queries.Analytics
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the per-(event_type, day) count state —
   * the continuous substrate under the monitoring stack
@@ -25,7 +25,7 @@ import graft.queries.Analytics
   *      no FP residue).
   */
 class StreamingDailyCountsJob(spark: SparkSession, statePath: String,
-                              compactEvery: Int = 16) {
+                              compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "daily_counts", Seq("event_type", "day"), Seq("n_events"), compactEvery)
@@ -61,13 +61,4 @@ class StreamingDailyCountsJob(spark: SparkSession, statePath: String,
     import spark.implicits._
     Seq.empty[(String, String, Long)].toDF("event_type", "day", "n_events")
   }
-
-  /** Run continuously over a streaming events frame. */
-  def start(events: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

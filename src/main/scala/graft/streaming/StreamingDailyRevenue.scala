@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.queries.Analytics
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the exact-cents daily revenue substrate —
   * ONE maintained (priority, day, n_orders, cents) relation serving
@@ -20,7 +20,7 @@ import graft.queries.Analytics
   * substrate's own (priority, day) grain in both paths).
   */
 class StreamingDailyRevenueJob(spark: SparkSession, statePath: String,
-                               compactEvery: Int = 16) {
+                               compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "daily_revenue", Seq("priority", "day"), Seq("n_orders", "cents"), compactEvery)
@@ -44,13 +44,4 @@ class StreamingDailyRevenueJob(spark: SparkSession, statePath: String,
   /** Maintained month-over-month growth — the batch entry's own face. */
   def readMonthly(): DataFrame =
     Analytics.monthlyGrowthFace(state.state().getOrElse(empty))
-
-  /** Run continuously over a streaming orders frame. */
-  def start(orders: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    orders.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.ParquetUpsertSink
+import graft.sources.MicroBatchJob
 
 /** Continuous face of [[graft.queries.Graph.degreeMaintain]] — the
   * maintained co-purchase degree table kept current from a stream of
@@ -47,7 +47,7 @@ import graft.cdc.ParquetUpsertSink
   */
 class StreamingDegreeMaintainJob(
     spark: SparkSession, statePath: String,
-    numBuckets: Int = 8, compactEvery: Int = 16) {
+    numBuckets: Int = 8, compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val edgeSink =
     new ParquetUpsertSink(spark, s"$statePath/edges", Seq("src", "dst"), numBuckets)
@@ -97,6 +97,8 @@ class StreamingDegreeMaintainJob(
       batchId)
   }
 
+  /** One micro-batch of (l_orderkey, l_partkey) rows carrying
+    * complete baskets. */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
     processBatchSteps(batch, batchId, stopAfterStep = 2)
 
@@ -108,16 +110,4 @@ class StreamingDegreeMaintainJob(
     case Some(s) => s.filter(col("d_deg") > 0)
       .select(col("node"), col("d_deg").as("degree"))
   }
-
-  /** Run continuously over a stream of (l_orderkey, l_partkey) rows
-    * carrying complete baskets per micro-batch. */
-  def start(lines: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    lines.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId)
-      }
-      .trigger(trigger)
-      .start()
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sources.LocalFs
+import graft.sources.{LocalFs, MicroBatchJob}
 import graft.functions.TextFunctions
 
 /** Streaming DSIR scoring — the model-serving face of
@@ -46,7 +45,7 @@ import graft.functions.TextFunctions
   * of corpus size.
   */
 class StreamingDsirJob(spark: SparkSession, modelPath: String,
-                       compactEvery: Int = 16) {
+                       compactEvery: Int = 16) extends MicroBatchJob {
 
   private val pendingDir = new Path(modelPath, "pending")
   private def model(fit: => Option[DataFrame]): Option[DataFrame] =
@@ -169,13 +168,4 @@ class StreamingDsirJob(spark: SparkSession, modelPath: String,
     Seq.empty[(Long, Int, Long, Double)]
       .toDF("doc_id", "is_target", "n_bigrams", "dsir_logw")
   }
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

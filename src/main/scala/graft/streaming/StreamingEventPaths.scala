@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.ParquetUpsertSink
 import graft.queries.Analytics
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of each user's journey PREFIX — the first
   * [[Analytics.PathLen]] events by (ts, event_id) — with the batch
@@ -35,7 +35,7 @@ import graft.queries.Analytics
   * code path as the batch entry, so streamed == batch is structural.
   */
 class StreamingEventPathsJob(spark: SparkSession, statePath: String,
-                             k: Int = Analytics.PathLen, numBuckets: Int = 8) {
+                             k: Int = Analytics.PathLen, numBuckets: Int = 8) extends MicroBatchJob {
 
   private[graft] val sink =
     new ParquetUpsertSink(spark, s"$statePath/state", Seq("user_id"), numBuckets)
@@ -87,13 +87,4 @@ class StreamingEventPathsJob(spark: SparkSession, statePath: String,
   /** The batch `event_paths` histogram over the maintained prefixes —
     * [[Analytics.pathHistogram]] verbatim. */
   def readPaths(): DataFrame = Analytics.pathHistogram(readPrefixes())
-
-  /** Run continuously over a streaming events frame. */
-  def start(events: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{AggMaintain, CdcOps, JoinMaintain, ParquetUpsertSink}
+import graft.sources.MicroBatch
 
 /** Continuous face of [[graft.cdc.JoinMaintain]]: keep the aggregated
   * join view V = γ_{A.grp}(A ⋈_{A.key=B.fk} B) current from ONE
@@ -155,12 +156,8 @@ class StreamingJoinMaintainJob(
     */
   def start(tagged: DataFrame, splitA: DataFrame => DataFrame,
             splitB: DataFrame => DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    tagged.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(splitA(batch), splitB(batch), batchId)
-      }
-      .trigger(trigger)
-      .start()
+            trigger: Trigger = MicroBatch.DefaultTrigger): StreamingQuery =
+    MicroBatch.start(tagged, checkpoint, trigger) { (batch, batchId) =>
+      processBatch(splitA(batch), splitB(batch), batchId)
+    }
 }

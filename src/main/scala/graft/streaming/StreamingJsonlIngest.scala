@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField}
-import graft.sources.{CorpusIO, LocalFs}
+import graft.sources.{CorpusIO, LocalFs, MicroBatch}
 
 /** Continuous JSONL landing-zone ingestion — the streaming face of
   * [[CorpusIO]]: a corpus-building pipeline's producers drop jsonl
@@ -86,15 +86,12 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
     * checkpointed file log makes each shard process exactly once.
     */
   def start(landingDir: String, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    spark.readStream
-      .schema(CorpusIO.DocSchema.add(StructField("_corrupt_record", StringType)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
+            trigger: Trigger = MicroBatch.DefaultTrigger): StreamingQuery =
+    MicroBatch.start(
+      spark.readStream
+        .schema(CorpusIO.DocSchema.add(StructField("_corrupt_record", StringType)))
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(landingDir),
+      checkpoint, trigger)(processBatch)
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.similarity.KMeans
+import graft.sources.MicroBatchJob
 
 /** Streaming cluster assignment — the model-serving face of
   * [[KMeans.embeddingKmeans]] for a continuous embedding ingest
@@ -36,7 +36,7 @@ import graft.similarity.KMeans
   * stats are k-bounded regardless of corpus size.
   */
 class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
-                               compactEvery: Int = 16) {
+                               compactEvery: Int = 16) extends MicroBatchJob {
 
   private def centroids(fit: => Option[DataFrame]): Option[DataFrame] =
     DeltaStore.frozenModel(spark, modelPath, "centroids")(fit.map(Seq(_))).map(_.head)
@@ -94,13 +94,4 @@ class StreamingKMeansAssignJob(spark: SparkSession, modelPath: String,
     import spark.implicits._
     Seq.empty[(Long, Int, Double)].toDF("vec_id", "cluster_id", "dist")
   }
-
-  /** Run continuously over a streaming (vec_id, embedding) frame. */
-  def start(embs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.similarity.Ann
-import graft.sources.LocalFs
+import graft.sources.{LocalFs, MicroBatchJob}
 
 /** Streaming k-NN-graph maintenance — the continuous face of
   * [[graft.similarity.Ann.knnGraphIncremental]], built on the
@@ -34,7 +33,7 @@ import graft.sources.LocalFs
   * batch recompute regardless of replays (asserted in the spec).
   */
 class StreamingKnnMaintainJob(spark: SparkSession, indexPath: String,
-                              nCells: Int = 16, k: Int = 5) {
+                              nCells: Int = 16, k: Int = 5) extends MicroBatchJob {
 
   private val edgesDir = new Path(indexPath, "edges")
   private val assigned = DeltaStore.log(spark, indexPath, "assigned", Seq("vec_id", "embedding", "cell"))
@@ -90,13 +89,4 @@ class StreamingKnnMaintainJob(spark: SparkSession, indexPath: String,
       .mode("overwrite")
       .parquet(edgesDir.toString)
   }
-
-  /** Run continuously over a streaming (vec_id, embedding) frame. */
-  def start(embs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the `mix_temperature_plan` stratum table —
   * ONE maintained (source, n_docs, tokens) relation serving the
@@ -20,7 +20,7 @@ import graft.functions.TextFunctions
   * weights without rescanning the corpus.
   */
 class StreamingMixPlanJob(spark: SparkSession, statePath: String,
-                          compactEvery: Int = 16) {
+                          compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "mix_strata", Seq("source"), Seq("n_docs", "tokens"), compactEvery)
@@ -38,13 +38,4 @@ class StreamingMixPlanJob(spark: SparkSession, statePath: String,
   /** Maintained temperature-mixture plan — the batch entry's own face. */
   def readPlan(): DataFrame =
     TextFunctions.mixPlanFace(state.state().getOrElse(empty))
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.dedup.Dedup
+import graft.sources.MicroBatchJob
 
 /** Streaming near-duplicate detection — the streaming face of
   * [[graft.dedup.Dedup.incrementalCandidatesFromBands]] for continuous
@@ -35,7 +35,7 @@ import graft.dedup.Dedup
   */
 class StreamingNearDedupJob(spark: SparkSession, indexPath: String,
                             onCandidates: (DataFrame, Long) => Unit,
-                            compactEvery: Int = 16) {
+                            compactEvery: Int = 16) extends MicroBatchJob {
 
   private val index = new DeltaStore(spark, indexPath, "bands",
     Seq("doc_id", "band_id", "band_hash"), compactEvery, identity)
@@ -64,13 +64,4 @@ class StreamingNearDedupJob(spark: SparkSession, indexPath: String,
     onCandidates(candidates, batchId)
     index.append(newBands, batchId)
   }
-
-  /** Run continuously over a streaming (doc_id, text) frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

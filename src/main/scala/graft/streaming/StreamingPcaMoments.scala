@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.similarity.Pca
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the PCA moment state — the continuous face
   * of [[Pca.pcaSpectrum]] for an embedding ingest stream:
@@ -29,11 +29,12 @@ import graft.similarity.Pca
   * order across batch boundaries).
   */
 class StreamingPcaMomentsJob(spark: SparkSession, statePath: String,
-                             compactEvery: Int = 16) {
+                             compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "moments", Seq("i", "j"), Seq("s"), compactEvery)
 
+  /** One micro-batch of rows carrying an `embedding` column. */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
     state.append(Pca.momentRows(batch), batchId)
 
@@ -54,16 +55,4 @@ class StreamingPcaMomentsJob(spark: SparkSession, statePath: String,
     case Some((_, cov, _)) =>
       Pca.spectrumFrom(spark, Pca.jacobiEigen(cov)._1, q)
   }
-
-  /** Run continuously over a stream of rows carrying an `embedding`
-    * column. */
-  def start(vectors: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId)
-      }
-      .trigger(trigger)
-      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.multimodal.BinaryPipeline
+import graft.sources.MicroBatchJob
 
 /** Streaming PERCEPTUAL image dedup — the continuous face of
   * [[BinaryPipeline.phashDedup]] for an image ingest: the corpus seen
@@ -33,7 +33,7 @@ import graft.multimodal.BinaryPipeline
   */
 class StreamingPhashDedupJob(spark: SparkSession, indexPath: String,
                              onPairs: (DataFrame, Long) => Unit,
-                             compactEvery: Int = 16) {
+                             compactEvery: Int = 16) extends MicroBatchJob {
 
   private val index = new DeltaStore(spark, indexPath, "hashes",
     Seq("item_id", "phash_hi", "phash_lo"), compactEvery, identity)
@@ -62,13 +62,4 @@ class StreamingPhashDedupJob(spark: SparkSession, indexPath: String,
     onPairs(pairs, batchId)
     index.append(hashes, batchId)
   }
-
-  /** Run continuously over a streaming (item_id, payload) frame. */
-  def start(images: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    images.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.queries.Analytics
+import graft.sources.MicroBatchJob
 
 /** Continuous Population-Stability-Index monitor — the deployed form
   * of `value_psi` ([[Analytics.valuePsi]]): in production the
@@ -29,7 +29,7 @@ import graft.queries.Analytics
   *      mix (the retrain alarm, live instead of nightly).
   */
 class StreamingPsiJob(spark: SparkSession, modelPath: String,
-                      compactEvery: Int = 16) {
+                      compactEvery: Int = 16) extends MicroBatchJob {
 
   /** The frozen (bounds, reference) pair. */
   private def model(fit: => Option[Seq[DataFrame]]): Option[Seq[DataFrame]] =
@@ -80,13 +80,4 @@ class StreamingPsiJob(spark: SparkSession, modelPath: String,
           Seq("event_type", "bucket"), "full")
         .na.fill(0L, Seq("a", "b")))
   }
-
-  /** Run continuously over a streaming events frame. */
-  def start(events: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

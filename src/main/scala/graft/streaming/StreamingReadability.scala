@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the corpus readability profile — the
   * continuous face of `text_readability`, folding each document batch
@@ -21,7 +21,7 @@ import graft.functions.TextFunctions
   * exactly).
   */
 class StreamingReadabilityJob(spark: SparkSession, statePath: String,
-                              compactEvery: Int = 16) {
+                              compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "readability", Seq("lang", "source"), Seq("n_docs", "t", "s", "c"), compactEvery)
@@ -44,13 +44,4 @@ class StreamingReadabilityJob(spark: SparkSession, statePath: String,
       Seq.empty[(String, String, Long, Double, Double, Double)]
         .toDF("lang", "source", "n_docs", "wps", "cpw", "ease")
   }
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

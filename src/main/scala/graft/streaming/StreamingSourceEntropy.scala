@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the (source, lang) document-count relation
   * — the continuous face of `source_lang_entropy`
@@ -22,7 +22,7 @@ import graft.functions.TextFunctions
   * training mix starts skewing.
   */
 class StreamingSourceEntropyJob(spark: SparkSession, statePath: String,
-                                compactEvery: Int = 16) {
+                                compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "source_lang", Seq("source", "lang"), Seq("c"), compactEvery)
@@ -41,13 +41,4 @@ class StreamingSourceEntropyJob(spark: SparkSession, statePath: String,
   /** Maintained per-source entropy — the batch entry's own face. */
   def readEntropy(): DataFrame =
     TextFunctions.entropyFace(state.state().getOrElse(empty))
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming maintenance of the corpus token statistics — ONE
   * maintained (token, n, n_docs) relation serving the `token_vocab`
@@ -18,7 +18,7 @@ import graft.functions.TextFunctions
   * (integer counts, zero FP residue up to the faces' own rounding).
   */
 class StreamingTokenStatsJob(spark: SparkSession, statePath: String,
-                             compactEvery: Int = 16) {
+                             compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "token_stats", Seq("token"), Seq("n", "n_docs"), compactEvery)
@@ -41,13 +41,4 @@ class StreamingTokenStatsJob(spark: SparkSession, statePath: String,
   /** Maintained Zipf fit — the batch entry's own face. */
   def readZipf(): DataFrame =
     TextFunctions.zipfFace(state.state().getOrElse(empty))
-
-  /** Run continuously over a streaming documents frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{AggMaintain, CdcOps, ParquetUpsertSink}
+import graft.sources.MicroBatchJob
 
 /** Continuous face of the maintained ordered-statistic family
   * ([[AggMaintain.topkMaintain]] / [[AggMaintain.minmaxMaintain]]):
@@ -49,7 +49,7 @@ class StreamingTopKMaintainJob(
     spark: SparkSession, statePath: String,
     key: String = "user_id", grpCol: String = "last_event_type",
     valCol: String = "last_value", k: Int = 3,
-    numBuckets: Int = 8, compactEvery: Int = 16) {
+    numBuckets: Int = 8, compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val sink =
     new ParquetUpsertSink(spark, s"$statePath/state", Seq(key), numBuckets)
@@ -81,6 +81,8 @@ class StreamingTopKMaintainJob(
     if (!batch.isEmpty) sink.merge(batch, batchId)
   }
 
+  /** One micro-batch of a keyed CDC changelog (keyCols ++ dataCols
+    * ++ op, ts_ms, seq — the shared pre-parsed delivery shape). */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
     processBatchSteps(batch, batchId, stopAfterStep = 2)
 
@@ -103,18 +105,4 @@ class StreamingTopKMaintainJob(
 
   /** Maintained min/max/median for free off the same relation. */
   def readExtrema(): DataFrame = AggMaintain.readExtrema(readSupport())
-
-  /** Run continuously over a keyed CDC changelog stream
-    * (keyCols ++ dataCols ++ op, ts_ms, seq — the shared pre-parsed
-    * delivery shape).
-    */
-  def start(changes: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId)
-      }
-      .trigger(trigger)
-      .start()
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
+import graft.sources.MicroBatchJob
 
 /** Streaming corpus-vocabulary maintenance — the streaming face of
   * [[graft.functions.TextFunctions.tokenVocab]] for continuous document
@@ -29,7 +29,7 @@ import graft.functions.TextFunctions
   * slot) lives in [[DeltaStore]].
   */
 class StreamingVocabJob(spark: SparkSession, statePath: String,
-                        compactEvery: Int = 16) {
+                        compactEvery: Int = 16) extends MicroBatchJob {
 
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "vocab", Seq("token"), Seq("n", "n_docs"), compactEvery)
@@ -73,13 +73,4 @@ class StreamingVocabJob(spark: SparkSession, statePath: String,
 
   /** Fold the per-batch deltas into one (sum-of-sums == sum). */
   def compact(): Unit = state.compact()
-
-  /** Run continuously over a streaming (doc_id, text) frame. */
-  def start(docs: DataFrame, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
-      .trigger(trigger)
-      .start()
 }

@@ -535,12 +535,21 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       when(col("op") =!= "d", image), when(col("op") === "d", image), "users", lsnCol = col("seq"))
   }
 
-  /** The checkpoint file manager behind a running query's offset log. */
-  private def offsetLogManager(q: org.apache.spark.sql.streaming.StreamingQuery): AnyRef = {
+  /** The checkpoint file managers behind a running query's offset log
+    * and its file sources' logs.
+    */
+  private def logManagers(q: org.apache.spark.sql.streaming.StreamingQuery): Map[String, AnyRef] = {
     import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
-    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-    val log = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.offsetLog
-    classOf[HDFSMetadataLog[_]].getMethod("fileManager").invoke(log)
+    import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSource, StreamingQueryWrapper}
+    def manager(log: AnyRef): AnyRef = classOf[HDFSMetadataLog[_]].getMethod("fileManager").invoke(log)
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    val sourceLog = classOf[FileStreamSource].getDeclaredFields
+      .find(f => classOf[HDFSMetadataLog[_]].isAssignableFrom(f.getType)).get
+    sourceLog.setAccessible(true)
+    val fileSources = exec.getClass.getMethod("sources").invoke(exec).asInstanceOf[Seq[AnyRef]]
+      .collect { case f: FileStreamSource => f }
+    Map("offsets" -> manager(exec.offsetLog)) ++
+      fileSources.zipWithIndex.map { case (f, i) => s"sources/$i" -> manager(sourceLog.get(f)) }
   }
 
   test("every CDC job starts in a stream session: caller conf untouched, offset log through LocalFs") {
@@ -558,7 +567,8 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       s"$tmp/state-$name", Seq("user_id"), CdcQueries.userPkSchema, CdcQueries.userRowSchema, 8)
 
     /** Run `start` until its input is consumed; check the caller's conf
-      * and the offset log's manager while it runs.
+      * and the managers of the offset log and any file source's log
+      * while it runs.
       */
     def run(label: String)(start: => StreamingQuery): Unit = {
       val before = spark.conf.getAll
@@ -566,13 +576,13 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       try {
         q.processAllAvailable()
         assert(spark.conf.getAll === before, s"$label wrote the caller's conf")
-        offsetLogManager(q) match {
-          case m: LocalFsCheckpointFileManager => m.underlying match {
+        logManagers(q).foreach {
+          case (log, m: LocalFsCheckpointFileManager) => m.underlying match {
             case l: LocalFsCheckpointFileManager.Local =>
-              assert(l.fileSystem.getClass === classOf[LocalFs], label)
-            case other => fail(s"$label: a file: checkpoint under ${other.getClass}")
+              assert(l.fileSystem.getClass === classOf[LocalFs], s"$label $log")
+            case other => fail(s"$label: a file: $log under ${other.getClass}")
           }
-          case other => fail(s"$label: offset log under ${other.getClass}")
+          case (log, other) => fail(s"$label: $log under ${other.getClass}")
         }
       } finally q.stop()
       assert(spark.conf.getAll === before, s"$label wrote the caller's conf")
@@ -603,6 +613,25 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       .execute(Trigger.ProcessingTime(0L)))
     run("CdcInitialLoadJob")(new CdcInitialLoadJob(spark, config(FileSource(s"$tmp/in"), "initial"))
       .execute(Trigger.ProcessingTime(0L)))
+
+    // the graft.streaming jobs start the same way: a job over a memory
+    // stream of the caller's session, and the JSONL ingest, whose file
+    // source is read on the caller's session and logs through LocalFs
+    val events = Tables.events(spark, sfDir).select("event_type", "ts")
+    val eventStream = MemoryStream[(String, java.sql.Timestamp)]
+    eventStream.addData(events.as[(String, java.sql.Timestamp)].collect().toSeq)
+    val counts = new graft.streaming.StreamingDailyCountsJob(spark, s"$tmp/state-daily")
+    run("StreamingDailyCountsJob")(counts.start(eventStream.toDF().toDF("event_type", "ts"),
+      s"$tmp/ckpt-daily", Trigger.ProcessingTime(0L)))
+    assert(counts.readDaily().get.agg(sum("n_events")).head().getLong(0) === events.count())
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/landing"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/landing/a.jsonl"),
+      """{"doc_id": 1, "text": "alpha", "lang": "en", "source": "web", "n_chars": 5}""".getBytes("UTF-8"))
+    val ingest = new graft.streaming.StreamingJsonlIngestJob(spark,
+      s"$tmp/corpus", s"$tmp/quarantine", s"$tmp/ingest-stats")
+    run("StreamingJsonlIngestJob")(ingest.start(s"$tmp/landing", s"$tmp/ckpt-jsonl",
+      Trigger.ProcessingTime(0L)))
+    assert(ingest.readCorpus().count() === 1)
     assert(spark.conf.getOption(LocalFsCheckpointFileManager.ConfKey).isEmpty)
     ch.unpersist(); envelopes.unpersist()
   }
@@ -656,6 +685,42 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
           s"state after tranche $n")
       }
     ch.unpersist()
+
+    // the same moves for a graft.streaming job, over a file source of
+    // the caller's session
+    val events = Tables.events(spark, sfDir).select("event_id", "event_type", "ts").cache()
+    val evDir = s"$tmp/events"
+    val evCkpt = s"$tmp/ckpt-daily"
+    val counts = new graft.streaming.StreamingDailyCountsJob(spark, s"$tmp/state-daily")
+    val eventStream = () => spark.readStream.schema(events.schema).parquet(evDir)
+    def dailyDefaultRun(): Unit =
+      eventStream().writeStream
+        .option("checkpointLocation", evCkpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) => counts.processBatch(b, id) }
+        .start().awaitTermination()
+    def dailyStreamSessionRun(): Unit =
+      counts.start(eventStream(), evCkpt, Trigger.AvailableNow()).awaitTermination()
+    val maxId = events.agg(max("event_id")).head().getLong(0)
+    var fromId = -1L
+    Seq[() => Unit](() => dailyDefaultRun(), () => dailyStreamSessionRun(), () => dailyDefaultRun())
+      .zipWithIndex.foreach { case (run, n) =>
+        val bound = maxId * (n + 1) / 3
+        events.filter(col("event_id") > fromId && col("event_id") <= bound)
+          .write.mode("append").parquet(evDir)
+        fromId = bound
+        run()
+        val ids = (0 to n).map(_.toString)
+        def logged(log: String): Seq[String] =
+          new java.io.File(s"$evCkpt/$log").list().filterNot(_.startsWith(".")).sorted.toSeq
+        assert(logged("offsets") === ids && logged("commits") === ids, s"daily counts, tranche $n")
+        val expected = events.filter(col("event_id") <= bound)
+          .groupBy(col("event_type"), to_date(col("ts")).as("day")).agg(count(lit(1)).as("n_events"))
+        val state = counts.readDaily().get.select("event_type", "day", "n_events")
+        assert(state.exceptAll(expected).count() === 0 && expected.exceptAll(state).count() === 0,
+          s"daily counts after tranche $n")
+      }
+    events.unpersist()
   }
 
   test("the LocalFs checkpoint manager: an overwrite replaces a file, a plain create refuses it") {
@@ -680,8 +745,9 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     assert(read() === "two", "an overwrite must replace the file, not keep the old one")
     intercept[java.io.IOException](write("three", overwrite = false))
     assert(read() === "two", "a plain create must not replace the file")
-    assert(mgr.list(new Path(tmp, "log")).map(_.getPath.getName).filterNot(_.startsWith("."))
-      .toSeq === Seq("0"), "one log file, under its own name")
+    // the refused create's temp file and its checksum are gone too
+    assert(new java.io.File(tmp, "log").list().sorted.toSeq === Seq(".0.crc", "0"),
+      "one log file and its checksum, under their own names")
   }
 
   test("ingest -> exportSnapshot -> analytics equals the same analytics over latestState") {

@@ -31,4 +31,22 @@ class EntryPointSpec extends AnyFunSuite {
       .toSet
     assert(mains === Set("graft.Bench", "graft.Verify"))
   }
+
+  test("every stream starts in graft.sources.MicroBatch, which alone enables its checkpoint manager") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    def naming(token: String): Map[String, Int] = sources
+      .map { case (f, text) => f -> text.sliding(token.length).count(_ == token) }
+      .filter(_._2 > 0).toMap
+    val module = "graft/sources/MicroBatch.scala"
+    assert(naming(".writeStream") === Map(module -> 1))
+    // the manager's own file defines the key; only the start module sets it
+    assert(naming("LocalFsCheckpointFileManager.ConfKey").keySet --
+      Set("graft/sources/LocalFsCheckpointFileManager.scala") === Set(module))
+    assert(naming("cloneSession(").keySet === Set(module, "org/apache/spark/sql/GraftExpressionBridge.scala"))
+  }
 }
