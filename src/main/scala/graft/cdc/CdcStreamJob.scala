@@ -30,6 +30,8 @@ final case class MemorySource(raw: DataFrame) extends CdcSource
 
 /** One table's binding in a multi-table CDC stream: which envelope
   * `source.table` it claims, where its state lives, and its shapes.
+  * `numBuckets` is the most files its state is split into (see
+  * [[ParquetUpsertSink]]: the state's size picks the bucket count).
   */
 final case class TableRoute(
     table: String,
@@ -39,6 +41,10 @@ final case class TableRoute(
     rowSchema: StructType,
     numBuckets: Int = 64)
 
+/** One CDC stream's source, checkpoint and state. `numBuckets` is the
+  * most files the state is split into (see [[ParquetUpsertSink]]: the
+  * state's size picks the bucket count).
+  */
 final case class CdcJobConfig(
     source: CdcSource,
     checkpointLocation: String,

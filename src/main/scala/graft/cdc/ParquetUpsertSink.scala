@@ -21,8 +21,10 @@ import graft.sources.LocalFs
   *   statePath/
   *     _manifest.v<e>          committed bucket map for epoch e
   *                             (one "bucket<TAB>relative/dir" line per
-  *                             live bucket, a "#schema<TAB>json" line and,
-  *                             for a stream writer, a
+  *                             live bucket, a "#schema<TAB>json" line,
+  *                             a "#layout<TAB>n<TAB>b:bytes,..." line
+  *                             (bucket count and each bucket's data
+  *                             bytes) and, for a stream writer, a
   *                             "#txn<TAB>queryId<TAB>batchId" line;
   *                             highest e wins)
   *     v<e>-<attempt>/bucket=<b>/part-N.parquet  immutable data written
@@ -49,36 +51,59 @@ import graft.sources.LocalFs
   * no "resurrection" of deleted rows from a directory that an
   * overwrite-based scheme would have skipped rewriting.
   *
-  * Write cost: a micro-batch touches only the buckets its keys hash
-  * into (`b = pmod(hash(key), numBuckets)`), and the merge reads and
-  * REWRITES each of those buckets whole. The rewrite follows the number
-  * of dirty buckets, not the batch size: with 64 buckets over 20k keys
-  * a 10-key batch rewrites about 2.9k rows (~0.3% of them changed),
-  * and a 100-key batch already dirties about 45 of the 64 buckets.
-  * Each dirty bucket is also one file written — a parquet file, its
-  * `.crc` and its bucket dir — and that cost is paid per dirty bucket
-  * whatever its row count. Written through [[graft.sources.LocalFs]]
-  * it is about 5 ms a file (4 vCPUs: 0.32 s for 9.5 files, 0.56 s for
-  * 64); through Hadoop's stock local file system without `libhadoop`
-  * each one forks three `chmod` processes (file, `.crc`, dir), about
-  * 30 ms a file (0.55 s, 2.25 s).
+  * Layout: a committed state is split into `n` hash buckets, one data
+  * file each, keyed by `b = pmod(hash(key), n)`. The state decides `n`:
+  * each commit picks the power of two, at most `numBuckets`, whose
+  * buckets hold about `spark.sql.files.openCostInBytes` (Spark's own
+  * figure for what opening a file costs, 4 MB by default) and records
+  * `n` and every bucket's data bytes in a `#layout` manifest line. A
+  * commit whose recorded buckets hold more than twice the open cost on
+  * average (with room to grow), or at most a quarter of it (with room
+  * to shrink), or whose bucket count exceeds `numBuckets`, RE-LAYS the
+  * state out: it rewrites every bucket under the fitted `n`, as one
+  * ordinary epoch. That 2× band around the target of a half to one
+  * open cost a bucket means a state that sits near a boundary is not
+  * rewritten whole on every commit, and a growing state re-lays out at
+  * most once per doubling. Epoch 0 is laid out in `numBuckets`, so a
+  * large initial load writes in parallel; a manifest without a
+  * `#layout` line (written before it existed) counts as `numBuckets`
+  * buckets, sized by listing its dirs once. A 20k-row state of about
+  * 0.66 MB is one bucket.
   *
-  * Merge shape: a commit is three Spark jobs — the dirty-bucket collect
-  * (a per-partition distinct, no exchange) and the write's two stages.
-  * The base rows of the dirty buckets and the batch's change rows are
-  * unioned and repartitioned ONCE, by bucket, into
-  * `min(dirty buckets, defaultParallelism)` partitions, then folded per
-  * (bucket, key) ([[CdcOps.mergeChangeSet]]'s union-fold). That fold's
-  * sort also orders the rows by bucket, so the `partitionBy("bucket")`
-  * write plans no second exchange and no second sort, and several tasks
-  * write the dirty buckets in parallel (an unsized repartition would be
-  * coalesced by AQE into one writer task). PlanSpec pins the shape.
+  * Write cost: a micro-batch touches only the buckets its keys hash
+  * into, and the merge reads and REWRITES each of those buckets whole.
+  * The rewrite follows the number of dirty buckets, not the batch
+  * size: at one bucket every commit rewrites the whole state (20k rows
+  * for a 10-key batch, in one task), and with 64 buckets over the same
+  * keys a 10-key batch would rewrite about 2.9k rows in 9.5 files,
+  * while a 100-key batch already dirties about 45 of them. Each dirty
+  * bucket is also one file written — a parquet file, its `.crc` and
+  * its bucket dir — paid per dirty bucket whatever its row count: about
+  * 5 ms a file through [[graft.sources.LocalFs]] (4 vCPUs), about 30 ms
+  * through Hadoop's stock local file system without `libhadoop`, which
+  * forks three `chmod` processes per file. Sizing buckets at the open
+  * cost keeps that fixed cost small against the bytes a bucket holds.
+  *
+  * Merge shape: a commit is at most three Spark jobs — the dirty-bucket
+  * collect (a per-partition distinct, no exchange; skipped at one
+  * bucket, where every key is in bucket 0, and on a re-layout, where
+  * every bucket is dirty) and the write's two stages. The base rows of
+  * the dirty buckets and the batch's change rows are unioned and
+  * repartitioned ONCE, by bucket, into `min(dirty buckets,
+  * defaultParallelism)` partitions, then folded per (bucket, key)
+  * ([[CdcOps.mergeChangeSet]]'s union-fold). That fold's sort also
+  * orders the rows by bucket, so the `partitionBy("bucket")` write plans
+  * no second exchange and no second sort, and several tasks write the
+  * dirty buckets in parallel (an unsized repartition would be coalesced
+  * by AQE into one writer task). PlanSpec pins the shape.
   *
   * Read path: the committed manifest is the only file index. Every read
   * (and the merge's base read) scans the bucket directories a manifest
   * references through [[ManifestFileIndex]], which lists each directory
   * once on the driver — no Spark listing job, however many buckets the
-  * read spans.
+  * read spans. A read opens one file per bucket, so a state sized to
+  * one bucket is one file; [[changesBetween]] opens only the dirs the
+  * two epochs do not share.
   */
 class ParquetUpsertSink(spark: SparkSession, statePath: String,
                         keyCols: Seq[String], numBuckets: Int = 64,
@@ -87,7 +112,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     "retainEpochs must keep at least the current and previous manifest " +
       "(in-flight readers planned against the previous epoch)")
 
-  private def bucketCol = pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("bucket")
+  private def bucketCol(n: Int) = pmod(hash(keyCols.map(col): _*), lit(n)).as("bucket")
 
   private def root = new Path(statePath)
   private lazy val fs: FileSystem = LocalFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
@@ -114,8 +139,9 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
   private def readManifest(): Option[StateManifest] =
     manifests().lastOption.map { case (epoch, p) => readManifestAt(epoch, p) }
 
-  /** Parse one manifest; `#` lines other than `#schema` and `#txn` are
-    * skipped, so a newer writer's metadata never breaks an older reader.
+  /** Parse one manifest; `#` lines other than `#schema`, `#layout` and
+    * `#txn` are skipped, so a newer writer's metadata never breaks an
+    * older reader.
     */
   private def readManifestAt(epoch: Long, p: Path): StateManifest = {
     val in = fs.open(p)
@@ -129,7 +155,37 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     }.toMap
     StateManifest(epoch, buckets,
       meta.get("#schema").map(DataType.fromJson(_).asInstanceOf[StructType]),
+      meta.get("#layout").map(Layout.parse),
       meta.get("#txn").map { v => val Array(q, b) = v.split('\t'); q -> b.toLong })
+  }
+
+  /** The layout a manifest was committed in. One without a `#layout`
+    * line was hashed into `numBuckets` buckets; its bytes are listed.
+    */
+  private def layoutOf(m: StateManifest): Layout = m.layout.getOrElse(
+    Layout(numBuckets, m.buckets.map { case (b, d) => b -> dirBytes(new Path(root, d)) }))
+
+  /** Data bytes of one bucket dir. */
+  private def dirBytes(dir: Path): Long = ManifestFileIndex.dataFiles(fs, dir).map(_.getLen).sum
+
+  /** The bucket count the next commit writes over `layout`. The fitted
+    * count is the smallest power of two, at most `numBuckets`, whose
+    * buckets hold no more than `spark.sql.files.openCostInBytes` each.
+    * The current count stays until its buckets hold more than twice
+    * that on average (and the fitted count is larger), or at most a
+    * quarter of it (and the fitted count is smaller), or it exceeds
+    * `numBuckets`. A re-layout to the fitted count brings the average
+    * back to between a half and one open cost, unless one bucket or
+    * `numBuckets` bounds it.
+    */
+  private def nextBuckets(layout: Layout): Int = {
+    val perFile = math.max(1L, spark.sessionState.conf.filesOpenCostInBytes)
+    val (n, bytes) = (layout.buckets, layout.bytes.values.sum)
+    var fitted = 1
+    while (fitted <= numBuckets / 2 && fitted * perFile < bytes) fitted *= 2
+    val tooBig = fitted > n && bytes > 2L * n * perFile
+    val tooSmall = fitted < n && 4L * bytes <= n * perFile
+    if (n > numBuckets || tooBig || tooSmall) fitted else n
   }
 
   /** The manifest of a retained epoch; fails loudly for any other. */
@@ -201,15 +257,23 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * attribute can't masquerade as an absent key. Both sides are read
     * with the `toEpoch` schema, so a column added in between null-fills
     * on the before side.
+    *
+    * Only the dirs the two manifests do not share are read: a key lives
+    * in exactly one dir per epoch, and a shared dir holds the same rows
+    * in both, so its keys are unchanged whatever the layout. Across a
+    * re-layout no dir is shared and both states are read whole.
     * Output: keyCols ++ change ∈ {added, removed, changed} ++ the
     * after-image data columns (NULL for removed keys).
     */
   def changesBetween(fromEpoch: Long, toEpoch: Long): DataFrame = {
     require(fromEpoch < toEpoch, s"need fromEpoch < toEpoch, got $fromEpoch, $toEpoch")
-    val from = manifestAt(fromEpoch)
-    val after = readStateAt(toEpoch)
+    val (from, to) = (manifestAt(fromEpoch), manifestAt(toEpoch))
+    val (fromDirs, toDirs) = (from.buckets.values.toSet, to.buckets.values.toSet)
+    // a manifest without a schema takes it from a footer of any of its files
+    val schema = to.schema.orElse(Some(scan(toDirs.toSeq, None).schema))
+    val after = scan((toDirs -- fromDirs).toSeq, schema)
     val dataCols = after.columns.filterNot(keyCols.contains).toSeq
-    val b = scan(from.buckets.values.toSeq, Some(after.schema)).withColumn("__b", lit(true)).alias("b")
+    val b = scan((fromDirs -- toDirs).toSeq, Some(after.schema)).withColumn("__b", lit(true)).alias("b")
     val a = after.withColumn("__a", lit(true)).alias("a")
     val joinCond = keyCols.map(k => col(s"b.$k") <=> col(s"a.$k")).reduce(_ && _)
     // exact null-safe struct compare — a hash digest here could collide
@@ -260,7 +324,9 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * applies it.
     *
     * The first commit folds the batch over an empty base, so every
-    * epoch is written by the same plan.
+    * epoch is written by the same plan. A commit whose recorded layout
+    * calls for another bucket count (see the class doc) folds the batch
+    * over the whole state and writes every bucket under the new count.
     */
   def merge(batch: DataFrame, batchId: Long): Unit = {
     val queryId = Option(spark.sparkContext.getLocalProperty(QueryIdKey))
@@ -268,9 +334,14 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     val last = readManifest()
     val applied = last.exists(_.txn.exists { case (q, b) => queryId.contains(q) && batchId <= b })
     if (!applied) {
-      val previous = last.fold(Map.empty[Int, String])(_.buckets)
-      val dirty = dirtyOf(batch)
-      val dirtyWithData = dirty.filter(previous.contains)
+      val layout = last.fold(Layout(numBuckets, Map.empty))(layoutOf)
+      val n = if (last.isEmpty) numBuckets else nextBuckets(layout)
+      val relayout = n != layout.buckets
+      val committed = last.fold(Map.empty[Int, String])(_.buckets)
+      // a re-layout replaces every entry of the previous manifest
+      val previous = if (relayout) Map.empty[Int, String] else committed
+      val dirty = if (relayout) 0 until n else dirtyOf(batch, n)
+      val baseDirs = if (relayout) committed.values.toSeq else dirty.flatMap(committed.get)
       // schema evolution: read dirty buckets with the MANIFEST schema
       // (older bucket files missing newer columns null-fill), and
       // merge over the UNION of batch and state data columns so a
@@ -279,27 +350,30 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       // the batch over an empty base.
       val schema = last.flatMap(_.schema)
       val base =
-        if (dirtyWithData.isEmpty && schema.isEmpty) emptyLike(batch, dataColsOf(batch))
-        else scan(dirtyWithData.map(previous), schema)
+        if (baseDirs.isEmpty && schema.isEmpty) emptyLike(batch, dataColsOf(batch))
+        else scan(baseDirs, schema)
       val baseDataCols = base.columns.toSeq
         .filterNot(c => keyCols.contains(c) || c == "last_ts_ms")
       val dataCols = (dataColsOf(batch) ++
         baseDataCols.filterNot(dataColsOf(batch).contains)).distinct
       val writers = math.max(1, math.min(dirty.size, spark.sparkContext.defaultParallelism))
-      val merged = CdcOps.foldChangeSet(base, batch, keyCols, dataCols, Some(bucketCol -> writers))
-      commit(last.fold(0L)(_.epoch + 1), previous, dirty, merged, txn.orElse(last.flatMap(_.txn)))
+      val merged = CdcOps.foldChangeSet(base, batch, keyCols, dataCols, Some(bucketCol(n) -> writers))
+      commit(last.fold(0L)(_.epoch + 1), previous, dirty, merged, txn.orElse(last.flatMap(_.txn)),
+        Layout(n, layout.bytes))
     }
   }
 
   private def dataColsOf(batch: DataFrame): Seq[String] =
     batch.columns.filterNot((keyCols ++ Seq("op", "ts_ms", "seq")).contains).toSeq
 
-  /** Distinct bucket ids of this batch — tiny (≤ numBuckets values).
-    * Each partition reduces its own ids to a set and the driver unions
-    * them: one job, no exchange.
+  /** Distinct bucket ids of this batch under `n` buckets — tiny (≤ n
+    * values). Each partition reduces its own ids to a set and the
+    * driver unions them: one job, no exchange. At one bucket every key
+    * is in bucket 0, and no job runs.
     */
-  private def dirtyOf(batch: DataFrame): Seq[Int] =
-    batch.select(bucketCol).as(Encoders.scalaInt)
+  private def dirtyOf(batch: DataFrame, n: Int): Seq[Int] =
+    if (n == 1) Seq(0)
+    else batch.select(bucketCol(n)).as(Encoders.scalaInt)
       .mapPartitions(ids => ids.toSet.iterator)(Encoders.scalaInt)
       .collect().distinct.sorted.toSeq
 
@@ -309,15 +383,18 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * against state, and every batch key hashes into a dirty bucket, so
     * the delta computed against this frame equals one computed against
     * the full state — spec-held). Cost is ¦dirty buckets¦ × bucket
-    * size, independent of total state size once buckets are sized to a
-    * fixed row target; [[readState]] by contrast reads everything.
-    * Returns an empty frame when no state is committed yet.
+    * size, and a bucket holds about `spark.sql.files.openCostInBytes`
+    * until the state outgrows `numBuckets` of them; [[readState]] by
+    * contrast reads everything. At one bucket this is the whole state,
+    * built without a Spark job. Returns an empty frame when no state is
+    * committed yet.
     */
   def readDirtyState(batch: DataFrame): DataFrame =
     readManifest() match {
       case None => emptyLike(batch, dataColsOf(batch))
       case Some(m) =>
-        val withData = dirtyOf(batch).filter(m.buckets.contains)
+        val n = m.layout.fold(numBuckets)(_.buckets)
+        val withData = dirtyOf(batch, n).filter(m.buckets.contains)
         if (withData.isEmpty) emptyLike(batch, dataColsOf(batch))
         else scan(withData.map(m.buckets), m.schema)
     }
@@ -335,11 +412,15 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     * surviving rows are dropped from the manifest (all keys deleted).
     * `merged` is the state rows of the dirty buckets plus their `bucket`
     * column, partitioned and ordered the way it is to be written (see
-    * [[merge]]); the write adds no shuffle of its own.
+    * [[merge]]); the write adds no shuffle of its own. `layout` is the
+    * bucket count `merged` is hashed in, with the recorded bytes of the
+    * clean buckets; the manifest records it with every live bucket's
+    * bytes (a clean bucket it has none for is listed).
     */
   private[graft] def commit(epoch: Long, previous: Map[Int, String],
                             dirty: Seq[Int], merged: DataFrame,
-                            txn: Option[(String, Long)] = None): Unit = {
+                            txn: Option[(String, Long)] = None,
+                            layout: Layout = Layout(numBuckets, Map.empty)): Unit = {
     // detect a single-writer violation BEFORE touching any file, and
     // stage data in a per-attempt directory: even a writer racing at
     // the same epoch can then never clobber files that a just-published
@@ -352,18 +433,22 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     merged.write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("bucket")
       .parquet(s"$statePath/$versionDir")
-    // which dirty buckets actually produced rows?
-    val written: Set[Int] = fs.listStatus(new Path(root, versionDir)).toSeq
-      .map(_.getPath.getName).collect { case s if s.startsWith("bucket=") =>
-        s.stripPrefix("bucket=").toInt
-      }.toSet
-    val entries = (previous -- dirty) ++
-      written.filter(dirty.contains).map(b => b -> s"$versionDir/bucket=$b")
+    // which dirty buckets actually produced rows, and how many bytes?
+    val written: Map[Int, Long] = fs.listStatus(new Path(root, versionDir)).toSeq
+      .collect { case st if st.getPath.getName.startsWith("bucket=") =>
+        st.getPath.getName.stripPrefix("bucket=").toInt -> dirBytes(st.getPath)
+      }.toMap.filter { case (b, _) => dirty.contains(b) }
+    val clean = previous -- dirty
+    val entries = clean ++ written.keys.map(b => b -> s"$versionDir/bucket=$b")
+    val bytes = written ++ clean.map { case (b, d) =>
+      b -> layout.bytes.getOrElse(b, dirBytes(new Path(root, d)))
+    }
     // staged under the attempt's own name: a writer racing this epoch
     // can neither overwrite it nor get it published as its own
     val tmp = new Path(root, s"_tmp-manifest-$epoch-$attempt")
     val out = fs.create(tmp, true)
     val metaLines = s"#schema\t${merged.drop("bucket").schema.json}\n" +
+      s"#layout\t${Layout(layout.buckets, bytes).render}\n" +
       txn.fold("") { case (q, b) => s"#txn\t$q\t$b\n" }
     try out.write((metaLines + entries.toSeq.sortBy(_._1)
       .map { case (b, d) => s"$b\t$d" }.mkString("", "\n", "\n")).getBytes("UTF-8"))
@@ -422,10 +507,30 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
 
 /** One committed manifest: bucket id → data dir relative to the state
   * path, the state schema (recorded so an all-deleted state stays
-  * readable) and the last stream batch applied, as (queryId, batchId).
+  * readable), its layout (absent in manifests written before the
+  * `#layout` line) and the last stream batch applied, as (queryId,
+  * batchId).
   */
 private final case class StateManifest(epoch: Long, buckets: Map[Int, String],
-                                  schema: Option[StructType], txn: Option[(String, Long)])
+                                  schema: Option[StructType], layout: Option[Layout],
+                                  txn: Option[(String, Long)])
+
+/** A state's layout: its bucket count and each live bucket's data
+  * bytes, as the `#layout` line's value `n<TAB>b:bytes,b:bytes,...`.
+  */
+private[graft] final case class Layout(buckets: Int, bytes: Map[Int, Long]) {
+  def render: String =
+    s"$buckets\t" + bytes.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString(",")
+}
+
+private[graft] object Layout {
+  def parse(value: String): Layout = {
+    val Array(n, sizes) = value.split("\t", -1)
+    Layout(n.toInt, sizes.split(',').filter(_.nonEmpty).map { p =>
+      val Array(b, bytes) = p.split(':'); b.toInt -> bytes.toLong
+    }.toMap)
+  }
+}
 
 /** File index over the bucket directories one manifest references.
   * Published directories are immutable, so their leaf files are listed
@@ -435,13 +540,7 @@ private final case class StateManifest(epoch: Long, buckets: Map[Int, String],
   * paths — and [[refresh]] has nothing to do.
   */
 private final class ManifestFileIndex(fs: FileSystem, dirs: Seq[Path]) extends FileIndex {
-  /** Data files, skipping hidden and metadata names as Spark's own
-    * listing does (`_SUCCESS`, `.crc` checksums, in-flight copies).
-    */
-  val files: Seq[FileStatus] = dirs.flatMap(d => fs.listStatus(d).toSeq).filter { st =>
-    val n = st.getPath.getName
-    st.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
-  }
+  val files: Seq[FileStatus] = dirs.flatMap(ManifestFileIndex.dataFiles(fs, _))
 
   override def rootPaths: Seq[Path] = dirs
   override def listFiles(partitionFilters: Seq[Expression],
@@ -451,4 +550,14 @@ private final class ManifestFileIndex(fs: FileSystem, dirs: Seq[Path]) extends F
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = files.map(_.getLen).sum
   override def partitionSchema: StructType = new StructType()
+}
+
+private object ManifestFileIndex {
+  /** A dir's data files, skipping hidden and metadata names as Spark's
+    * own listing does (`_SUCCESS`, `.crc` checksums, in-flight copies).
+    */
+  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.filter { st =>
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+  }
 }

@@ -136,34 +136,34 @@ class AggMaintainSpec extends AnyFunSuite with SparkSpec {
     assert(maintained.collect().toSeq === recomputed.collect().toSeq)
   }
 
-  test("maintained aggregate tracks ParquetUpsertSink epochs (incl. deletes)") {
-    // the production shape: each committed sink epoch contributes one
-    // delta, computed from the PRE-epoch committed state + the batch —
-    // maintained equals groupAgg(readStateAt(e)) at every retained epoch
-    val dir = java.nio.file.Files.createTempDirectory("agg-maintain-sink").toString
-    val sink = new ParquetUpsertSink(spark, dir, keyCols, numBuckets = 4,
-      retainEpochs = 10)
-    val ch = CdcOps.userChangelog(spark, sfDir)
-    val bounds = ch.agg(min("ts_ms"), max("ts_ms")).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val step = math.max((hi - lo) / 3, 1L)
-    val batches = (0 until 3).map { i =>
-      val a = lo + i * step
-      val b = if (i == 2) hi + 1 else lo + (i + 1) * step
-      ch.filter(col("ts_ms") >= a && col("ts_ms") < b)
-    }
-    sink.merge(batches.head, 0L)
-    var agg = AggMaintain.groupAgg(sink.readState(), grp, value).localCheckpoint(true)
-    batches.tail.zipWithIndex.foreach { case (batch, i) =>
-      val pre = sink.readState()
-      sink.merge(batch, i + 1L)
-      agg = AggMaintain.applyDelta(agg,
-        AggMaintain.epochDelta(pre, batch, keyCols, grp, value)).localCheckpoint(true)
-      assert(aggMap(agg) ===
-        aggMap(AggMaintain.groupAgg(sink.readStateAt(i + 1L), grp, value)),
-        s"sink epoch ${i + 1}: maintained diverged from committed state")
-    }
-  }
+  test("maintained aggregate tracks ParquetUpsertSink epochs (incl. deletes)") { withFullBuckets {
+      // the production shape: each committed sink epoch contributes one
+      // delta, computed from the PRE-epoch committed state + the batch —
+      // maintained equals groupAgg(readStateAt(e)) at every retained epoch
+      val dir = java.nio.file.Files.createTempDirectory("agg-maintain-sink").toString
+      val sink = new ParquetUpsertSink(spark, dir, keyCols, numBuckets = 4,
+        retainEpochs = 10)
+      val ch = CdcOps.userChangelog(spark, sfDir)
+      val bounds = ch.agg(min("ts_ms"), max("ts_ms")).head()
+      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+      val step = math.max((hi - lo) / 3, 1L)
+      val batches = (0 until 3).map { i =>
+        val a = lo + i * step
+        val b = if (i == 2) hi + 1 else lo + (i + 1) * step
+        ch.filter(col("ts_ms") >= a && col("ts_ms") < b)
+      }
+      sink.merge(batches.head, 0L)
+      var agg = AggMaintain.groupAgg(sink.readState(), grp, value).localCheckpoint(true)
+      batches.tail.zipWithIndex.foreach { case (batch, i) =>
+        val pre = sink.readState()
+        sink.merge(batch, i + 1L)
+        agg = AggMaintain.applyDelta(agg,
+          AggMaintain.epochDelta(pre, batch, keyCols, grp, value)).localCheckpoint(true)
+        assert(aggMap(agg) ===
+          aggMap(AggMaintain.groupAgg(sink.readStateAt(i + 1L), grp, value)),
+          s"sink epoch ${i + 1}: maintained diverged from committed state")
+      }
+  }}
 
   test("min/max/median survive extremum retraction (hand-built epochs)") {
     import spark.implicits._

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -967,6 +968,8 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       assert(sink.readStateAt(n).select(cols: _*).collect().toSet === expected,
         s"epoch $n must be the state after batch $n")
     }
+    assert(layoutAt(s"$tmp/state", 0).buckets === 4 && layoutAt(s"$tmp/state", 1).buckets === 1,
+      "the replayed batches cross a re-layout")
     val newest = new java.io.File(s"$tmp/state/_manifest.v${batches.size - 1}")
     val lines = scala.io.Source.fromFile(newest, "UTF-8").getLines().toList
     assert(lines.contains(s"#txn\t${q.id}\t${batches.size - 1}"))
@@ -981,6 +984,26 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     sink.merge(batchDf(Seq((4L, "c", 50L, 7L, "signup", 4.0))), 0)
     assert(sink.retainedEpochs().last === batches.size.toLong)
     assert(sink.readState().count() === 3)
+  }
+
+  private def rowSet(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+
+  /** The keyed diff of two frames keyed by their leading long column,
+    * rendered as [[ParquetUpsertSink.changesBetween]]'s rows print: key,
+    * change, after-image (nulls for a removed key).
+    */
+  private def keyedDiff(beforeDf: DataFrame, afterDf: DataFrame): Set[String] = {
+    def byKey(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val (before, after) = (byKey(beforeDf), byKey(afterDf))
+    val nulls = Seq.fill(afterDf.schema.size - 1)(null)
+    (before.keySet ++ after.keySet).flatMap { k =>
+      (before.get(k), after.get(k)) match {
+        case (None, Some(a)) => Some((k +: "added" +: a).mkString("[", ",", "]"))
+        case (Some(_), None) => Some((k +: "removed" +: nulls).mkString("[", ",", "]"))
+        case (Some(b), Some(a)) if a != b => Some((k +: "changed" +: a).mkString("[", ",", "]"))
+        case _ => None
+      }
+    }
   }
 
   /** Descriptions of the Spark jobs launched on this thread while `f`
@@ -1012,92 +1035,278 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
-  test("state reads come from the manifest: no listing job, rows of a plain parquet read") {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.types.{DataType, StructType}
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-index").toString
-    val statePath = s"$tmp/state"
-    val buckets = 64
-    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = buckets)
+  test("state reads come from the manifest: no listing job, rows of a plain parquet read") { withFullBuckets {
+      import org.apache.spark.sql.DataFrame
+      import org.apache.spark.sql.types.{DataType, StructType}
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("graft-index").toString
+      val statePath = s"$tmp/state"
+      val buckets = 64
+      val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = buckets)
 
-    /** (data dirs by bucket, schema) of epoch e, parsed from its manifest. */
-    def manifest(e: Long): (Map[Int, String], StructType) = {
-      val lines = scala.io.Source.fromFile(s"$statePath/_manifest.v$e", "UTF-8").getLines().toList
-      val schema = DataType.fromJson(lines.find(_.startsWith("#schema\t")).get
-        .stripPrefix("#schema\t")).asInstanceOf[StructType]
-      (lines.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
-        val Array(b, d) = l.split('\t'); b.toInt -> s"$statePath/$d"
-      }.toMap, schema)
-    }
-    def plain(dirs: Iterable[String], schema: StructType): DataFrame =
-      spark.read.schema(schema).parquet(dirs.toSeq.sorted: _*)
-    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
-    def bucketsOf(batch: DataFrame): Set[Int] =
-      batch.select(pmod(hash(col("user_id")), lit(buckets))).collect().map(_.getInt(0)).toSet
-
-    /** Every read at epoch e (after `batch` committed it) builds its
-      * frame without a Spark job and returns a plain read's rows.
-      */
-    def checkReads(e: Long, batch: DataFrame): Unit = {
-      val (dirs, schema) = manifest(e)
-      val (prevDirs, prevSchema) = manifest(e - 1)
-      val (state, stateJobs) = jobsDuring(sink.readState())
-      assert(stateJobs.isEmpty, s"readState@$e launched $stateJobs")
-      assert(state.schema.fieldNames.toSeq === schema.fieldNames.toSeq)
-      assert(rows(state) === rows(plain(dirs.values, schema)), s"readState@$e")
-      val (prev, prevJobs) = jobsDuring(sink.readStateAt(e - 1))
-      assert(prevJobs.isEmpty, s"readStateAt(${e - 1}) launched $prevJobs")
-      assert(rows(prev) === rows(plain(prevDirs.values, prevSchema)), s"readStateAt(${e - 1})")
-
-      val (cdf, cdfJobs) = jobsDuring(sink.changesBetween(e - 1, e))
-      assert(cdfJobs.isEmpty, s"changesBetween(${e - 1}, $e) launched $cdfJobs")
-      // the keyed diff of two plain reads, both with epoch e's schema
-      def byKey(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val (before, after) = (byKey(plain(prevDirs.values, schema)), byKey(plain(dirs.values, schema)))
-      val nulls = Seq.fill(schema.size - 1)(null)
-      val expected = (before.keySet ++ after.keySet).flatMap { k =>
-        (before.get(k), after.get(k)) match {
-          case (None, Some(a)) => Some((k +: "added" +: a).mkString("[", ",", "]"))
-          case (Some(_), None) => Some((k +: "removed" +: nulls).mkString("[", ",", "]"))
-          case (Some(b), Some(a)) if a != b => Some((k +: "changed" +: a).mkString("[", ",", "]"))
-          case _ => None
-        }
+      /** (data dirs by bucket, schema) of epoch e, parsed from its manifest. */
+      def manifest(e: Long): (Map[Int, String], StructType) = {
+        val lines = scala.io.Source.fromFile(s"$statePath/_manifest.v$e", "UTF-8").getLines().toList
+        val schema = DataType.fromJson(lines.find(_.startsWith("#schema\t")).get
+          .stripPrefix("#schema\t")).asInstanceOf[StructType]
+        (lines.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
+          val Array(b, d) = l.split('\t'); b.toInt -> s"$statePath/$d"
+        }.toMap, schema)
       }
-      assert(rows(cdf) === expected, s"changesBetween(${e - 1}, $e)")
+      def plain(dirs: Iterable[String], schema: StructType): DataFrame =
+        spark.read.schema(schema).parquet(dirs.toSeq.sorted: _*)
+      def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+      def bucketsOf(batch: DataFrame): Set[Int] =
+        batch.select(pmod(hash(col("user_id")), lit(buckets))).collect().map(_.getInt(0)).toSet
 
-      // readDirtyState collects the batch's bucket ids by design, in
-      // one job (a per-partition distinct); that is the only job it may
-      // launch
-      val (dirty, dirtyJobs) = jobsDuring(sink.readDirtyState(batch))
-      assert(dirtyJobs.size === 1 && !dirtyJobs.exists(_.startsWith("Listing leaf files")),
-        s"readDirtyState@$e launched $dirtyJobs")
-      assert(rows(dirty) === rows(plain(bucketsOf(batch).flatMap(dirs.get), schema)),
-        s"readDirtyState@$e")
+      /** Every read at epoch e (after `batch` committed it) builds its
+        * frame without a Spark job and returns a plain read's rows.
+        */
+      def checkReads(e: Long, batch: DataFrame): Unit = {
+        val (dirs, schema) = manifest(e)
+        val (prevDirs, prevSchema) = manifest(e - 1)
+        val (state, stateJobs) = jobsDuring(sink.readState())
+        assert(stateJobs.isEmpty, s"readState@$e launched $stateJobs")
+        assert(state.schema.fieldNames.toSeq === schema.fieldNames.toSeq)
+        assert(rows(state) === rows(plain(dirs.values, schema)), s"readState@$e")
+        val (prev, prevJobs) = jobsDuring(sink.readStateAt(e - 1))
+        assert(prevJobs.isEmpty, s"readStateAt(${e - 1}) launched $prevJobs")
+        assert(rows(prev) === rows(plain(prevDirs.values, prevSchema)), s"readStateAt(${e - 1})")
+
+        val (cdf, cdfJobs) = jobsDuring(sink.changesBetween(e - 1, e))
+        assert(cdfJobs.isEmpty, s"changesBetween(${e - 1}, $e) launched $cdfJobs")
+        // the keyed diff of two plain reads, both with epoch e's schema
+        val expected = keyedDiff(plain(prevDirs.values, schema), plain(dirs.values, schema))
+        assert(rows(cdf) === expected, s"changesBetween(${e - 1}, $e)")
+
+        // readDirtyState collects the batch's bucket ids by design, in
+        // one job (a per-partition distinct); that is the only job it may
+        // launch
+        val (dirty, dirtyJobs) = jobsDuring(sink.readDirtyState(batch))
+        assert(dirtyJobs.size === 1 && !dirtyJobs.exists(_.startsWith("Listing leaf files")),
+          s"readDirtyState@$e launched $dirtyJobs")
+        assert(rows(dirty) === rows(plain(bucketsOf(batch).flatMap(dirs.get), schema)),
+          s"readDirtyState@$e")
+      }
+
+      val keys = 1L to 400L
+      sink.merge(batchDf(keys.map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+      assert(manifest(0)._1.size > 32, "more than 32 buckets must hold data")
+      val b1 = batchDf(keys.filter(_ % 2 == 0).map(k => (k, "u", 20L, 1000L + k, "click", k + 0.5)) ++
+        Seq((401L, "c", 20L, 2000L, "signup", 401.0), (3L, "d", 20L, 2001L, "signup", 3.0)))
+      sink.merge(b1, 1)
+      checkReads(1, b1)
+
+      // schema-evolved: the new column null-fills in old files
+      val b2 = keys.filter(_ % 4 == 1).map(k => (k, "u", 30L, 3000L + k, "click", k + 0.25, "emea"))
+        .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value", "region")
+      sink.merge(b2, 2)
+      assert(manifest(2)._2.fieldNames.contains("region"))
+      assert(bucketsOf(b2).size < manifest(2)._1.size, "some buckets must keep pre-evolution files")
+      checkReads(2, b2)
+
+      // all-deleted: empty, with the recorded schema
+      val b3 = batchDf((keys :+ 401L).map(k => (k, "d", 40L, 4000L + k, "signup", 0.0)))
+      sink.merge(b3, 3)
+      assert(manifest(3)._1.isEmpty)
+      checkReads(3, b3)
+      assert(sink.readState().count() === 0)
+  }}
+
+  /** The manifest lines of epoch e of the state at `statePath`. */
+  private def manifestLines(statePath: String, e: Long): List[String] =
+    scala.io.Source.fromFile(s"$statePath/_manifest.v$e", "UTF-8").getLines().filter(_.nonEmpty).toList
+
+  /** Bucket → data dir (relative to the state path) of epoch e; every
+    * entry line is exactly `bucket<TAB>dir`.
+    */
+  private def entriesAt(statePath: String, e: Long): Map[Int, String] =
+    manifestLines(statePath, e).filterNot(_.startsWith("#")).map { l =>
+      val fields = l.split('\t')
+      assert(fields.length === 2, s"entry line '$l' of epoch $e")
+      fields(0).toInt -> fields(1)
+    }.toMap
+
+  private def layoutAt(statePath: String, e: Long): Layout =
+    Layout.parse(manifestLines(statePath, e).find(_.startsWith("#layout\t")).get.stripPrefix("#layout\t"))
+
+  /** Data files of the given state dirs (relative to the state path). */
+  private def dataFilesOf(statePath: String, dirs: Iterable[String]): Seq[String] =
+    dirs.toSeq.flatMap(d => new java.io.File(s"$statePath/$d").listFiles().toSeq)
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.getCanonicalPath)
+
+  /** The files a frame's plan reads. */
+  private def inputFilesOf(df: DataFrame): Seq[String] =
+    df.inputFiles.toSeq.map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath)
+
+  test("at one bucket the dirty set needs no Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-onebucket").toString
+    val statePath = s"$tmp/state"
+    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 8)
+    sink.merge(batchDf((1L to 40L).map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+    assert(layoutAt(statePath, 0).buckets === 8, "epoch 0 is laid out in numBuckets")
+    sink.merge(batchDf(Seq((1L, "u", 20L, 100L, "click", 1.5))), 1)
+    assert(layoutAt(statePath, 1).buckets === 1, "a state far below the open cost is one bucket")
+    assert(entriesAt(statePath, 1).keySet === Set(0))
+    val batch = batchDf(Seq((2L, "u", 30L, 200L, "click", 2.5), (99L, "c", 30L, 201L, "signup", 9.9)))
+    val (dirty, jobs) = jobsDuring(sink.readDirtyState(batch))
+    assert(jobs.isEmpty, s"readDirtyState at one bucket launched $jobs")
+    assert(rowSet(dirty) === rowSet(sink.readState()), "at one bucket the dirty state is the state")
+    sink.merge(batch, 2)
+    assert(sink.readState().count() === 41)
+  }
+
+  test("changesBetween reads only the dirs two epochs do not share; across a re-layout, both whole") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cdf-dirs").toString
+    val statePath = s"$tmp/state"
+    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 64)
+    def plain(dirs: Iterable[String], schema: org.apache.spark.sql.types.StructType): DataFrame =
+      spark.read.schema(schema).parquet(dirs.toSeq.sorted.map(d => s"$statePath/$d"): _*)
+    withFullBuckets {
+      sink.merge(batchDf((1L to 400L).map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+      sink.merge(batchDf((1L to 10L).map(k => (k, "u", 20L, 1000L + k, "click", k + 0.5))), 1)
     }
+    assert(layoutAt(statePath, 1).buckets === 64)
+    val (d0, d1) = (entriesAt(statePath, 0).values.toSet, entriesAt(statePath, 1).values.toSet)
+    val changed = (d0 -- d1) ++ (d1 -- d0)
+    assert(changed.nonEmpty && changed.size <= 20, s"a 10-key batch rewrites at most 10 of 64 buckets: $changed")
+    val schema = sink.readStateAt(1).schema
+    val cdf = sink.changesBetween(0, 1)
+    assert(inputFilesOf(cdf).sorted === dataFilesOf(statePath, changed).sorted,
+      "the feed reads only the files of the dirs the epochs do not share")
+    assert(rowSet(cdf) === keyedDiff(plain(d0, schema), plain(d1, schema)))
+    assert(rowSet(cdf).size === 10)
 
-    val keys = 1L to 400L
-    sink.merge(batchDf(keys.map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
-    assert(manifest(0)._1.size > 32, "more than 32 buckets must hold data")
-    val b1 = batchDf(keys.filter(_ % 2 == 0).map(k => (k, "u", 20L, 1000L + k, "click", k + 0.5)) ++
-      Seq((401L, "c", 20L, 2000L, "signup", 401.0), (3L, "d", 20L, 2001L, "signup", 3.0)))
-    sink.merge(b1, 1)
-    checkReads(1, b1)
+    // at the default open cost the next commit re-lays the state out
+    sink.merge(batchDf(Seq((401L, "c", 30L, 2000L, "signup", 401.0), (3L, "d", 30L, 2001L, "signup", 3.0))), 2)
+    assert(layoutAt(statePath, 2).buckets === 1)
+    val d2 = entriesAt(statePath, 2).values.toSet
+    assert((d1 intersect d2).isEmpty)
+    val across = sink.changesBetween(1, 2)
+    assert(inputFilesOf(across).sorted === dataFilesOf(statePath, d1 ++ d2).sorted,
+      "across a re-layout both states are read whole")
+    assert(rowSet(across) === keyedDiff(plain(d1, schema), plain(d2, schema)))
+    assert(rowSet(across).size === 2)
+  }
 
-    // schema-evolved: the new column null-fills in old files
-    val b2 = keys.filter(_ % 4 == 1).map(k => (k, "u", 30L, 3000L + k, "click", k + 0.25, "emea"))
-      .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value", "region")
-    sink.merge(b2, 2)
-    assert(manifest(2)._2.fieldNames.contains("region"))
-    assert(bucketsOf(b2).size < manifest(2)._1.size, "some buckets must keep pre-evolution files")
-    checkReads(2, b2)
+  test("a manifest without a #layout line reads, time-travels and re-lays out on its first merge") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    val statePath = s"$tmp/state"
+    val v0 = (1L to 400L).map(k => (k, "signup", k.toDouble, 10L))
+      .toDF("user_id", "last_event_type", "last_value", "last_ts_ms")
+    /** Writes `df` hashed into 64 buckets under `dir`; returns its entries. */
+    def handWrite(df: DataFrame, dir: String): Map[Int, String] = {
+      df.withColumn("bucket", pmod(hash(col("user_id")), lit(64)))
+        .write.partitionBy("bucket").parquet(s"$statePath/$dir")
+      new java.io.File(s"$statePath/$dir").list().filter(_.startsWith("bucket="))
+        .map(b => b.stripPrefix("bucket=").toInt -> s"$dir/$b").toMap
+    }
+    def publish(e: Long, entries: Map[Int, String]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$statePath/_manifest.v$e"),
+        (s"#schema\t${v0.schema.json}\n" + entries.toSeq.sorted.map { case (b, d) => s"$b\t$d" }
+          .mkString("", "\n", "\n")).getBytes("UTF-8"))
+    val e0 = handWrite(v0, "v0")
+    publish(0, e0)
+    // epoch 1 rewrites one bucket: its keys become clicks
+    val b = e0.keys.min
+    val e1 = e0 ++ handWrite(v0.filter(pmod(hash(col("user_id")), lit(64)) === b)
+      .withColumn("last_event_type", lit("click")).withColumn("last_ts_ms", lit(20L)), "v1")
+    publish(1, e1)
+    assert(e0.size > 32 && e1(b) === s"v1/bucket=$b")
+    def plain(dirs: Iterable[String]): DataFrame =
+      spark.read.schema(v0.schema).parquet(dirs.toSeq.sorted.map(d => s"$statePath/$d"): _*)
 
-    // all-deleted: empty, with the recorded schema
-    val b3 = batchDf((keys :+ 401L).map(k => (k, "d", 40L, 4000L + k, "signup", 0.0)))
-    sink.merge(b3, 3)
-    assert(manifest(3)._1.isEmpty)
-    checkReads(3, b3)
-    assert(sink.readState().count() === 0)
+    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 64)
+    assert(rowSet(sink.readStateAt(0)) === rowSet(v0))
+    val state1 = rowSet(plain(e1.values))
+    assert(rowSet(sink.readState()) === state1)
+    assert(sink.readState().filter(col("last_event_type") === "click").count() > 0)
+
+    sink.merge(batchDf(Seq((401L, "c", 30L, 1L, "signup", 401.0), (5L, "u", 30L, 2L, "purchase", 5.5))), 2)
+    assert(layoutAt(statePath, 2).buckets === 1, "the first merge re-lays the state out")
+    assert(layoutAt(statePath, 2).bytes.keySet === entriesAt(statePath, 2).keySet)
+    val expected = state1.filterNot(_.startsWith("[5,")) ++ Set("[5,purchase,5.5,30]", "[401,signup,401.0,30]")
+    assert(rowSet(sink.readState()) === expected, "every untouched row survives the re-layout")
+    val d2 = entriesAt(statePath, 2).values
+    val cdf = sink.changesBetween(1, 2)
+    assert(rowSet(cdf) === keyedDiff(plain(e1.values), plain(d2)))
+    assert(rowSet(cdf) === Set("[5,changed,purchase,5.5,30]", "[401,added,signup,401.0,30]"))
+    assert(rowSet(sink.readStateAt(1)) === state1, "the pre-layout epoch still time-travels")
+  }
+
+  test("a growing state re-lays out at most once per doubling, within numBuckets, and shrinks after deletes") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-grow").toString
+    val statePath = s"$tmp/state"
+    withConf("spark.sql.files.openCostInBytes", "8192") {
+      var sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 8)
+      val layouts = scala.collection.mutable.ArrayBuffer.empty[Layout]
+      def commit(rows: Seq[(Long, String, Long, Long, String, Double)]): Unit = {
+        val e = layouts.size.toLong
+        sink.merge(batchDf(rows), e)
+        layouts += layoutAt(statePath, e)
+        assert(layouts.last.bytes.keySet === entriesAt(statePath, e).keySet, s"bytes of every bucket @$e")
+      }
+      var next = 1L
+      for (n <- Seq(1, 50, 100, 200, 400, 800, 1600, 3200, 6400, 12800)) {
+        commit((next until next + n).map(k => (k, "c", 10L, k, s"t${k % 7}", k * 1.37)))
+        next += n
+      }
+      val total = layouts.map(_.bytes.values.sum)
+      val counts = layouts.map(_.buckets)
+      assert(counts.forall(n => n >= 1 && n <= 8 && Integer.bitCount(n) == 1), s"bucket counts $counts")
+      assert(counts.last === 8, s"the grown state fills numBuckets: $counts, bytes $total")
+      // commit e is laid out from the bytes recorded at e - 1
+      val relayouts = (1 until counts.size).filter(e => counts(e) != counts(e - 1))
+      assert(relayouts.count(e => counts(e) > counts(e - 1)) >= 2, s"the state re-lays out as it grows: $counts")
+      relayouts.sliding(2).filter(_.size == 2).foreach { case Seq(a, b) =>
+        assert(total(b - 1) > 2 * total(a - 1),
+          s"re-layouts at epochs $a and $b are less than a doubling apart: bytes $total, counts $counts")
+      }
+      // a handle with a smaller numBuckets re-lays the state out within it
+      sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 4)
+      commit(Seq((2L, "u", 15L, 50000L, "click", 0.25)))
+      assert(layouts.last.buckets === 4)
+      // mass deletes: the commit after them shrinks the layout
+      val keep = 1L to 20L
+      commit((keep.last + 1 until next).map(k => (k, "d", 20L, 100000L + k, "x", 0.0)))
+      assert(layouts.last.buckets === 4, "the deleting commit is laid out from the bytes before it")
+      commit(Seq((1L, "u", 30L, 200000L, "click", 0.5)))
+      assert(layouts.last.buckets < 4, s"deleting most keys shrinks the layout: ${layouts.map(_.buckets)}")
+      assert(sink.readState().count() === keep.size)
+    }
+  }
+
+  test("a crash between a re-layout's write and its manifest rename leaves the previous epoch readable") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft-relayout-crash").toString
+    val statePath = s"$tmp/state"
+    val sink = new ParquetUpsertSink(spark, statePath, Seq("user_id"), numBuckets = 4)
+    sink.merge(batchDf((1L to 30L).map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+    val before = rowSet(sink.readState())
+    val batch = batchDf(Seq((1L, "u", 20L, 100L, "click", 1.5), (31L, "c", 20L, 101L, "signup", 31.0)))
+    sink.merge(batch, 1)
+    assert(layoutAt(statePath, 0).buckets === 4 && layoutAt(statePath, 1).buckets === 1)
+    val after = rowSet(sink.readState())
+    // undo the publishing rename (manifest and checksum): the state dir
+    // is then what a crash right before the rename leaves behind
+    val attempt = new java.io.File(statePath).list().find(_.matches("v1-[0-9a-f]+")).get.stripPrefix("v1-")
+    Seq("_manifest.v1" -> s"_tmp-manifest-1-$attempt", "._manifest.v1.crc" -> s"._tmp-manifest-1-$attempt.crc")
+      .foreach { case (a, b) => Files.move(Paths.get(s"$statePath/$a"), Paths.get(s"$statePath/$b")) }
+    assert(sink.retainedEpochs() === Seq(0L))
+    assert(rowSet(sink.readState()) === before, "the previous epoch is the state")
+    assert(rowSet(sink.readStateAt(0)) === before)
+
+    // the replay re-lays out again and publishes epoch 1
+    sink.merge(batch, 1)
+    assert(sink.retainedEpochs() === Seq(0L, 1L))
+    assert(layoutAt(statePath, 1).buckets === 1)
+    assert(rowSet(sink.readState()) === after)
+    assert(!new java.io.File(statePath).list().exists(_.startsWith("_tmp-manifest-")))
+    sink.merge(batchDf(Seq((2L, "u", 30L, 102L, "click", 2.5))), 2)
+    assert(!new java.io.File(s"$statePath/v1-$attempt").exists, "the crashed attempt's dir is vacuumed")
+    assert(sink.readState().count() === 31)
   }
 
   test("exportSnapshot round-trips: any plain parquet reader sees readState") {
@@ -1182,81 +1391,81 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
       "the retained-range feed must carry the exact keyed diff")
   }
 
-  test("a batch that deletes every key in a bucket does not resurrect them") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-delbucket").toString
-    val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 2)
-    val keys = (1L to 20L)
-    sink.merge(batchDf(keys.map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
+  test("a batch that deletes every key in a bucket does not resurrect them") { withFullBuckets {
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("graft-delbucket").toString
+      val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 2)
+      val keys = (1L to 20L)
+      sink.merge(batchDf(keys.map(k => (k, "c", 10L, k, "signup", k.toDouble))), 0)
 
-    // every key hashing to bucket 0 gets deleted in one batch
-    val buckets = keys.toDF("user_id")
-      .withColumn("b", pmod(hash(col("user_id")), lit(2)))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val dead = keys.filter(buckets(_) == 0)
-    val alive = keys.filter(buckets(_) == 1)
-    assert(dead.nonEmpty && alive.nonEmpty, "test needs both buckets populated")
-    sink.merge(batchDf(dead.map(k => (k, "d", 20L, 100L + k, "error", 0.0))), 1)
+      // every key hashing to bucket 0 gets deleted in one batch
+      val buckets = keys.toDF("user_id")
+        .withColumn("b", pmod(hash(col("user_id")), lit(2)))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val dead = keys.filter(buckets(_) == 0)
+      val alive = keys.filter(buckets(_) == 1)
+      assert(dead.nonEmpty && alive.nonEmpty, "test needs both buckets populated")
+      sink.merge(batchDf(dead.map(k => (k, "d", 20L, 100L + k, "error", 0.0))), 1)
 
-    val state = sink.readState()
-    assert(state.filter(col("user_id").isin(dead: _*)).count() === 0,
-      "deleted keys must not resurrect from the un-rewritten bucket")
-    assert(state.filter(col("user_id").isin(alive: _*)).count() === alive.size)
+      val state = sink.readState()
+      assert(state.filter(col("user_id").isin(dead: _*)).count() === 0,
+        "deleted keys must not resurrect from the un-rewritten bucket")
+      assert(state.filter(col("user_id").isin(alive: _*)).count() === alive.size)
 
-    // delete the rest too: an all-deleted state is committed and reads
-    // as an EMPTY typed frame (schema from the manifest), not an error
-    sink.merge(batchDf(alive.map(k => (k, "d", 30L, 200L + k, "error", 0.0))), 2)
-    val emptyState = sink.readState()
-    assert(emptyState.count() === 0)
-    assert(emptyState.columns.contains("user_id") && emptyState.columns.contains("last_ts_ms"))
-  }
+      // delete the rest too: an all-deleted state is committed and reads
+      // as an EMPTY typed frame (schema from the manifest), not an error
+      sink.merge(batchDf(alive.map(k => (k, "d", 30L, 200L + k, "error", 0.0))), 2)
+      val emptyState = sink.readState()
+      assert(emptyState.count() === 0)
+      assert(emptyState.columns.contains("user_id") && emptyState.columns.contains("last_ts_ms"))
+  }}
 
-  test("schema evolution: widening batches backfill NULL, narrowed feeds carry state") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
-    val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"),
-      numBuckets = 4, retainEpochs = 4)
+  test("schema evolution: widening batches backfill NULL, narrowed feeds carry state") { withFullBuckets {
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+      val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"),
+        numBuckets = 4, retainEpochs = 4)
 
-    // epoch 0: two-column images
-    sink.merge(batchDf(Seq(
-      (1L, "c", 10L, 1L, "signup", 1.0),
-      (2L, "c", 10L, 2L, "signup", 2.0),
-      (3L, "c", 10L, 3L, "signup", 3.0))), 0)
+      // epoch 0: two-column images
+      sink.merge(batchDf(Seq(
+        (1L, "c", 10L, 1L, "signup", 1.0),
+        (2L, "c", 10L, 2L, "signup", 2.0),
+        (3L, "c", 10L, 3L, "signup", 3.0))), 0)
 
-    // epoch 1: the feed WIDENS — a region column appears; only user 1
-    // is touched. Untouched rows must read region = NULL, not error,
-    // and not lose the column to parquet schema sampling.
-    val widened = Seq((1L, "u", 20L, 4L, "click", 1.5, "emea"))
-      .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value", "region")
-    sink.merge(widened, 1)
-    val s1 = sink.readState().orderBy("user_id").collect()
-    assert(s1.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
-    val r1 = s1.find(_.getLong(0) == 1L).get
-    assert(r1.getAs[String]("region") === "emea")
-    assert(r1.getAs[String]("last_event_type") === "click")
-    assert(s1.filter(_.getLong(0) != 1L).forall(_.getAs[String]("region") == null),
-      "untouched rows backfill NULL for the new column")
+      // epoch 1: the feed WIDENS — a region column appears; only user 1
+      // is touched. Untouched rows must read region = NULL, not error,
+      // and not lose the column to parquet schema sampling.
+      val widened = Seq((1L, "u", 20L, 4L, "click", 1.5, "emea"))
+        .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value", "region")
+      sink.merge(widened, 1)
+      val s1 = sink.readState().orderBy("user_id").collect()
+      assert(s1.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
+      val r1 = s1.find(_.getLong(0) == 1L).get
+      assert(r1.getAs[String]("region") === "emea")
+      assert(r1.getAs[String]("last_event_type") === "click")
+      assert(s1.filter(_.getLong(0) != 1L).forall(_.getAs[String]("region") == null),
+        "untouched rows backfill NULL for the new column")
 
-    // epoch 2: the feed NARROWS — last_value disappears from the
-    // images; updating user 2 must NOT wipe its stored last_value,
-    // and a brand-new key gets NULL for the uncarried column.
-    val narrowed = Seq((2L, "u", 30L, 5L, "purchase", "amer"),
-                       (9L, "c", 30L, 6L, "signup", "apac"))
-      .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "region")
-    sink.merge(narrowed, 2)
-    val s2 = sink.readState().orderBy("user_id").collect()
-    val r2 = s2.find(_.getLong(0) == 2L).get
-    assert(r2.getAs[String]("last_event_type") === "purchase")
-    assert(r2.getAs[Double]("last_value") === 2.0,
-      "a column absent from the feed must carry its state value")
-    assert(r2.getAs[String]("region") === "amer")
-    val r9 = s2.find(_.getLong(0) == 9L).get
-    assert(r9.isNullAt(r9.fieldIndex("last_value")), "new key, uncarried column -> NULL")
+      // epoch 2: the feed NARROWS — last_value disappears from the
+      // images; updating user 2 must NOT wipe its stored last_value,
+      // and a brand-new key gets NULL for the uncarried column.
+      val narrowed = Seq((2L, "u", 30L, 5L, "purchase", "amer"),
+                         (9L, "c", 30L, 6L, "signup", "apac"))
+        .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "region")
+      sink.merge(narrowed, 2)
+      val s2 = sink.readState().orderBy("user_id").collect()
+      val r2 = s2.find(_.getLong(0) == 2L).get
+      assert(r2.getAs[String]("last_event_type") === "purchase")
+      assert(r2.getAs[Double]("last_value") === 2.0,
+        "a column absent from the feed must carry its state value")
+      assert(r2.getAs[String]("region") === "amer")
+      val r9 = s2.find(_.getLong(0) == 9L).get
+      assert(r9.isNullAt(r9.fieldIndex("last_value")), "new key, uncarried column -> NULL")
 
-    // time travel still reads each epoch with ITS schema
-    assert(!sink.readStateAt(0).columns.contains("region"))
-    assert(sink.readStateAt(1).columns.contains("region"))
-  }
+      // time travel still reads each epoch with ITS schema
+      assert(!sink.readStateAt(0).columns.contains("region"))
+      assert(sink.readStateAt(1).columns.contains("region"))
+  }}
 
   test("randomized batched sink ingest equals one-shot latestState (seeded)") {
     val rnd = new scala.util.Random(7)

@@ -33,38 +33,38 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
       .toDF("user_id", "op", "ts_ms", "seq", "last_event_type", "last_value")
   }
 
-  test("a sink merge and a DeltaStore append keep the modes and checksums of a plain write") {
-    val tmp = Files.createTempDirectory("graft-localfs-modes").toString
-    frame.write.parquet(s"$tmp/plain")
-    val plain = modes(s"$tmp/plain")
-    val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 4)
-    sink.merge(frame, 0)
-    sink.merge(frame.limit(1), 1)
-    new DeltaStore(spark, tmp, "store", frame.columns.toSeq, 16, identity).append(frame, 0)
-    // a bootstrap model, a per-batch log, a geometry marker and the
-    // dynamic-overwrite edge partitions
-    new StreamingKnnMaintainJob(spark, s"$tmp/knn")
-      .processBatch(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), 0)
+  test("a sink merge and a DeltaStore append keep the modes and checksums of a plain write") { withFullBuckets {
+      val tmp = Files.createTempDirectory("graft-localfs-modes").toString
+      frame.write.parquet(s"$tmp/plain")
+      val plain = modes(s"$tmp/plain")
+      val sink = new ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 4)
+      sink.merge(frame, 0)
+      sink.merge(frame.limit(1), 1)
+      new DeltaStore(spark, tmp, "store", frame.columns.toSeq, 16, identity).append(frame, 0)
+      // a bootstrap model, a per-batch log, a geometry marker and the
+      // dynamic-overwrite edge partitions
+      new StreamingKnnMaintainJob(spark, s"$tmp/knn")
+        .processBatch(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), 0)
 
-    val (plainDirs, plainFiles) = plain.partition { case (p, _) => new java.io.File(s"$tmp/plain/$p").isDirectory }
-    assert(plainDirs.isEmpty && plainFiles.values.toSet.size == 1,
-      s"a plain write is one flat dir of files sharing one mode: $plain")
-    val fileMode = plainFiles.values.head
-    val dirMode = modeOf(new java.io.File(s"$tmp/plain").toPath)
-    for (root <- Seq(s"$tmp/state", s"$tmp/store", s"$tmp/knn")) {
-      val written = modes(root)
-      written.foreach { case (p, m) =>
-        val f = new java.io.File(s"$root/$p")
-        assert(m === (if (f.isDirectory) dirMode else fileMode), s"mode of $root/$p")
-        if (f.isFile && !f.getName.endsWith(".crc"))
-          assert(new java.io.File(f.getParent, s".${f.getName}.crc").isFile,
-            s"$root/$p has its checksum, as the stock file system writes it")
+      val (plainDirs, plainFiles) = plain.partition { case (p, _) => new java.io.File(s"$tmp/plain/$p").isDirectory }
+      assert(plainDirs.isEmpty && plainFiles.values.toSet.size == 1,
+        s"a plain write is one flat dir of files sharing one mode: $plain")
+      val fileMode = plainFiles.values.head
+      val dirMode = modeOf(new java.io.File(s"$tmp/plain").toPath)
+      for (root <- Seq(s"$tmp/state", s"$tmp/store", s"$tmp/knn")) {
+        val written = modes(root)
+        written.foreach { case (p, m) =>
+          val f = new java.io.File(s"$root/$p")
+          assert(m === (if (f.isDirectory) dirMode else fileMode), s"mode of $root/$p")
+          if (f.isFile && !f.getName.endsWith(".crc"))
+            assert(new java.io.File(f.getParent, s".${f.getName}.crc").isFile,
+              s"$root/$p has its checksum, as the stock file system writes it")
+        }
+        assert(written.keys.exists(_.endsWith(".parquet")), s"$root holds data files")
       }
-      assert(written.keys.exists(_.endsWith(".parquet")), s"$root holds data files")
-    }
-    assert(modes(s"$tmp/state").keys.exists(_.startsWith("_manifest.v1")))
-    assert(Seq("centroids", "assigned/batch=0", "edges", "_knn_geometry").forall(modes(s"$tmp/knn").contains))
-  }
+      assert(modes(s"$tmp/state").keys.exists(_.startsWith("_manifest.v1")))
+      assert(Seq("centroids", "assigned/batch=0", "edges", "_knn_geometry").forall(modes(s"$tmp/knn").contains))
+  }}
 
   test("setPermission round-trips plain modes and still sets a sticky or set-id mode") {
     val tmp = Files.createTempDirectory("graft-localfs-chmod")

@@ -46,51 +46,51 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("Window"), "no window operator in the merge path")
   }
 
-  test("the sink's commit writes its merge in one shuffle: no second exchange, at most one sort") {
-    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.functions.{col, lit, unix_millis}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    // the plan as executed: AQE's final plan, through its query stages
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case n => n +: n.children.flatMap(nodes)
-    }
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        nodes(qe.executedPlan).collectFirst { case w: DataWritingCommandExec => w.child }
-          .foreach(writes.add)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val ch = CdcOps.userChangelog(spark, sfDir)
-    val split = unix_millis(lit("2024-01-16 00:00:00").cast("timestamp"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-write-plan").toString
-    val sink = new graft.cdc.ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 16)
-    spark.listenerManager.register(listener)
-    try {
-      sink.merge(ch.filter(col("ts_ms") < split), 0)    // epoch 0: over an empty base
-      sink.merge(ch.filter(col("ts_ms") >= split), 1)   // epoch 1: over the dirty buckets
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val plans = writes.asScala.toSeq
-    assert(plans.size === 2, "one write per commit")
-    plans.foreach { w =>
-      val ns = nodes(w)
-      val exchanges = ns.collect { case e: ShuffleExchangeLike => e }
-      assert(exchanges.size === 1, s"exactly one shuffle per commit:\n$w")
-      assert(exchanges.head.toString.contains("hashpartitioning(bucket"),
-        s"the one shuffle is by bucket:\n$w")
-      assert(ns.count(_.isInstanceOf[SortExec]) <= 1, s"at most one sort per commit:\n$w")
-    }
-    assert(sink.readState().count() ===
-      CdcOps.latestState(ch, Seq("user_id"), CdcOps.userDataCols).count())
-  }
+  test("the sink's commit writes its merge in one shuffle: no second exchange, at most one sort") { withFullBuckets {
+      import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.command.DataWritingCommandExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+      import org.apache.spark.sql.functions.{col, lit, unix_millis}
+      import org.apache.spark.sql.util.QueryExecutionListener
+      // the plan as executed: AQE's final plan, through its query stages
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case n => n +: n.children.flatMap(nodes)
+      }
+      val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          nodes(qe.executedPlan).collectFirst { case w: DataWritingCommandExec => w.child }
+            .foreach(writes.add)
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val ch = CdcOps.userChangelog(spark, sfDir)
+      val split = unix_millis(lit("2024-01-16 00:00:00").cast("timestamp"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-write-plan").toString
+      val sink = new graft.cdc.ParquetUpsertSink(spark, s"$tmp/state", Seq("user_id"), numBuckets = 16)
+      spark.listenerManager.register(listener)
+      try {
+        sink.merge(ch.filter(col("ts_ms") < split), 0)    // epoch 0: over an empty base
+        sink.merge(ch.filter(col("ts_ms") >= split), 1)   // epoch 1: over the dirty buckets
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      val plans = writes.asScala.toSeq
+      assert(plans.size === 2, "one write per commit")
+      plans.foreach { w =>
+        val ns = nodes(w)
+        val exchanges = ns.collect { case e: ShuffleExchangeLike => e }
+        assert(exchanges.size === 1, s"exactly one shuffle per commit:\n$w")
+        assert(exchanges.head.toString.contains("hashpartitioning(bucket"),
+          s"the one shuffle is by bucket:\n$w")
+        assert(ns.count(_.isInstanceOf[SortExec]) <= 1, s"at most one sort per commit:\n$w")
+      }
+      assert(sink.readState().count() ===
+        CdcOps.latestState(ch, Seq("user_id"), CdcOps.userDataCols).count())
+  }}
 
   // NOTE: these two tests build through the generic DataFrame faces —
   // the (spark, dir) driver faces serve a per-(dir, tier) memoized
