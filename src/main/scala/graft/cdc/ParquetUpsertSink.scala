@@ -1,50 +1,30 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import graft.sources.LocalFs
+import graft.sources.{LocalFs, ManifestLog}
 
 /** Keyed upsert sink over bucket-partitioned parquet — the engine's
   * stand-in for the reference's Delta table
   * (/root/reference/src/main/scala/com/sg/job/streaming/StreamingJobExecutor.scala:20,
   * `DeltaTable.forPath(... "/mnt/delta/events")`).
   *
-  * State layout (a poor-man's transaction log, the property Delta gives
-  * the reference):
-  * {{{
-  *   statePath/
-  *     _manifest.v<e>          committed bucket map for epoch e
-  *                             (one "bucket<TAB>relative/dir" line per
-  *                             live bucket, a "#schema<TAB>json" line,
-  *                             a "#layout<TAB>n<TAB>b:bytes,..." line
-  *                             (bucket count and each bucket's data
-  *                             bytes) and, for a stream writer, a
-  *                             "#txn<TAB>queryId<TAB>batchId" line;
-  *                             highest e wins)
-  *     v<e>-<attempt>/bucket=<b>/part-N.parquet  immutable data written
-  *                                               at epoch e
-  *     _tmp-manifest-<e>-<attempt>  an attempt's manifest before its
-  *                                  publishing rename
-  * }}}
-  *
-  * Commit protocol: each merge writes its output to a FRESH per-attempt
-  * version directory `v<e>-<attempt>` (never touching directories any
-  * manifest references — unique even if two writers race the same
-  * epoch), then publishes atomically by renaming a temp file to
-  * `_manifest.v<e>` — rename-to-new-name is atomic on HDFS/posix; on
-  * object stores you'd swap this single call for a conditional PUT.
-  * A crash at ANY point before the rename leaves the previous manifest
-  * as the newest one, so readers (and the checkpoint replay) still see
-  * the last committed state; the half-written `v<e>` is an orphan that
-  * the next successful merge garbage-collects. This replaces the r1
-  * in-place dynamic-partition overwrite, where a crash mid-write left
-  * buckets half-rewritten and replay merged into corrupt state.
+  * State layout and commit protocol: `statePath` is a
+  * [[graft.sources.ManifestLog]], the poor-man's transaction log that
+  * stands for the property Delta gives the reference. Each merge
+  * commits one epoch: it writes the buckets it rewrites into that
+  * epoch's fresh `v<e>-<attempt>/bucket=<b>` dirs and publishes the
+  * epoch's manifest by one rename. The manifest has one
+  * "bucket<TAB>v<e>-<attempt>/bucket=<b>" entry per live bucket and
+  * three metadata lines: "#schema<TAB>json", "#layout<TAB>n<TAB>b:bytes,..."
+  * (bucket count and each bucket's data bytes) and, for a stream
+  * writer, "#txn<TAB>queryId<TAB>batchId". A crash at any point before
+  * the rename leaves the previous epoch the state, so readers (and the
+  * checkpoint replay) still see the last committed state. This replaces
+  * the r1 in-place dynamic-partition overwrite, where a crash mid-write
+  * left buckets half-rewritten and replay merged into corrupt state.
   *
   * Deletes that empty a bucket commit correctly too: the new manifest
   * simply omits the bucket, so its old directory stops being visible —
@@ -99,9 +79,9 @@ import graft.sources.LocalFs
   *
   * Read path: the committed manifest is the only file index. Every read
   * (and the merge's base read) scans the bucket directories a manifest
-  * references through [[ManifestFileIndex]], which lists each directory
-  * once on the driver — no Spark listing job, however many buckets the
-  * read spans. A read opens one file per bucket, so a state sized to
+  * references through [[graft.sources.ManifestLog.scan]], which lists
+  * each directory once on the driver — no Spark listing job, however
+  * many buckets the read spans. A read opens one file per bucket, so a state sized to
   * one bucket is one file; [[changesBetween]] opens only the dirs the
   * two epochs do not share.
   */
@@ -116,8 +96,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
 
   private def root = new Path(statePath)
   private lazy val fs: FileSystem = LocalFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
-
-  private val ManifestRe = """_manifest\.v(\d+)""".r
+  private lazy val log = new ManifestLog(fs, root, retainEpochs)
 
   /** Local property Structured Streaming sets on the thread that runs
     * `foreachBatch`: the query's id, stable across restarts from the
@@ -125,48 +104,14 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     */
   private val QueryIdKey = "sql.streaming.queryId"
 
-  /** (epoch, manifestFile) pairs present in the state dir, ascending. */
-  private def manifests(): Seq[(Long, Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case ManifestRe(e) => Some((e.toLong, st.getPath))
-        case _ => None
-      }
-    }.sortBy(_._1)
-
   /** Newest committed manifest. */
-  private def readManifest(): Option[StateManifest] =
-    manifests().lastOption.map { case (epoch, p) => readManifestAt(epoch, p) }
-
-  /** Parse one manifest; `#` lines other than `#schema`, `#layout` and
-    * `#txn` are skipped, so a newer writer's metadata never breaks an
-    * older reader.
-    */
-  private def readManifestAt(epoch: Long, p: Path): StateManifest = {
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    val (metaLines, entryLines) = lines.partition(_.startsWith("#"))
-    val meta = metaLines.map { l => val (k, v) = l.span(_ != '\t'); k -> v.drop(1) }.toMap
-    val buckets = entryLines.map { line =>
-      val Array(b, dir) = line.split('\t')
-      b.toInt -> dir
-    }.toMap
-    StateManifest(epoch, buckets,
-      meta.get("#schema").map(DataType.fromJson(_).asInstanceOf[StructType]),
-      meta.get("#layout").map(Layout.parse),
-      meta.get("#txn").map { v => val Array(q, b) = v.split('\t'); q -> b.toLong })
-  }
+  private def readManifest(): Option[StateManifest] = log.latest().map(StateManifest.of)
 
   /** The layout a manifest was committed in. One without a `#layout`
     * line was hashed into `numBuckets` buckets; its bytes are listed.
     */
   private def layoutOf(m: StateManifest): Layout = m.layout.getOrElse(
-    Layout(numBuckets, m.buckets.map { case (b, d) => b -> dirBytes(new Path(root, d)) }))
-
-  /** Data bytes of one bucket dir. */
-  private def dirBytes(dir: Path): Long = ManifestFileIndex.dataFiles(fs, dir).map(_.getLen).sum
+    Layout(numBuckets, m.buckets.map { case (b, d) => b -> log.bytes(d) }))
 
   /** The bucket count the next commit writes over `layout`. The fitted
     * count is the smallest power of two, at most `numBuckets`, whose
@@ -190,15 +135,14 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
 
   /** The manifest of a retained epoch; fails loudly for any other. */
   private def manifestAt(epoch: Long): StateManifest =
-    manifests().find(_._1 == epoch) match {
-      case Some((e, p)) => readManifestAt(e, p)
+    log.versions().find(_._1 == epoch) match {
+      case Some((e, p)) => StateManifest.of(log.read(e, p))
       case None =>
         throw new IllegalStateException(
-          s"epoch $epoch is not retained at $statePath " +
-            s"(retained: ${manifests().map(_._1).mkString(", ")})")
+          s"epoch $epoch is not retained at $statePath (retained: ${retainedEpochs().mkString(", ")})")
     }
 
-  def stateExists: Boolean = manifests().nonEmpty
+  def stateExists: Boolean = log.versions().nonEmpty
 
   /** Read the committed state (data columns only; no bucket column). A
     * committed state with every key deleted reads as an EMPTY frame
@@ -207,7 +151,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
   def readState(): DataFrame = {
     val m = readManifest().getOrElse(
       throw new IllegalStateException(s"no committed state at $statePath"))
-    scan(m.buckets.values.toSeq, m.schema)
+    log.scan(spark, m.buckets.values.toSeq, m.schema)
   }
 
   /** Time travel: the state exactly as committed at `epoch`. Epochs stay
@@ -221,30 +165,11 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     */
   def readStateAt(epoch: Long): DataFrame = {
     val m = manifestAt(epoch)
-    scan(m.buckets.values.toSeq, m.schema)
+    log.scan(spark, m.buckets.values.toSeq, m.schema)
   }
 
   /** Retained epochs, ascending — each is valid for [[readStateAt]]. */
-  def retainedEpochs(): Seq[Long] = manifests().map(_._1)
-
-  /** The one state scan: the given bucket dirs (relative to statePath)
-    * through a [[ManifestFileIndex]], read with the manifest's recorded
-    * schema. After an evolution commit, clean buckets still hold
-    * pre-evolution files — an explicit schema null-fills their missing
-    * columns, while parquet's own schema sampling could silently drop
-    * the new column entirely. A manifest without a schema (written
-    * before the `#schema` line existed) takes it from one file footer.
-    */
-  private def scan(relDirs: Seq[String], schema: Option[StructType]): DataFrame = {
-    val index = new ManifestFileIndex(fs, relDirs.sorted.map(new Path(root, _)))
-    val dataSchema = schema.orElse(index.files.headOption
-      .map(f => spark.read.parquet(f.getPath.toString).schema)).getOrElse(
-      throw new IllegalStateException(
-        s"state at $statePath is empty and its manifest carries no schema"))
-    // file sources read every column as nullable; so does this scan
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
-      dataSchema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
-  }
+  def retainedEpochs(): Seq[Long] = log.versions().map(_._1)
 
   /** Change data feed between two retained epochs: the keyed diff of
     * the committed states — which keys were added, removed, or changed
@@ -270,10 +195,10 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     val (from, to) = (manifestAt(fromEpoch), manifestAt(toEpoch))
     val (fromDirs, toDirs) = (from.buckets.values.toSet, to.buckets.values.toSet)
     // a manifest without a schema takes it from a footer of any of its files
-    val schema = to.schema.orElse(Some(scan(toDirs.toSeq, None).schema))
-    val after = scan((toDirs -- fromDirs).toSeq, schema)
+    val schema = to.schema.orElse(Some(log.scan(spark, toDirs.toSeq, None).schema))
+    val after = log.scan(spark, (toDirs -- fromDirs).toSeq, schema)
     val dataCols = after.columns.filterNot(keyCols.contains).toSeq
-    val b = scan((fromDirs -- toDirs).toSeq, Some(after.schema)).withColumn("__b", lit(true)).alias("b")
+    val b = log.scan(spark, (fromDirs -- toDirs).toSeq, Some(after.schema)).withColumn("__b", lit(true)).alias("b")
     val a = after.withColumn("__a", lit(true)).alias("a")
     val joinCond = keyCols.map(k => col(s"b.$k") <=> col(s"a.$k")).reduce(_ && _)
     // exact null-safe struct compare — a hash digest here could collide
@@ -351,7 +276,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
       val schema = last.flatMap(_.schema)
       val base =
         if (baseDirs.isEmpty && schema.isEmpty) emptyLike(batch, dataColsOf(batch))
-        else scan(baseDirs, schema)
+        else log.scan(spark, baseDirs, schema)
       val baseDataCols = base.columns.toSeq
         .filterNot(c => keyCols.contains(c) || c == "last_ts_ms")
       val dataCols = (dataColsOf(batch) ++
@@ -396,7 +321,7 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
         val n = m.layout.fold(numBuckets)(_.buckets)
         val withData = dirtyOf(batch, n).filter(m.buckets.contains)
         if (withData.isEmpty) emptyLike(batch, dataColsOf(batch))
-        else scan(withData.map(m.buckets), m.schema)
+        else log.scan(spark, withData.map(m.buckets), m.schema)
     }
 
   /** Zero-row frame with the base-state schema (keys ++ data ++ last_ts_ms)
@@ -406,102 +331,40 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
     batch.select(keyCols.map(col) ++ dataCols.map(col) :+ col("ts_ms").as("last_ts_ms"): _*)
       .limit(0)
 
-  /** Write the merged dirty-bucket state into v<epoch>, then atomically
-    * publish a manifest carrying: every clean bucket's previous entry +
-    * every dirty bucket that still has rows. Dirty buckets with no
-    * surviving rows are dropped from the manifest (all keys deleted).
-    * `merged` is the state rows of the dirty buckets plus their `bucket`
-    * column, partitioned and ordered the way it is to be written (see
-    * [[merge]]); the write adds no shuffle of its own. `layout` is the
-    * bucket count `merged` is hashed in, with the recorded bytes of the
-    * clean buckets; the manifest records it with every live bucket's
-    * bytes (a clean bucket it has none for is listed).
+  /** Write the merged dirty-bucket state into a fresh attempt dir of
+    * `epoch`, then atomically publish a manifest carrying: every clean
+    * bucket's previous entry + every dirty bucket that still has rows.
+    * Dirty buckets with no surviving rows are dropped from the manifest
+    * (all keys deleted). `merged` is the state rows of the dirty buckets
+    * plus their `bucket` column, partitioned and ordered the way it is
+    * to be written (see [[merge]]); the write adds no shuffle of its
+    * own. `layout` is the bucket count `merged` is hashed in, with the
+    * recorded bytes of the clean buckets; the manifest records it with
+    * every live bucket's bytes (a clean bucket it has none for is
+    * listed).
     */
   private[graft] def commit(epoch: Long, previous: Map[Int, String],
                             dirty: Seq[Int], merged: DataFrame,
                             txn: Option[(String, Long)] = None,
                             layout: Layout = Layout(numBuckets, Map.empty)): Unit = {
-    // detect a single-writer violation BEFORE touching any file, and
-    // stage data in a per-attempt directory: even a writer racing at
-    // the same epoch can then never clobber files that a just-published
-    // manifest references — its loss is confined to its own orphan dir
-    if (fs.exists(new Path(root, s"_manifest.v$epoch")))
-      throw new IllegalStateException(
-        s"epoch $epoch already committed at $statePath (concurrent writer?)")
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val versionDir = s"v$epoch-$attempt"
+    // a single-writer violation is refused before any file is written,
+    // and a racing writer's loss is confined to its own attempt dir
+    val attempt = log.begin(epoch)
     merged.write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("bucket")
-      .parquet(s"$statePath/$versionDir")
+      .parquet(s"$statePath/${attempt.dir}")
     // which dirty buckets actually produced rows, and how many bytes?
-    val written: Map[Int, Long] = fs.listStatus(new Path(root, versionDir)).toSeq
+    val written: Map[Int, Long] = fs.listStatus(new Path(root, attempt.dir)).toSeq
       .collect { case st if st.getPath.getName.startsWith("bucket=") =>
-        st.getPath.getName.stripPrefix("bucket=").toInt -> dirBytes(st.getPath)
+        st.getPath.getName.stripPrefix("bucket=").toInt -> log.bytes(s"${attempt.dir}/${st.getPath.getName}")
       }.toMap.filter { case (b, _) => dirty.contains(b) }
     val clean = previous -- dirty
-    val entries = clean ++ written.keys.map(b => b -> s"$versionDir/bucket=$b")
-    val bytes = written ++ clean.map { case (b, d) =>
-      b -> layout.bytes.getOrElse(b, dirBytes(new Path(root, d)))
-    }
-    // staged under the attempt's own name: a writer racing this epoch
-    // can neither overwrite it nor get it published as its own
-    val tmp = new Path(root, s"_tmp-manifest-$epoch-$attempt")
-    val out = fs.create(tmp, true)
-    val metaLines = s"#schema\t${merged.drop("bucket").schema.json}\n" +
-      s"#layout\t${Layout(layout.buckets, bytes).render}\n" +
-      txn.fold("") { case (q, b) => s"#txn\t$q\t$b\n" }
-    try out.write((metaLines + entries.toSeq.sortBy(_._1)
-      .map { case (b, d) => s"$b\t$d" }.mkString("", "\n", "\n")).getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(root, s"_manifest.v$epoch")))
-      throw new IllegalStateException(
-        s"manifest commit for epoch $epoch failed (concurrent writer?)")
-    vacuum(epoch)
-  }
-
-  /** Drop data no reader can reach: version dirs from older epochs whose
-    * bucket dirs NO retained manifest (the `retainEpochs` newest)
-    * references — including orphans from crashed merges — plus the
-    * manifest files that aged out of the retention window. Keeping
-    * everything a retained manifest references means a reader that
-    * planned against any retained epoch still finds its files (that is
-    * what makes [[readStateAt]] safe), and at the default
-    * retainEpochs=2 an epoch-1 reader racing this commit keeps its
-    * grace window (single-writer contract; longer reader pins → raise
-    * retainEpochs).
-    */
-  private def vacuum(epoch: Long): Unit = {
-    val retained = manifests().filter(_._1 > epoch - retainEpochs)
-    val referenced: Set[String] = retained
-      .flatMap { case (e, p) => readManifestAt(e, p).buckets.values }.toSet
-    val VersionRe = """v(\d+)(?:-[0-9a-f]+)?""".r
-    // a staging manifest of this epoch or an older one can only be a
-    // crashed or losing attempt's (this epoch is taken); unsuffixed, a
-    // build's that staged every attempt at one shared name
-    val StagedManifestRe = """_tmp-manifest-(\d+)(?:-[0-9a-f]+)?""".r
-    fs.listStatus(root).toSeq.foreach { st =>
-      val name = st.getPath.getName
-      val dirEpoch = name match {
-        case VersionRe(e) if st.isDirectory => Some(e.toLong)
-        case _ => None
-      }
-      if (dirEpoch.exists(_ < epoch)) {
-        fs.listStatus(st.getPath).toSeq.foreach { sub =>
-          val rel = s"$name/${sub.getPath.getName}"
-          if (sub.getPath.getName.startsWith("bucket=") && !referenced.contains(rel))
-            fs.delete(sub.getPath, true)
-        }
-        if (fs.listStatus(st.getPath).forall(!_.getPath.getName.startsWith("bucket=")))
-          fs.delete(st.getPath, true)
-      }
-      name match {
-        case ManifestRe(e) if e.toLong <= epoch - retainEpochs =>
-          fs.delete(st.getPath, false)
-        case StagedManifestRe(e) if e.toLong <= epoch =>
-          fs.delete(st.getPath, false)
-        case _ => ()
-      }
-    }
+    val entries = clean ++ written.keys.map(b => b -> s"${attempt.dir}/bucket=$b")
+    val bytes = written ++ clean.map { case (b, d) => b -> layout.bytes.getOrElse(b, log.bytes(d)) }
+    log.publish(attempt,
+      Seq("#schema" -> merged.drop("bucket").schema.json, "#layout" -> Layout(layout.buckets, bytes).render) ++
+        txn.map { case (q, b) => "#txn" -> s"$q\t$b" },
+      entries.toSeq.sortBy(_._1).map { case (b, d) => b.toString -> d })
   }
 }
 
@@ -514,6 +377,14 @@ class ParquetUpsertSink(spark: SparkSession, statePath: String,
 private final case class StateManifest(epoch: Long, buckets: Map[Int, String],
                                   schema: Option[StructType], layout: Option[Layout],
                                   txn: Option[(String, Long)])
+
+private object StateManifest {
+  def of(m: ManifestLog.Manifest): StateManifest =
+    StateManifest(m.version, m.entries.map { case (b, d) => b.toInt -> d }.toMap,
+      m.meta.get("#schema").map(DataType.fromJson(_).asInstanceOf[StructType]),
+      m.meta.get("#layout").map(Layout.parse),
+      m.meta.get("#txn").map { v => val Array(q, b) = v.split('\t'); q -> b.toLong })
+}
 
 /** A state's layout: its bucket count and each live bucket's data
   * bytes, as the `#layout` line's value `n<TAB>b:bytes,b:bytes,...`.
@@ -529,35 +400,5 @@ private[graft] object Layout {
     Layout(n.toInt, sizes.split(',').filter(_.nonEmpty).map { p =>
       val Array(b, bytes) = p.split(':'); b.toInt -> bytes.toLong
     }.toMap)
-  }
-}
-
-/** File index over the bucket directories one manifest references.
-  * Published directories are immutable, so their leaf files are listed
-  * once, on the driver, with one `listStatus` per directory — no Spark
-  * listing job, which `spark.read.parquet` launches once a read spans
-  * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
-  * paths — and [[refresh]] has nothing to do.
-  */
-private final class ManifestFileIndex(fs: FileSystem, dirs: Seq[Path]) extends FileIndex {
-  val files: Seq[FileStatus] = dirs.flatMap(ManifestFileIndex.dataFiles(fs, _))
-
-  override def rootPaths: Seq[Path] = dirs
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.map(_.getLen).sum
-  override def partitionSchema: StructType = new StructType()
-}
-
-private object ManifestFileIndex {
-  /** A dir's data files, skipping hidden and metadata names as Spark's
-    * own listing does (`_SUCCESS`, `.crc` checksums, in-flight copies).
-    */
-  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.filter { st =>
-    val n = st.getPath.getName
-    st.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
   }
 }

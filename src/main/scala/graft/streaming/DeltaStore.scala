@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
-import graft.sources.LocalFs
+import org.apache.spark.sql.types.{DataType, StructType}
+import graft.sources.{LocalFs, ManifestLog}
 
 /** A persisted, append-per-batch parquet delta store with idempotent
   * replay and crash-safe compaction — the one storage substrate of the
@@ -11,32 +12,38 @@ import graft.sources.LocalFs
   * vocabulary), indexes and code tables (the dedup jobs' band and hash
   * indexes, [[StreamingAnnIngestJob]]'s codes), per-batch logs
   * ([[DeltaStore.log]]) and, through [[DeltaStore.frozenModel]], the
-  * fit-once models. One instance == one live directory `root/name`:
+  * fit-once models.
   *
-  *   - rows append under `name/batch=<id>`, overwriting that dir, so a
-  *     replayed batch rewrites its own rows;
-  *   - [[compact]] writes `fold(deltas)` as one `batch=0` plus a
-  *     `_compacted_through` marker into a staged dir and publishes both
-  *     by one rename, so marker and folded rows commit atomically;
-  *     appends at or below the marker are replays of already-folded
-  *     batches and are skipped;
-  *   - the publish is a two-rename swap: a crash between the renames
-  *     leaves the full previous store at `_pre_compact_<name>`,
-  *     restored by the next access ([[recoverIfNeeded]]), so no crash
-  *     point loses rows.
+  * One instance == one [[graft.sources.ManifestLog]] in its live
+  * directory `root/name` (so several stores can share one root), with
+  * the sink's commit protocol: data goes to a fresh dir, and one
+  * manifest rename publishes it. A manifest lists the store's batch
+  * dirs and its compacted fold, records the schema they are read with,
+  * and records the high-water batch id (`#through`):
   *
-  * A part (a `batch=<id>` dir, a model part) counts as written only
-  * once its `_SUCCESS` marker exists ([[DeltaStore.committed]]): a Spark
-  * write that crashed leaves its dir holding only `_temporary`, so a
-  * dir's existence is not a commit.
+  *   - an append of a batch id above the high-water mark writes the
+  *     batch's rows and publishes a manifest that adds its dir; one at
+  *     or below it is a replay of an applied batch and is skipped, its
+  *     delta never evaluated;
+  *   - [[compact]] writes `fold(deltas)` to a fresh dir and publishes a
+  *     manifest that lists only the fold;
+  *   - reads scan exactly the listed dirs, so a dir a crash left
+  *     unpublished is never read, and a later publish vacuums it.
+  *
+  * A crash at any point before a publish leaves the previous manifest
+  * the store, and the replay applies the batch once.
+  *
+  * A store written before manifests (`batch=<id>` dirs that count once
+  * their `_SUCCESS` exists, a `_compacted_through` marker, a compaction
+  * crash at `_pre_compact_<name>` or at the shared `_pre_compact`) is
+  * adopted on its first access: the slot is restored, and manifest 0
+  * lists the committed batch dirs, with the high-water mark at the
+  * highest of their ids and the marker.
   *
   * `fold` is what compaction applies and what [[state]] reads: a
   * per-key sum-combine for additive states ([[DeltaStore.additive]] —
   * sum-of-sums equals the sum, so compaction never changes the read),
-  * the identity for row sets (indexes, code tables, logs). Each store
-  * has its OWN marker and staging slots, so several stores can share one
-  * root: a replay that lands after one store's compaction but before
-  * another's is skipped exactly where it was folded.
+  * the identity for row sets (indexes, code tables, logs).
   *
   * Every file (appends, the compacted fold, markers, models) is written
   * through [[graft.sources.LocalFs]], which sets modes without forking
@@ -50,27 +57,11 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
                  fold: DataFrame => DataFrame) {
 
   private lazy val fs = LocalFs.fileSystem(new Path(root), spark.sparkContext.hadoopConfiguration)
-  private def liveDir = new Path(s"$root/$name")
-  private def batchDir(batchId: Long) = new Path(liveDir, s"batch=$batchId")
-  // staging slots are namespaced BY NAME: stores sharing one root must
-  // not be able to rename each other's crashed slot into their live dir
-  private def preCompactDir = new Path(s"$root/_pre_compact_$name")
-  private def stagedDir = new Path(s"$root/_compacting_$name")
-  // builds before the slots were namespaced staged at the shared
-  // `_pre_compact`; only a store whose live dir is absent can own it
-  private def legacyPreCompactDir = new Path(s"$root/_pre_compact")
-  // lives INSIDE the live dir (underscore-prefixed → invisible to the
-  // parquet reader) so the publish rename commits it with the rows
-  private val compactedMarkerName = "_compacted_through"
+  private lazy val log = new ManifestLog(fs, new Path(root, name), retain = 2)
 
   private def readText(p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-  }
-
-  private def writeText(p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write((text + "\n").getBytes("UTF-8")) finally out.close()
   }
 
   /** Pin what the rows were built with (`root/markerName`): the hash
@@ -91,102 +82,95 @@ class DeltaStore(spark: SparkSession, root: String, name: String,
       throw new IllegalStateException(
         s"index at $root has no format marker — rebuild it (or, " +
           s"if it is KNOWN to be '$format', write that to $markerName)")
-    } else writeText(marker, format)
+    } else {
+      val out = fs.create(marker, true)
+      try out.write((format + "\n").getBytes("UTF-8")) finally out.close()
+    }
   }
 
-  /** Restore a live dir displaced by a compaction that crashed between
-    * its two renames: from this store's slot, else (one-time upgrade)
-    * from the legacy shared slot — treating the store as empty instead
-    * would silently lose every pre-crash row.
+  /** The newest manifest (version -1, listing nothing, before the
+    * first commit); a store in the layout from before manifests is
+    * adopted first (see the class doc).
     */
-  private def recoverIfNeeded(): Unit =
-    if (!fs.exists(liveDir))
-      Seq(preCompactDir, legacyPreCompactDir).find(fs.exists).foreach { slot =>
-        if (!fs.rename(slot, liveDir)) throw new IllegalStateException(
-          s"could not restore $slot to $liveDir after an interrupted compaction")
-      }
+  private def manifest(): ManifestLog.Manifest = log.latest().orElse(
+    log.adopt(Seq(new Path(root, s"_pre_compact_$name"), new Path(root, "_pre_compact"))) {
+      val marker = new Path(log.dir, "_compacted_through")
+      val ids = DeltaStore.committedBatches(fs, log.dir).map(_.getName.stripPrefix("batch=").toLong).sorted
+      val through = ((if (fs.exists(marker)) readText(marker).toLong else -1L) +: ids).max
+      (Seq(DeltaStore.Through -> through.toString), ids.map(id => id.toString -> s"batch=$id"))
+    }).getOrElse(ManifestLog.Manifest(-1, Map.empty, Seq.empty))
 
-  /** Highest batch id folded into `batch=0`; -1 before any compaction. */
-  private[graft] def compactedThrough(): Long = {
-    recoverIfNeeded()
-    val m = new Path(liveDir, compactedMarkerName)
-    if (fs.exists(m)) readText(m).toLong else -1L
-  }
+  private def through(m: ManifestLog.Manifest): Long = m.meta.get(DeltaStore.Through).fold(-1L)(_.toLong)
 
-  /** Ids of the committed `batch=<id>` dirs. */
-  private def batchIds(): Seq[Long] = {
-    recoverIfNeeded()
-    DeltaStore.committedBatches(fs, liveDir).map(_.getName.stripPrefix("batch=").toLong)
-  }
+  /** The high-water batch id: every batch at or below it has been
+    * applied (and may have been folded), so its replay is skipped; -1
+    * before any batch.
+    */
+  private[graft] def compactedThrough(): Long = through(manifest())
 
-  private[graft] def batchDirCount(): Int = batchIds().size
+  /** Dirs the newest manifest lists: batch dirs plus the fold. */
+  private[graft] def batchDirCount(): Int = manifest().entries.size
 
   /** The raw accumulated deltas, if any batch committed. */
-  def readDeltas(): Option[DataFrame] =
-    if (batchIds().isEmpty) None
-    else Some(spark.read.parquet(liveDir.toString).select(columns.map(col): _*))
+  def readDeltas(): Option[DataFrame] = deltas(manifest())
+
+  private def deltas(m: ManifestLog.Manifest): Option[DataFrame] =
+    if (m.entries.isEmpty) None
+    else Some(log.scan(spark, m.entries.map(_._2),
+      m.meta.get("#schema").map(DataType.fromJson(_).asInstanceOf[StructType])).select(columns.map(col): _*))
 
   /** The folded state, if any batch committed. */
   def state(): Option[DataFrame] = readDeltas().map(fold)
 
-  /** Append a batch's rows (skipped if the id is already folded — an
-    * at-least-once replay that crossed a compaction), then fold once
-    * enough per-batch directories accumulate. The trigger is the
-    * OBSERVED directory count, not `batchId % N`: replayed or skipped
-    * batch ids can't starve (or double-run) the policy.
+  /** Append a batch's rows, unless the batch id is at or below the
+    * high-water mark (an at-least-once replay), then fold once enough
+    * dirs accumulate. The trigger is the OBSERVED dir count, not
+    * `batchId % N`: replayed or skipped batch ids can't starve (or
+    * double-run) the policy.
     */
-  def append(delta: DataFrame, batchId: Long): Unit = write(delta, batchId, once = false)
+  def append(delta: DataFrame, batchId: Long): Unit = appendOnce(delta, batchId)
 
-  /** Append with at-most-once COMPUTATION: if `batchId` is already
-    * folded (marker) or already committed (a crash mid-write leaves no
-    * `_SUCCESS`, so a partial dir is rewritten), the by-name `delta` is
-    * never evaluated. This is what a NON-additive producer needs: a delta computed against pre-batch
-    * state would be recomputed WRONG on a replay that runs after the
-    * state has already advanced, so the first durable write must win.
+  /** [[append]] with at-most-once COMPUTATION: a replay never evaluates
+    * the by-name `delta`. This is what a NON-additive producer needs: a
+    * delta computed against pre-batch state would be recomputed WRONG
+    * on a replay that runs after the state has already advanced, so the
+    * first durable write must win.
     */
-  def appendOnce(delta: => DataFrame, batchId: Long): Unit = write(delta, batchId, once = true)
-
-  private def write(delta: => DataFrame, batchId: Long, once: Boolean): Unit = {
-    if (batchId > compactedThrough() &&
-        !(once && DeltaStore.committed(fs, batchDir(batchId))))
-      delta.write.options(DeltaStore.writeOptions).mode("overwrite").parquet(batchDir(batchId).toString)
+  def appendOnce(delta: => DataFrame, batchId: Long): Unit = {
+    val last = manifest()
+    if (batchId > through(last))
+      publish(last.version + 1, delta.select(columns.map(col): _*), batchId, last.entries, batchId.toString)
     if (batchDirCount() >= compactEvery) compact()
   }
 
-  /** Fold the per-batch directories into one `batch=0` (the
-    * `batch=<n>` layout keeps later appends beside it without
-    * conflicting with partition discovery). There IS a window between
-    * the two renames where the live dir is absent — the full previous
-    * store sits at `_pre_compact_<name>` throughout it.
+  /** Fold the listed dirs into one fresh dir, published as the only
+    * entry of the next manifest.
     */
-  def compact(): Unit = readDeltas().foreach { d =>
-    // the marker is monotone: batch=0 from an earlier compaction no
-    // longer carries the original ids
-    val foldedThrough = (compactedThrough() +: batchIds()).max
-    fs.delete(stagedDir, true)
-    fold(d).write.options(DeltaStore.writeOptions).parquet(new Path(stagedDir, "batch=0").toString)
-    writeText(new Path(stagedDir, compactedMarkerName), foldedThrough.toString)
-    fs.delete(preCompactDir, true)
-    if (!fs.rename(liveDir, preCompactDir)) throw new IllegalStateException(
-      s"compaction could not displace $liveDir (concurrent writer?)")
-    if (!fs.rename(stagedDir, liveDir)) {
-      if (!fs.rename(preCompactDir, liveDir)) throw new IllegalStateException(
-        s"compaction could not publish $liveDir AND could not restore " +
-          s"$preCompactDir — restore it manually before the next batch")
-      throw new IllegalStateException(
-        s"compaction could not publish $liveDir (restored previous state)")
-    }
-    fs.delete(preCompactDir, true)
+  def compact(): Unit = {
+    val m = manifest()
+    deltas(m).foreach(d => publish(m.version + 1, fold(d), through(m), Seq.empty, "fold"))
+  }
+
+  /** Write `rows` to a fresh dir and publish manifest `version`: `kept`
+    * plus that dir under `key`, with high-water mark `highWater`.
+    */
+  private def publish(version: Long, rows: DataFrame, highWater: Long,
+                      kept: Seq[(String, String)], key: String): Unit = {
+    val attempt = log.begin(version)
+    rows.write.options(LocalFs.writeOptions).parquet(new Path(log.dir, attempt.dir).toString)
+    log.publish(attempt, Seq("#schema" -> rows.schema.json, DeltaStore.Through -> highWater.toString),
+      kept :+ (key -> attempt.dir))
   }
 }
 
 object DeltaStore {
   private val Success = "_SUCCESS"
+  private val Through = "#through"
 
   /** [[LocalFs.writeOptions]], plus the `_SUCCESS` marker that
     * [[committed]] reads, whatever the session's committer conf says.
     */
-  private val writeOptions =
+  private[graft] val writeOptions =
     LocalFs.writeOptions + ("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "true")
 
   /** Whether a Spark write of `dir` committed: its `_SUCCESS` marker is
@@ -194,7 +178,9 @@ object DeltaStore {
     */
   private def committed(fs: FileSystem, dir: Path): Boolean = fs.exists(new Path(dir, Success))
 
-  /** The committed `batch=<id>` dirs under `dir`. */
+  /** The committed `batch=<id>` dirs under `dir`: those whose
+    * `_SUCCESS` marker exists.
+    */
   private[graft] def committedBatches(fs: FileSystem, dir: Path): Seq[Path] =
     Option(fs.globStatus(new Path(dir, s"batch=*/$Success"))).toSeq.flatten.map(_.getPath.getParent)
 
@@ -205,7 +191,7 @@ object DeltaStore {
       _.groupBy(keyCols.map(col): _*)
         .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*))
 
-  /** A per-batch log: one `batch=<id>` dir per batch, never compacted,
+  /** A per-batch log: one dir per batch, never compacted,
     * so writing a batch costs that batch alone.
     */
   def log(spark: SparkSession, root: String, name: String, columns: Seq[String]): DeltaStore =

@@ -26,12 +26,11 @@ import graft.sources.MicroBatchJob
   * current instead of rebuilding nightly.
   *
   * Consistency contract: the code table is a [[DeltaStore]] (identity
-  * fold). A replayed batch rewrites its own `batch=<id>` dir with
-  * byte-identical codes, because the quantizers never change after the
-  * bootstrap; a batch id at or below the store's `_compacted_through`
-  * marker is skipped, since re-appending rows already folded into
-  * `batch=0` would rank their vec_ids twice in the top-k window; and
-  * compaction is the store's crash-safe two-rename fold. A
+  * fold). A batch id at or below the store's high-water mark is a
+  * replay and is skipped before it is encoded, since re-appending its
+  * rows would rank their vec_ids twice in the top-k window; and
+  * compaction is the store's crash-safe fold, published by one
+  * manifest rename. A
   * `_pq_geometry` marker records the (nCells, nSub, nCodes)
   * configuration — an engine restarted with a different geometry fails
   * loudly instead of mixing incompatible codes. Empty micro-batches are
@@ -49,9 +48,7 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
     DeltaStore.frozenModel(spark, indexPath, "centroids", "codebooks")(fit)
       .map { case Seq(c, b) => (c, b) }
 
-  /** Highest batch id whose rows are inside the compacted `batch=0`
-    * directory; -1 before any compaction.
-    */
+  /** The code table's high-water batch id; -1 before any batch. */
   private[graft] def compactedThrough(): Long = codes.compactedThrough()
 
   private[graft] def batchDirCount(): Int = codes.batchDirCount()
@@ -73,8 +70,8 @@ class StreamingAnnIngestJob(spark: SparkSession, indexPath: String,
   def processBatch(embs: DataFrame, batchId: Long): Unit = {
     codes.checkOrWriteFormat("_pq_geometry", s"ivfpq:cells=$nCells,sub=$nSub,codes=$nCodes",
       stampUnmarked = true)
-    // a batch id already folded into batch=0 is an at-least-once replay
-    // that crossed a compaction — re-appending it would duplicate its
+    // a batch id at or below the high-water mark is an at-least-once
+    // replay of an applied batch — re-appending it would duplicate its
     // vec_ids and rank them twice in the top-k window
     if (batchId <= compactedThrough()) return
     // an empty batch has nothing to encode — and must never reach the

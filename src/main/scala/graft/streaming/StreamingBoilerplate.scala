@@ -12,7 +12,7 @@ import graft.sources.MicroBatchJob
   * Sentence df is additive when each document arrives exactly once
   * (each batch contributes its own distinct-doc counts per sentence),
   * so the [[DeltaStore]] contract applies verbatim: plain
-  * per-batch appends, idempotent under replay, two-rename crash-safe
+  * per-batch appends, idempotent under replay, crash-safe
   * compaction. State is distinct-sentence-sized — the one corpus-sized
   * state in the streaming family, exactly as a streaming dedup index
   * is (at 100 TB the sentence key becomes a 64-bit hash, an

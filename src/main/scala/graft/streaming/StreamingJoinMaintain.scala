@@ -18,8 +18,8 @@ import graft.sources.MicroBatch
   *   - the per-fk aggregate of B (the auxiliary index the A-side delta
   *     joins) and the view itself are FOLDS of per-batch delta rows in
   *     [[DeltaStore]]s — once a delta is computed, applying it
-  *     is pure addition, so the fold machinery (batch-dir replay
-  *     skip, marker-guarded compaction, two-rename swap) carries all
+  *     is pure addition, so the fold machinery (high-water replay
+  *     skip, manifest-published appends and compaction) carries all
   *     the operability.
   *
   * The crash/replay discipline is subtler than the additive jobs',

@@ -21,7 +21,9 @@ import graft.sources.{CorpusIO, LocalFs, MicroBatch}
   *     `batch=<id>` subdirectory — a replayed batch rewrites the same
   *     rows in place instead of appending duplicates (the
   *     batch-id-scoped-output discipline every exactly-once file sink
-  *     uses);
+  *     uses). A subdirectory counts once its `_SUCCESS` marker exists,
+  *     which every write leaves whatever the session's committer conf;
+  *     readers skip one whose write crashed;
   *   - counters: [[DeltaStore]]'s batchId-keyed appends.
   *
   * At 100 TB nothing here is driver-sized: the parse is a map-side
@@ -41,8 +43,8 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
   def processBatch(parsed: DataFrame, batchId: Long): Unit = {
     val p = parsed.localCheckpoint(true)
     val (clean, bad) = CorpusIO.quarantine(p)
-    clean.write.options(LocalFs.writeOptions).mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    bad.write.options(LocalFs.writeOptions).mode("overwrite").text(s"$quarantinePath/batch=$batchId")
+    clean.write.options(DeltaStore.writeOptions).mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
+    bad.write.options(DeltaStore.writeOptions).mode("overwrite").text(s"$quarantinePath/batch=$batchId")
     stats.append(
       clean.select(lit("clean").as("k"))
         .unionAll(bad.select(lit("corrupt").as("k")))
@@ -50,13 +52,14 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
       batchId)
   }
 
-  /** True when at least one batch subdirectory of `path` has
-    * committed — before that a bare read would throw AnalysisException;
-    * the readers return an empty frame of the contract schema instead.
+  /** The committed batch subdirectories of `path`: a dir whose write
+    * crashed before its `_SUCCESS` is no data. Before the first commit a
+    * bare read would throw AnalysisException; the readers return an
+    * empty frame of the contract schema instead.
     */
-  private def hasBatches(path: String): Boolean = {
+  private def batches(path: String): Seq[String] = {
     val p = new Path(path)
-    DeltaStore.committedBatches(LocalFs.fileSystem(p, spark.sparkContext.hadoopConfiguration), p).nonEmpty
+    DeltaStore.committedBatches(LocalFs.fileSystem(p, spark.sparkContext.hadoopConfiguration), p).map(_.toString)
   }
 
   private def emptyOf(schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -65,15 +68,16 @@ class StreamingJsonlIngestJob(spark: SparkSession, corpusPath: String,
   /** The ingested corpus (batch partition column dropped); empty with
     * the corpus schema before any batch has been processed.
     */
-  def readCorpus(): DataFrame =
-    if (!hasBatches(corpusPath)) emptyOf(CorpusIO.DocSchema)
-    else spark.read.parquet(corpusPath).drop("batch")
+  def readCorpus(): DataFrame = batches(corpusPath) match {
+    case Seq() => emptyOf(CorpusIO.DocSchema)
+    case dirs => spark.read.parquet(dirs: _*)
+  }
 
   /** Quarantined raw lines across all batches; empty before any batch. */
-  def readQuarantine(): DataFrame =
-    if (!hasBatches(quarantinePath))
-      emptyOf(org.apache.spark.sql.types.StructType(Seq(StructField("raw_line", StringType))))
-    else spark.read.text(s"$quarantinePath/batch=*").toDF("raw_line")
+  def readQuarantine(): DataFrame = batches(quarantinePath) match {
+    case Seq() => emptyOf(org.apache.spark.sql.types.StructType(Seq(StructField("raw_line", StringType))))
+    case dirs => spark.read.text(dirs: _*).toDF("raw_line")
+  }
 
   /** (k, n) ingest counters: clean / corrupt line totals. */
   def readStats(): DataFrame = {

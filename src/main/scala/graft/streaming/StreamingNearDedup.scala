@@ -20,17 +20,18 @@ import graft.sources.MicroBatchJob
   * a 100 TB/day ingest keep near-dup checking continuous instead of
   * re-running corpus-wide LSH nightly.
   *
-  * Consistency contract: the per-batch index directory makes the append
-  * idempotent under at-least-once replay (`batch=<id>` is simply
-  * overwritten), and a replayed batch re-emits the same candidate SET —
+  * Consistency contract: the index skips the append of a batch id at or
+  * below its high-water mark, so the append is idempotent under
+  * at-least-once replay, and a replayed batch re-emits the same
+  * candidate SET —
   * duplicated band rows can never mint new pairs because candidates are
   * `distinct()` by construction. Candidates are emitted BEFORE the
   * batch's bands are appended, so a batch never pairs with itself
   * through the corpus index on the happy path (and on replay such pairs
   * collapse into the within-batch set). Replay stays idempotent ACROSS
   * compaction too — the storage substrate (format marker, per-batch
-  * appends, `_compacted_through` marker, crash-safe two-rename fold)
-  * is [[DeltaStore]], shared with the perceptual-hash face
+  * appends and a crash-safe fold, each published by one manifest
+  * rename) is [[DeltaStore]], shared with the perceptual-hash face
   * ([[StreamingPhashDedupJob]]).
   */
 class StreamingNearDedupJob(spark: SparkSession, indexPath: String,

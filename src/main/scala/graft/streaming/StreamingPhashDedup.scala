@@ -26,7 +26,7 @@ import graft.sources.MicroBatchJob
   * batch, structurally.
   *
   * Storage is the shared [[DeltaStore]] substrate, so replay
-  * idempotence, the `_compacted_through` skip, crash-safe compaction
+  * idempotence, the high-water replay skip, crash-safe compaction
   * and the hash-family format marker are inherited verbatim from the
   * MinHash face's certified machinery. Per-batch cost scales with the
   * batch; index growth is ONE 3-long row per image.

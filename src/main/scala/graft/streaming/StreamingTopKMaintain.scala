@@ -17,8 +17,8 @@ import graft.sources.MicroBatchJob
   *   - the support relation is a FOLD of per-batch (g, v, d_n) deltas
   *     in a [[DeltaStore]] — support counts form an abelian
   *     group, so once a delta is computed, applying it is pure
-  *     addition and the fold machinery (batch-dir replay skip,
-  *     marker-guarded compaction, two-rename swap) carries the
+  *     addition and the fold machinery (high-water replay skip,
+  *     manifest-published appends and compaction) carries the
   *     operability.
   *
   * Crash discipline (the [[StreamingJoinMaintainJob]] rules, collapsed

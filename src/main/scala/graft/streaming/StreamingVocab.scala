@@ -23,10 +23,10 @@ import graft.sources.MicroBatchJob
   * At 100 TB/day this is the right shape for corpus stats: per-batch
   * cost scales with the batch, state grows with the VOCABULARY (not
   * the corpus), and nightly full recounts disappear. The replay /
-  * compaction / crash-recovery contract (batch=<id> overwrite,
-  * `_compacted_through` marker, two-rename displaced-live swap, and
-  * adoption of a pre-upgrade crash left at the shared `_pre_compact`
-  * slot) lives in [[DeltaStore]].
+  * compaction / crash-recovery contract (the high-water replay skip,
+  * appends and compaction published by one manifest rename, and the
+  * one-time adoption of a store written before manifests) lives in
+  * [[DeltaStore]].
   */
 class StreamingVocabJob(spark: SparkSession, statePath: String,
                         compactEvery: Int = 16) extends MicroBatchJob {
@@ -34,7 +34,7 @@ class StreamingVocabJob(spark: SparkSession, statePath: String,
   private[graft] val state = DeltaStore.additive(spark, statePath,
     "vocab", Seq("token"), Seq("n", "n_docs"), compactEvery)
 
-  /** Highest batch id folded into `batch=0`; -1 before any compaction. */
+  /** The store's high-water batch id; -1 before any batch. */
   private[graft] def compactedThrough(): Long = state.compactedThrough()
 
   private[graft] def batchDirCount(): Int = state.batchDirCount()

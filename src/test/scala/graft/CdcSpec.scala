@@ -1006,35 +1006,6 @@ class CdcSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  /** Descriptions of the Spark jobs launched on this thread while `f`
-    * runs. A marker job afterwards flushes the listener queue.
-    */
-  private def jobsDuring[T](f: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(p => (p.getProperty("spark.jobGroup.id"), p)) match {
-          case Some((`group`, p)) => jobs.add(String.valueOf(p.getProperty("spark.job.description")))
-          case Some((g, _)) if g == s"$group-end" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val r = f
-      sc.setJobGroup(s"$group-end", "flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener queue did not drain")
-      import scala.jdk.CollectionConverters._
-      (r, jobs.asScala.toSeq)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
   test("state reads come from the manifest: no listing job, rows of a plain parquet read") { withFullBuckets {
       import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.types.{DataType, StructType}

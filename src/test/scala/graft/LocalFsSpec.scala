@@ -63,7 +63,7 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
         assert(written.keys.exists(_.endsWith(".parquet")), s"$root holds data files")
       }
       assert(modes(s"$tmp/state").keys.exists(_.startsWith("_manifest.v1")))
-      assert(Seq("centroids", "assigned/batch=0", "edges", "_knn_geometry").forall(modes(s"$tmp/knn").contains))
+      assert(Seq("centroids", "assigned/_manifest.v0", "edges", "_knn_geometry").forall(modes(s"$tmp/knn").contains))
   }}
 
   test("setPermission round-trips plain modes and still sets a sticky or set-id mode") {

@@ -111,51 +111,47 @@ class StreamingPhashDedupSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     import graft.streaming.DeltaStore
     val root = java.nio.file.Files.createTempDirectory("bpi-collide").toString
+    // both families in the layout of builds before manifests, the bands
+    // family caught by a crash between its compaction's two renames: its
+    // live dir sits displaced at its own staging slot
+    PreManifestLayout.write(s"$root/_pre_compact_bands", Seq(0L -> Seq((1L, 10L)).toDF("doc_id", "k")), Some(0L))
+    PreManifestLayout.write(s"$root/hashes", Seq(0L -> Seq((2L, 20L)).toDF("doc_id", "k")))
     val bands = new DeltaStore(spark, root, "bands", Seq("doc_id", "k"), 16, identity)
     val hashes = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
-    bands.checkOrWriteFormat("_band_format", "fmt-a")
-    hashes.checkOrWriteFormat("_hash_format", "fmt-b")
-    bands.append(Seq((1L, 10L)).toDF("doc_id", "k"), 0L)
-    hashes.append(Seq((2L, 20L)).toDF("doc_id", "k"), 0L)
-    // simulate the bands family crashing inside compact() between the
-    // two renames: its live dir sits displaced at the staging slot
-    val bandsLive = new java.io.File(s"$root/bands")
-    assert(bandsLive.renameTo(new java.io.File(s"$root/_pre_compact_bands")),
-      "fixture: displace the bands live dir")
     // the OTHER family must neither adopt nor disturb the displaced dir
     val hs = hashes.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(hs === Some(Set((2L, 20L))), "hashes family reads only its own rows")
     assert(new java.io.File(s"$root/_pre_compact_bands").exists(),
-      "hashes recovery must not consume the bands family's staging dir")
-    // the bands family recovers its own displaced index
+      "hashes adoption must not consume the bands family's staging dir")
+    // the bands family restores its own displaced index
     val bs = bands.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(bs === Some(Set((1L, 10L))), "bands family restores its displaced rows")
     assert(!new java.io.File(s"$root/_pre_compact_bands").exists())
+    // each family keeps its own replay skip
+    bands.append(Seq((1L, 11L)).toDF("doc_id", "k"), 0L)
+    hashes.append(Seq((2L, 21L)).toDF("doc_id", "k"), 0L)
+    assert(bands.readDeltas().get.count() === 1 && hashes.readDeltas().get.count() === 1)
   }
 
   test("index recovers a pre-upgrade crash left at the legacy _pre_compact slot") {
     import spark.implicits._
     import graft.streaming.DeltaStore
     val root = java.nio.file.Files.createTempDirectory("bpi-legacy").toString
-    val idx = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
-    idx.checkOrWriteFormat("_hash_format", "fmt-a")
-    idx.append(Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "k"), 0L)
-    idx.compact()
-    // simulate a crash that happened BEFORE the staging dirs were
-    // namespaced per subdir: the live dir sits displaced at the shared
-    // legacy `_pre_compact` name and no live dir exists
-    val live = new java.io.File(s"$root/hashes")
-    assert(live.renameTo(new java.io.File(s"$root/_pre_compact")),
-      "fixture: displace the live dir to the legacy slot")
-    // a fresh (post-upgrade) instance must restore it — silently
-    // reading the index as empty would lose every pre-crash row
+    // a crash that happened BEFORE the staging dirs were namespaced per
+    // subdir: the compacted live dir sits displaced at the shared legacy
+    // `_pre_compact` name and no live dir exists
+    PreManifestLayout.write(s"$root/_pre_compact", Seq(0L -> Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "k")), Some(0L))
     val upgraded = new DeltaStore(spark, root, "hashes", Seq("doc_id", "k"), 16, identity)
+    // silently reading the index as empty would lose every pre-crash row
     val rows = upgraded.readDeltas().map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(rows === Some(Set((1L, 10L), (2L, 20L))),
       "legacy crash-window index must be restored, not reset")
-    assert(live.exists() && !new java.io.File(s"$root/_pre_compact").exists(),
+    assert(new java.io.File(s"$root/hashes").exists() && !new java.io.File(s"$root/_pre_compact").exists(),
       "restore must be by rename")
     assert(upgraded.compactedThrough() === 0L,
       "the folded-through marker travels with the restored dir")
+    upgraded.compact()
+    upgraded.append(Seq((3L, 30L)).toDF("doc_id", "k"), 0L)
+    assert(upgraded.readDeltas().get.count() === 2, "a replay at the old marker is skipped")
   }
 }

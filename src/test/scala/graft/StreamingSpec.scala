@@ -447,11 +447,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(before.size === embs.length)
 
     // the crash window of a compaction under the layout that staged the
-    // code table at the shared `_pre_compact` name: the live dir sits
-    // displaced there and no `codes` dir exists
+    // code table at the shared `_pre_compact` name: the compacted code
+    // table of builds before manifests sits displaced there and no
+    // `codes` dir exists
     val live = new java.io.File(s"$tmp/index/codes")
     val legacy = new java.io.File(s"$tmp/index/_pre_compact")
-    assert(live.renameTo(legacy), "test setup: displace the live dir to the legacy slot")
+    PreManifestLayout.write(legacy.toString, Seq(0L -> job.readCodes().get), compactedThrough = Some(1L))
+    org.apache.commons.io.FileUtils.deleteDirectory(live)
 
     val restarted = new StreamingAnnIngestJob(spark, s"$tmp/index", compactEvery = 64)
     assert(restarted.readCodes().get.collect().map(_.toString).toSet === before,
@@ -459,6 +461,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(live.exists() && !legacy.exists(), "restore must be by rename")
     assert(restarted.compactedThrough() === 1L,
       "the folded-through marker travels with the restored dir")
+    restarted.processBatch(b2.toSeq.toDF("vec_id", "embedding"), 1L)
+    assert(restarted.readCodes().get.count() === embs.length.toLong, "a replay at the old marker is skipped")
   }
 
   test("streaming vocabulary equals the batch token_vocab and survives replay across compaction") {
@@ -550,37 +554,52 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import graft.streaming.StreamingVocabJob
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-vocab-crash").toString
-    val job = new StreamingVocabJob(spark, s"$tmp/state", compactEvery = 64)
-    job.processBatch(Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text"), 0L)
-    job.processBatch(Seq((3L, "alpha gamma")).toDF("doc_id", "text"), 1L)
-    val before = job.readVocab().collect().toSeq
-    assert(before.nonEmpty)
+    val batches = Seq(Seq((1L, "alpha beta alpha"), (2L, "beta gamma")), Seq((3L, "alpha gamma")),
+      Seq((4L, "delta"))).map(_.toDF("doc_id", "text"))
+    /** The vocab store of builds before manifests at `dir`: one
+      * committed `batch=<id>` dir per batch, each holding the delta the
+      * job appends for it.
+      */
+    def preManifestLayout(dir: String, n: Int): Unit =
+      PreManifestLayout.write(dir, batches.take(n).zipWithIndex.map { case (docs, b) =>
+        val scratch = new StreamingVocabJob(spark, s"$tmp/scratch-$n-$b", compactEvery = 64)
+        scratch.processBatch(docs, b.toLong)
+        b.toLong -> scratch.state.readDeltas().get
+      })
+    /** The vocabulary of a fresh job over the first `n` batches. */
+    def vocabOf(n: Int): Seq[org.apache.spark.sql.Row] = {
+      val fresh = new StreamingVocabJob(spark, s"$tmp/fresh-$n", compactEvery = 64)
+      batches.take(n).zipWithIndex.foreach { case (docs, b) => fresh.processBatch(docs, b.toLong) }
+      fresh.readVocab().collect().toSeq
+    }
 
-    // simulate the crash window inside compact(): the live dir has been
-    // displaced to its _pre_compact_<name> slot but the staged dir
-    // never published
-    val live = new java.io.File(s"$tmp/state/vocab")
+    // the crash window inside a compaction of builds before manifests:
+    // the live dir had been displaced to its _pre_compact_<name> slot but
+    // the staged dir never published
     val displaced = new java.io.File(s"$tmp/state/_pre_compact_vocab")
-    assert(live.renameTo(displaced), "test setup: displace the live dir")
-    assert(!live.exists())
-
-    // the next read must restore the displaced index — no data loss,
-    // no silently-empty vocabulary
+    preManifestLayout(displaced.toString, 2)
+    val live = new java.io.File(s"$tmp/state/vocab")
+    val job = new StreamingVocabJob(spark, s"$tmp/state", compactEvery = 64)
+    val before = vocabOf(2)
+    assert(before.nonEmpty)
+    // the next read must restore the displaced vocabulary — no data
+    // loss, no silently-empty vocabulary
     assert(job.readVocab().collect().toSeq === before,
       "recovery must restore the displaced vocabulary exactly")
     assert(live.exists() && !displaced.exists(), "restore must be by rename")
+    job.processBatch(batches(1), 1L)
+    assert(job.readVocab().collect().toSeq === before, "a replay of an adopted batch is skipped")
     // and the job keeps ingesting normally afterwards
-    job.processBatch(Seq((4L, "delta")).toDF("doc_id", "text"), 2L)
+    job.processBatch(batches(2), 2L)
     assert(job.readVocab().collect().map(_.getString(1)).contains("delta"))
+    assert(job.readVocab().collect().toSeq === vocabOf(3))
 
     // pre-r7 layouts displaced to the UNSUFFIXED `_pre_compact` slot: a
     // fresh job over such a state dir must restore it, not silently
     // reset the vocabulary to empty
-    val withDelta = job.readVocab().collect().toSeq
-    assert(live.renameTo(new java.io.File(s"$tmp/state/_pre_compact")),
-      "test setup: displace to the legacy slot")
-    val upgraded = new StreamingVocabJob(spark, s"$tmp/state", compactEvery = 64)
-    assert(upgraded.readVocab().collect().toSeq === withDelta,
+    preManifestLayout(s"$tmp/state2/_pre_compact", 3)
+    val upgraded = new StreamingVocabJob(spark, s"$tmp/state2", compactEvery = 64)
+    assert(upgraded.readVocab().collect().toSeq === vocabOf(3),
       "a legacy crash-window state dir must survive the upgrade")
   }
 
